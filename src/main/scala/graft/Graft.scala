@@ -2,6 +2,8 @@ package graft
 
 import java.time.Instant
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -17,7 +19,7 @@ import graft.streaming.{LogIngest, LogRegistry, Retention}
   * | StartLogging (FIFO → SQLite)      | `Graft(spark, dirs).startLogging(id)` |
   * | StopLogging (+ delete db)         | `stopLogging(id, deleteWhenStopped)` |
   * | ReadLogs since/until/tail         | `readLogs(id, since, until, tail)` |
-  * | ReadLogs follow=true              | `follow(id, since, emit)` |
+  * | ReadLogs follow=true              | `follow(id, since, until, after)(emit)` |
   * | cleanup_age / cleanup_max_lines   | `cleanup(age, maxLines)` |
   * | crash recovery (active_fetches)   | `replayState()` |
   *
@@ -89,12 +91,44 @@ final class Graft(
 
   // ---- follow mode (O9) ---------------------------------------------------
 
+  /** `docker logs --follow` past the lines a caller already has: the
+    * reference's cursor poll (`src/logger.rs:287-288,398-453`). Every
+    * `pollMs` it re-issues the request's own [[readLogs]] range (container,
+    * `since`, `until`; follow ignores tail) with `seq > cursor` added,
+    * hands each new line's seq and encoded LogEntry to `emit` in seq order,
+    * and advances the cursor to the last seq emitted. Blocks the calling
+    * thread until `idlePolls` polls in a row find nothing (the reference
+    * gives up after 3600 empty 1 s polls) or `emit` throws.
+    *
+    * `after` is the cursor's start: the seq of the last line the caller
+    * has already emitted, e.g. from its initial [[readLogs]].
+    */
   def follow(
       containerId: Option[String],
-      sinceNano: Option[Long],
-      emit: DataFrame => Unit,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    LogIngest.follow(spark, tableRoot, containerId, sinceNano, None, emit, trigger)
+      since: Option[String] = None,
+      until: Option[String] = None,
+      after: Long = Long.MinValue,
+      pollMs: Long = 1000L,
+      idlePolls: Int = 3600)(
+      emit: (Long, Array[Byte]) => Unit): Unit = {
+    var cursor = after
+    var idle = 0
+    while (idle < idlePolls) {
+      Thread.sleep(pollMs)
+      val before = cursor
+      frames(readLogs(containerId, since, until, follow = true).where(col("seq") > cursor))
+        .foreach { case (seq, message) => emit(seq, message); cursor = seq }
+      idle = if (cursor == before) idle + 1 else 0
+    }
+  }
+
+  /** (seq, encoded LogEntry) of each row of a [[readLogs]] result, in
+    * order, through `toLocalIterator` so a large range never materializes
+    * on the driver.
+    */
+  private[graft] def frames(df: DataFrame): Iterator[(Long, Array[Byte])] =
+    df.select(col("seq"), col("message")).toLocalIterator().asScala
+      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
 
   // ---- migration ----------------------------------------------------------
 

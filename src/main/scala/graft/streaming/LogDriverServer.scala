@@ -9,8 +9,6 @@ import java.nio.file.{Files, Path}
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.functions.col
-
 import graft.Graft
 import graft.functions.ProtoLogCodec
 
@@ -30,8 +28,9 @@ import graft.functions.ProtoLogCodec
   *  - `POST /LogDriver.ReadLogs`       → a stream of big-endian
   *    u32-length-prefixed protobuf LogEntry frames (`src/logger.rs:126`),
   *    honoring Since/Until (zero-time sentinels), Tail (<1 = all,
-  *    ignored under Follow) and Follow (1 s poll, idle give-up after
-  *    `followIdlePolls` empty polls — `src/logger.rs:287-288`).
+  *    ignored under Follow) and Follow ([[graft.Graft.follow]]'s cursor
+  *    poll every `followPollMs`, idle give-up after `followIdlePolls`
+  *    empty polls — `src/logger.rs:287-288`).
   *
   * Transport notes: one request per connection (`Connection: close`),
   * which every docker plugin client tolerates; responses stream chunked,
@@ -51,6 +50,8 @@ final class LogDriverServer(
   private val fifoToContainer = TrieMap.empty[String, (String, FifoPump)]
   @volatile private var channel: ServerSocketChannel = _
   @volatile private var running = false
+  // cap on a request's headers and on its body: plugin bodies are < 1 KiB
+  private val maxRequestBytes = 1 << 20
 
   def start(): Unit = synchronized {
     require(!running, "server already running")
@@ -85,7 +86,17 @@ final class LogDriverServer(
   // ---- HTTP/1.1 over the socket -------------------------------------------
 
   private def handle(conn: SocketChannel): Unit = {
-    val req = readRequest(conn)
+    // a malformed request gets a 400 and the connection closes; the
+    // handler thread must not die without a reply
+    val req =
+      try readRequest(conn)
+      catch {
+        // StackOverflowError: deeply nested JSON in MiniJson's recursive parse
+        case e @ (NonFatal(_) | _: StackOverflowError) =>
+          respond(conn, "400 Bad Request", "text/plain; charset=utf-8",
+            s"bad request: ${e.getMessage}".getBytes(UTF_8))
+          return
+      }
     if (req == null) return
     val (path, body) = req
     path match {
@@ -103,13 +114,18 @@ final class LogDriverServer(
     }
   }
 
-  /** Read one request; returns (path, parsed JSON body) or null on EOF. */
+  /** Read one request; returns (path, parsed JSON body), or null on EOF
+    * before the headers end. Throws on a malformed request line,
+    * Content-Length or JSON body, and on headers or a body over
+    * `maxRequestBytes`.
+    */
   private def readRequest(conn: SocketChannel): (String, Any) = {
     val head = new java.io.ByteArrayOutputStream()
     val one = ByteBuffer.allocate(1)
     // read byte-wise until CRLFCRLF (headers are tiny; body read in bulk)
     var seen = 0
     while (seen < 4) {
+      require(head.size() < maxRequestBytes, "headers too large")
       one.clear()
       if (conn.read(one) < 0) return null
       val b = one.get(0)
@@ -124,17 +140,19 @@ final class LogDriverServer(
       }
     }
     val lines = head.toString("ISO-8859-1").split("\r\n")
-    val path = lines(0).split(" ")(1)
+    val target = lines(0).split(" ")
+    require(target.length >= 2, "malformed request line")
     val len = lines.drop(1).collectFirst {
       case l if l.toLowerCase.startsWith("content-length:") =>
-        l.substring(15).trim.toInt
+        l.substring(15).trim.toIntOption.getOrElse(-1)
     }.getOrElse(0)
+    require(len >= 0 && len <= maxRequestBytes, "bad Content-Length")
     val body = ByteBuffer.allocate(len)
     while (body.hasRemaining)
       if (conn.read(body) < 0)
         throw new java.io.EOFException("truncated body")
     val text = new String(body.array(), UTF_8)
-    (path, if (text.trim.isEmpty) Map.empty[String, Any] else MiniJson.parse(text))
+    (target(1), if (text.trim.isEmpty) Map.empty[String, Any] else MiniJson.parse(text))
   }
 
   private def respond(conn: SocketChannel, status: String, ctype: String,
@@ -234,32 +252,14 @@ final class LogDriverServer(
     val head = "HTTP/1.1 200 OK\r\nContent-Type: application/octet-stream\r\n" +
       "Transfer-Encoding: chunked\r\nConnection: close\r\n\r\n"
     writeFully(conn, head.getBytes(UTF_8))
-    var lastSeq = Long.MinValue
-    def emit(df: org.apache.spark.sql.DataFrame): Long = {
-      var n = 0L
-      val it = df.select(col("seq"), col("message")).toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
-        lastSeq = row.getLong(0)
-        writeChunk(conn, ProtoLogCodec.frame(row.getAs[Array[Byte]](1)))
-        n += 1
-      }
-      n
-    }
+    def writeFrame(message: Array[Byte]): Unit =
+      writeChunk(conn, ProtoLogCodec.frame(message))
     try {
-      emit(df)
-      if (follow) {
-        // reference cadence: 1 s polls, give up after followIdlePolls
-        // empty ones (src/logger.rs:287-288)
-        var idle = 0
-        while (idle < followIdlePolls) {
-          Thread.sleep(followPollMs)
-          val more = graft.logs
-            .where(col("container_id") === containerId && col("seq") > lastSeq)
-            .orderBy(col("seq"))
-          if (emit(more) > 0) idle = 0 else idle += 1
-        }
-      }
+      var last = Long.MinValue
+      graft.frames(df).foreach { case (seq, message) => writeFrame(message); last = seq }
+      if (follow)
+        graft.follow(Some(containerId), since, until, last, followPollMs, followIdlePolls)(
+          (_, message) => writeFrame(message))
       writeFully(conn, "0\r\n\r\n".getBytes(UTF_8))
     } catch {
       case NonFatal(_) => // client hung up mid-stream: stop following
@@ -279,7 +279,8 @@ final class LogDriverServer(
   * (`src/logger.rs:76-133`) becomes this engine's micro-batch ingest.
   * Only COMPLETE frames are ever flushed (a partial tail stays buffered),
   * so every staged burst deframes cleanly; bursts cut at ~100 ms or
-  * 1 MiB, whichever first — the reference's batch cadence.
+  * 1 MiB, whichever first — the reference's batch cadence — and a FIFO
+  * that goes quiet still has its complete frames landed by the deadline.
   */
 private[streaming] final class FifoPump(fifo: java.nio.file.Path, stagingDir: java.nio.file.Path)
     extends Thread(s"fifo-pump-$fifo") {
@@ -290,27 +291,59 @@ private[streaming] final class FifoPump(fifo: java.nio.file.Path, stagingDir: ja
   private val flushNanos = 100L * 1000 * 1000
   private val maxBuf = 1 << 20
 
+  // burst state, shared by the read loop and the idle flusher
+  private val lock = new Object
+  private var acc = Array.emptyByteArray
+  private var burst = 0
+  private var lastFlush = System.nanoTime()
+  private var fresh = false // acc holds bytes read since the last flush
+  private var done = false
+
   override def run(): Unit = {
+    // the read below blocks while the FIFO is quiet; this thread lands what
+    // it leaves pending by the deadline (under load the read loop cuts)
+    val idle = new Thread(() => flushWhenIdle(), s"fifo-idle-flush-$fifo")
+    idle.setDaemon(true)
     try {
       in = Files.newInputStream(fifo)
       Files.createDirectories(stagingDir)
+      idle.start()
       val buf = new Array[Byte](64 * 1024)
-      var acc = Array.emptyByteArray
-      var burst = 0
-      var lastFlush = System.nanoTime()
       var n = 0
-      while (!closing && { n = in.read(buf); n >= 0 }) {
-        if (n > 0) acc = acc ++ java.util.Arrays.copyOf(buf, n)
-        if (acc.length >= maxBuf || System.nanoTime() - lastFlush >= flushNanos) {
-          acc = flushComplete(acc, burst) match {
-            case (rest, wrote) => if (wrote) burst += 1; lastFlush = System.nanoTime(); rest
-          }
-        }
+      while (!closing && { n = in.read(buf); n >= 0 }) lock.synchronized {
+        if (n > 0) { acc = acc ++ java.util.Arrays.copyOf(buf, n); fresh = true }
+        if (acc.length >= maxBuf || System.nanoTime() - lastFlush >= flushNanos) flush()
       }
-      flushComplete(acc, burst)
     } catch {
       case NonFatal(_) => // stream closed under us (close()) or fifo vanished
     }
+    lock.synchronized { done = true; lock.notifyAll() }
+    if (idle.isAlive) idle.join()
+    try lock.synchronized(flush()) catch { case NonFatal(_) => }
+  }
+
+  /** Until the read loop ends, flush fresh bytes once `flushNanos` have
+    * passed since the last flush.
+    */
+  private def flushWhenIdle(): Unit =
+    try lock.synchronized {
+      while (!done) {
+        val wait = lastFlush + flushNanos - System.nanoTime()
+        if (wait > 0) lock.wait(wait / 1000000 + 1)
+        else if (fresh) flush()
+        else lock.wait(flushNanos / 1000000)
+      }
+    } catch {
+      case NonFatal(_) => // staging dir gone: the read loop's next flush fails alike
+    }
+
+  /** Cut a burst from `acc`; call holding `lock`. */
+  private def flush(): Unit = {
+    acc = flushComplete(acc, burst) match {
+      case (rest, wrote) => if (wrote) burst += 1; rest
+    }
+    lastFlush = System.nanoTime()
+    fresh = false
   }
 
   /** Write the longest complete-frame prefix of `acc` as one burst file;

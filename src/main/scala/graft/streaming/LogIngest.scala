@@ -381,78 +381,4 @@ object LogIngest {
   /** Batch view of the ingested log table. */
   def table(spark: SparkSession, tableDir: String): DataFrame =
     spark.read.schema(logSchema).parquet(tableDir)
-
-  /** Follow-mode read (SURVEY §2.1 O9): an UNBOUNDED query over the same
-    * table — new micro-batches keep emitting as ingest appends. The 1 s
-    * default trigger mirrors the reference's poll cadence
-    * (`src/logger.rs:287`); its follow-ignores-tail rule is applied by
-    * [[graft.operators.LogOps.normalize]] before this is called.
-    *
-    * Idle give-up: the reference abandons a follower after 3600 empty 1 s
-    * polls (`src/logger.rs:287-288`) so an abandoned `docker logs -f`
-    * cannot hold resources forever. Here a daemon watchdog stops the
-    * streaming query once no data has been emitted for `idleGiveUp`
-    * (default the same 1 hour); pass None to follow forever.
-    */
-  def follow(
-      spark: SparkSession,
-      tableDir: String,
-      containerId: Option[String],
-      sinceNano: Option[Long],
-      untilNano: Option[Long],
-      emit: DataFrame => Unit,
-      trigger: Trigger = Trigger.ProcessingTime("1 second"),
-      idleGiveUp: Option[java.time.Duration] = Some(java.time.Duration.ofHours(1))): StreamingQuery = {
-    // A follow on a table with no committed partitions yet must fail
-    // LOUDLY: the streaming source fixes its partition layout at start, so
-    // an empty dir means container_id/date would never be partition-parsed
-    // and every emitted column silently mislabels (caught by
-    // FollowLatencyBench, r11). The reference has the same contract — a
-    // ReadLogs for a container whose SQLite db was never created is an
-    // error, not an empty stream (StartLogging creates the db first).
-    require(FsUtil.listDirs(spark, tableDir, "container_id=").nonEmpty,
-      s"follow($tableDir): no committed partitions yet — ingest at least " +
-        "one batch before attaching a follower")
-    // STREAMING file sources bind the user schema to (file columns ++
-    // partition columns) POSITIONALLY, unlike the batch reader's by-name
-    // reconciliation — a schema listing a partition column anywhere but
-    // LAST silently mislabels every column (container_id is first in
-    // logSchema; the follow path emitted `ts_nano` carrying the file's
-    // `source` strings — caught by FollowLatencyBench, r11). Feed the
-    // source partition-cols-last, then restore the public column order.
-    val partCols = Seq("container_id", "date")
-    val sourceSchema = org.apache.spark.sql.types.StructType(
-      logSchema.filterNot(f => partCols.contains(f.name)) ++
-        partCols.map(logSchema(_)))
-    var df = spark.readStream.schema(sourceSchema).parquet(tableDir)
-      .select(logSchema.fieldNames.map(col).toSeq: _*)
-    containerId.foreach(id => df = df.where(col("container_id") === id))
-    sinceNano.foreach(s => df = df.where(col("ts_nano") >= s))
-    untilNano.foreach(u => df = df.where(col("ts_nano") <= u))
-    val lastDataAt = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-    val q = df.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // foreachBatch only fires when the source has new files, so any
-        // invocation IS data arrival — reset the idle clock first
-        lastDataAt.set(System.nanoTime())
-        emit(batch.orderBy(col("seq")))
-      }
-      .start()
-    idleGiveUp.foreach { limit =>
-      val limitNanos = limit.toNanos
-      val watchdog = new Thread(() => {
-        try {
-          while (q.isActive &&
-                 System.nanoTime() - lastDataAt.get() < limitNanos)
-            Thread.sleep(math.min(math.max(limitNanos / 10 / 1000000L, 10L), 1000L))
-          if (q.isActive) q.stop()
-        } catch { case _: InterruptedException => () }
-      }, s"graft-follow-idle-${q.id}")
-      watchdog.setDaemon(true)
-      watchdog.start()
-    }
-    q
-  }
 }

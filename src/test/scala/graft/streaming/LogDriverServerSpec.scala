@@ -27,16 +27,21 @@ class LogDriverServerSpec extends SparkSpec {
 
   /** One-shot HTTP POST over the unix socket; returns the raw response. */
   private def post(sock: java.nio.file.Path, path: String, body: String): Array[Byte] = {
+    val payload = body.getBytes(UTF_8)
+    // docker's plugin client often omits content-type; the adapter must
+    // treat the body as JSON anyway (normalize_dockerjson, main.rs:17)
+    val head = s"POST $path HTTP/1.1\r\nHost: d\r\n" +
+      s"Content-Length: ${payload.length}\r\n\r\n"
+    raw(sock, head.getBytes(UTF_8) ++ payload)
+  }
+
+  /** Send `request` bytes as-is over the unix socket; returns the raw response. */
+  private def raw(sock: java.nio.file.Path, request: Array[Byte]): Array[Byte] = {
     val ch = SocketChannel.open(StandardProtocolFamily.UNIX)
     try {
       ch.connect(UnixDomainSocketAddress.of(sock))
-      val payload = body.getBytes(UTF_8)
-      // docker's plugin client often omits content-type; the adapter must
-      // treat the body as JSON anyway (normalize_dockerjson, main.rs:17)
-      val head = s"POST $path HTTP/1.1\r\nHost: d\r\n" +
-        s"Content-Length: ${payload.length}\r\n\r\n"
-      ch.write(ByteBuffer.wrap(head.getBytes(UTF_8)))
-      ch.write(ByteBuffer.wrap(payload))
+      val req = ByteBuffer.wrap(request)
+      while (req.hasRemaining) ch.write(req)
       val out = new java.io.ByteArrayOutputStream()
       val buf = ByteBuffer.allocate(64 * 1024)
       while (ch.read(buf) >= 0) {
@@ -84,6 +89,55 @@ class LogDriverServerSpec extends SparkSpec {
   private def jsonStr(response: Array[Byte]): String =
     new String(bodyOf(response), UTF_8)
 
+  private def isStream(response: Array[Byte]): Boolean =
+    new String(response, UTF_8).toLowerCase.contains("transfer-encoding: chunked")
+
+  private def burst(range: Range): Array[Byte] =
+    range.map(entryBytes).foldLeft(Array.emptyByteArray)(_ ++ _)
+
+  /** A recorded ReadLogsConf body (docker's zero-time sentinels = unset). */
+  private def readReq(follow: Boolean, since: String = "0001-01-01T00:00:00Z",
+      until: String = "0001-01-01T00:00:00Z", tail: Int = -1): String =
+    s"""{"Config": {"Follow": $follow, "Since": "$since",
+       |  "Tail": $tail, "Until": "$until"},
+       | "Info": {"Config": {}, "ContainerID": "c1"}}""".stripMargin
+
+  private def at(second: Int): String =
+    java.time.Instant.ofEpochSecond(0, t0 + second * 1000000000L).toString
+
+  /** StartLogging for c1 over `fifo` (recorded StartLoggingConf shape,
+    * docker.rs:52-57).
+    */
+  private def startC1(sock: java.nio.file.Path, fifo: java.nio.file.Path): Unit = {
+    val startReq =
+      s"""{"File": "$fifo", "Info": {"Config": {},
+         |  "ContainerID": "c1", "ContainerName": "/wire_test",
+         |  "DaemonName": "docker", "LogPath": ""}}""".stripMargin
+    assert(jsonStr(post(sock, "/LogDriver.StartLogging", startReq)) === """{"Err":""}""")
+  }
+
+  /** Wait (up to 30 s) until `n` lines of c1 are committed. */
+  private def awaitCommitted(root: String, g: Graft, n: Long): Unit = {
+    def committed(): Long =
+      if (!Files.exists(Paths.get(root, "logs"))) 0L else g.countLogs("c1")
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (committed() < n && System.nanoTime() < deadline)
+      Thread.sleep(200)
+    assert(committed() === n)
+  }
+
+  /** A follow ReadLogs in its own thread; the result holds its lines once
+    * the stream ends.
+    */
+  private def followInBackground(sock: java.nio.file.Path, req: String)
+      : (Thread, java.util.concurrent.atomic.AtomicReference[Seq[String]]) = {
+    val collector = new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
+    val reader = new Thread(() => collector.set(
+      decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", req)))))
+    reader.start()
+    (reader, collector)
+  }
+
   test("Activate / Capabilities / fallback speak the recorded shapes") {
     val root = Files.createTempDirectory("graft-wire0").toString
     val sock = Paths.get(root, "graft.sock")
@@ -108,50 +162,23 @@ class LogDriverServerSpec extends SparkSpec {
     try {
       // the "fifo" docker hands the driver — a framed protobuf stream
       val fifo = Paths.get(root, "c1.fifo")
-      Files.write(fifo, (0 until 5).map(entryBytes)
-        .foldLeft(Array.emptyByteArray)(_ ++ _))
-
-      // recorded StartLoggingConf shape (docker.rs:52-57)
-      val startReq =
-        s"""{"File": "$fifo", "Info": {"Config": {},
-           |  "ContainerID": "c1", "ContainerName": "/wire_test",
-           |  "DaemonName": "docker", "LogPath": ""}}""".stripMargin
-      assert(jsonStr(post(sock, "/LogDriver.StartLogging", startReq)) ===
-        """{"Err":""}""")
-
+      Files.write(fifo, burst(0 until 5))
+      startC1(sock, fifo)
       // pump lands the fifo into staging; the 100 ms ingest commits it
-      def committed(): Long =
-        if (!Files.exists(Paths.get(root, "logs"))) 0L
-        else g.countLogs("c1")
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (committed() < 5 && System.nanoTime() < deadline)
-        Thread.sleep(200)
-      assert(committed() === 5)
+      awaitCommitted(root, g, 5)
 
-      // recorded ReadLogsConf shape with docker's zero-time sentinels
-      val readReq =
-        """{"Config": {"Follow": false, "Since": "0001-01-01T00:00:00Z",
-          |  "Tail": -1, "Until": "0001-01-01T00:00:00Z"},
-          | "Info": {"Config": {}, "ContainerID": "c1"}}""".stripMargin
-      val lines = decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", readReq)))
+      val lines = decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", readReq(false))))
       assert(lines === (0 until 5).map(i => s"wire $i\n"))
 
       // tail applies when not following
-      val tailReq = readReq.replace("\"Tail\": -1", "\"Tail\": 2")
-      assert(decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", tailReq)))
+      assert(decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", readReq(false, tail = 2))))
         === Seq("wire 3\n", "wire 4\n"))
 
       // follow: a late burst staged while the stream is open must be
       // emitted before the idle give-up closes it
-      val followReq = readReq.replace("\"Follow\": false", "\"Follow\": true")
-      val collector = new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-      val reader = new Thread(() => collector.set(
-        decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", followReq)))))
-      reader.start()
+      val (reader, collector) = followInBackground(sock, readReq(true))
       Thread.sleep(400) // initial batch emitted, stream idling
-      val late = Paths.get(g.stagingDir("c1"))
-      Files.write(late.resolve("late.pblog"),
-        (5 until 8).map(entryBytes).foldLeft(Array.emptyByteArray)(_ ++ _))
+      Files.write(Paths.get(g.stagingDir("c1")).resolve("late.pblog"), burst(5 until 8))
       reader.join(30000)
       assert(!reader.isAlive, "follow stream must give up after idle polls")
       assert(collector.get() === (0 until 8).map(i => s"wire $i\n"))
@@ -164,6 +191,107 @@ class LogDriverServerSpec extends SparkSpec {
       server.stop()
       g.stopAll()
     }
+  }
+
+  test("follow honours Since/Until: only late lines inside the range stream") {
+    val root = Files.createTempDirectory("graft-wire3").toString
+    val sock = Paths.get(root, "graft.sock")
+    val g = Graft(spark, root)
+    val server = new LogDriverServer(g, sock, followPollMs = 200L, followIdlePolls = 15)
+    server.start()
+    try {
+      val fifo = Paths.get(root, "c1.fifo")
+      Files.write(fifo, burst(0 until 5))
+      startC1(sock, fifo)
+      awaitCommitted(root, g, 5)
+      // Since lies past every committed line, so the initial read is empty;
+      // the polls must still apply Since and Until, not replay history
+      val (reader, collector) =
+        followInBackground(sock, readReq(true, since = at(10), until = at(21)))
+      Thread.sleep(300)
+      Files.write(Paths.get(g.stagingDir("c1")).resolve("late.pblog"), burst(20 until 23))
+      reader.join(30000)
+      assert(!reader.isAlive, "follow stream must give up after idle polls")
+      assert(collector.get() === Seq("wire 20\n", "wire 21\n"))
+    } finally {
+      server.stop()
+      g.stopAll()
+    }
+  }
+
+  test("ReadLogs before the first commit answers Err, never a partial stream") {
+    val root = Files.createTempDirectory("graft-wire4").toString
+    val sock = Paths.get(root, "graft.sock")
+    val g = Graft(spark, root)
+    val server = new LogDriverServer(g, sock, followPollMs = 200L, followIdlePolls = 4)
+    server.start()
+    try {
+      val fifo = Paths.get(root, "c1.fifo")
+      Files.write(fifo, Array.emptyByteArray) // the container has logged nothing
+      startC1(sock, fifo)
+      for (follow <- Seq(false, true)) {
+        val response = post(sock, "/LogDriver.ReadLogs", readReq(follow))
+        assert(!isStream(response), s"follow=$follow")
+        assert(jsonStr(response).startsWith("""{"Err":"[graft] Could not read logs: """),
+          s"follow=$follow")
+      }
+    } finally {
+      server.stop()
+      g.stopAll()
+    }
+  }
+
+  test("an idle FIFO's complete frames commit while the writer stays open") {
+    val root = Files.createTempDirectory("graft-wire5").toString
+    val sock = Paths.get(root, "graft.sock")
+    val g = Graft(spark, root)
+    val server = new LogDriverServer(g, sock)
+    server.start()
+    val fifo = Paths.get(root, "c1.fifo")
+    assert(new ProcessBuilder("mkfifo", fifo.toString).start().waitFor() === 0)
+    try {
+      startC1(sock, fifo)
+      val writer = new java.io.FileOutputStream(fifo.toFile) // opens once the pump reads
+      try {
+        writer.write(burst(0 until 5))
+        writer.flush()
+        val deadline = System.nanoTime() + 2L * 1000 * 1000 * 1000
+        def read(): Seq[String] = {
+          val response = post(sock, "/LogDriver.ReadLogs", readReq(false))
+          if (isStream(response)) decodedLines(bodyOf(response)) else Nil
+        }
+        var lines = read()
+        while (lines.size < 5 && System.nanoTime() < deadline) {
+          Thread.sleep(100)
+          lines = read()
+        }
+        assert(lines === (0 until 5).map(i => s"wire $i\n"))
+      } finally writer.close()
+    } finally {
+      server.stop()
+      g.stopAll()
+    }
+  }
+
+  test("malformed requests get 400 and the server keeps serving") {
+    val root = Files.createTempDirectory("graft-wire6").toString
+    val sock = Paths.get(root, "graft.sock")
+    val server = new LogDriverServer(Graft(spark, root), sock)
+    server.start()
+    try {
+      val requests = Seq(
+        "NOSPACE\r\n\r\n",
+        "POST /Plugin.Activate HTTP/1.1\r\nContent-Length: abc\r\n\r\n",
+        "POST /LogDriver.ReadLogs HTTP/1.1\r\nContent-Length: -5\r\n\r\n",
+        "POST /LogDriver.ReadLogs HTTP/1.1\r\nContent-Length: 2147483647\r\n\r\n",
+        "POST /LogDriver.StartLogging HTTP/1.1\r\nContent-Length: 9\r\n\r\n{\"File\": ")
+      for (r <- requests) {
+        val response = new String(raw(sock, r.getBytes(UTF_8)), UTF_8)
+        assert(response.startsWith("HTTP/1.1 400 Bad Request\r\n"), r)
+      }
+      assert(jsonStr(post(sock, "/Plugin.Activate", "")) ===
+        """{"Implements":["LogDriver"]}""")
+    } finally server.stop()
   }
 
   test("StartLogging with an invalid option map returns the parse error") {

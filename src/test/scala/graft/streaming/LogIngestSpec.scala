@@ -70,17 +70,29 @@ class LogIngestSpec extends SparkSpec {
     assert(LogIngest.table(spark, table).count() === 80)
   }
 
+  /** [[graft.Graft.follow]] over the spec's staging/table/checkpoint dirs,
+    * run in its own thread (it blocks until the idle give-up); collects
+    * every emitted seq.
+    */
+  private def following(staging: String, table: String, ckpt: String,
+      since: Option[String], pollMs: Long, idlePolls: Int)
+      : (Thread, java.util.concurrent.ConcurrentLinkedQueue[Long]) = {
+    val g = new graft.Graft(spark, staging, table, ckpt)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val t = new Thread(() => g.follow(Some("c1"), since, None,
+      pollMs = pollMs, idlePolls = idlePolls)((seq, _) => seen.add(seq)))
+    t.start()
+    (t, seen)
+  }
+
   test("follow mode keeps emitting as new bursts land (src/logger.rs:287,442-451)") {
     val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
     writeBurst(staging, "c1", "b0", (0 until 10).map(entry(_, "c1")))
     LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow())
       .awaitTermination(60000)
 
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val fq = LogIngest.follow(spark, table, Some("c1"),
-      sinceNano = Some(t0 + 5 * 1000000000L), untilNano = None,
-      emit = b => b.collect().foreach(r => seen.add(r.getAs[Long]("seq"))),
-      trigger = Trigger.ProcessingTime("200 milliseconds"))
+    val since = java.time.Instant.ofEpochSecond(0, t0 + 5 * 1000000000L).toString
+    val (t, seen) = following(staging, table, ckpt, Some(since), 200L, 25)
     try {
       eventually(10000)(assert(seen.size() === 5)) // rows 5..9 pass the since filter
       // new burst arrives while following → emitted incrementally
@@ -88,20 +100,10 @@ class LogIngestSpec extends SparkSpec {
       LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow())
         .awaitTermination(60000)
       eventually(15000)(assert(seen.size() === 10))
-    } finally fq.stop()
-  }
-
-  test("follow on a never-ingested table fails loudly, not with mislabeled columns") {
-    // streaming file sources fix the partition layout at start: attaching
-    // to an empty dir would bind the schema positionally and silently
-    // mislabel every column (the FollowLatencyBench r11 finding) — the
-    // contract is reference-shaped instead: the db must exist first.
-    val empty = tmp() + "/logs"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(empty))
-    val e = intercept[IllegalArgumentException] {
-      LogIngest.follow(spark, empty, None, None, None, _ => ())
-    }
-    assert(e.getMessage.contains("no committed partitions"))
+      val seqs = seen.asScala.toSeq
+      assert(seqs === seqs.sorted && seqs.distinct === seqs) // in order, once each
+    } finally t.join(30000)
+    assert(!t.isAlive)
   }
 
   test("retention sweep rewrites partitions atomically; survivors match the pure query") {
@@ -294,17 +296,12 @@ class LogIngestSpec extends SparkSpec {
     writeBurst(staging, "c1", "b0", (0 until 5).map(entry(_, "c1")))
     LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow())
       .awaitTermination(60000)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val fq = LogIngest.follow(spark, table, Some("c1"), None, None,
-      emit = b => b.collect().foreach(r => seen.add(r.getAs[Long]("seq"))),
-      trigger = Trigger.ProcessingTime("100 milliseconds"),
-      idleGiveUp = Some(java.time.Duration.ofMillis(1500)))
-    try {
-      eventually(10000)(assert(seen.size() === 5)) // initial data emitted
-      // then nothing arrives → the watchdog stops the query on its own
-      eventually(15000)(assert(!fq.isActive))
-      assert(seen.size() === 5) // nothing emitted after the stop
-    } finally if (fq.isActive) fq.stop()
+    val (t, seen) = following(staging, table, ckpt, None, 100L, 15)
+    eventually(10000)(assert(seen.size() === 5)) // initial data emitted
+    // then nothing arrives → 15 empty polls end the follow on its own
+    t.join(15000)
+    assert(!t.isAlive)
+    assert(seen.size() === 5) // nothing emitted after the initial data
   }
 
   test("rate listener records per-batch and lifetime lines/s (logger.rs:187-196)") {
