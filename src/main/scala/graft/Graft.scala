@@ -67,11 +67,14 @@ final class Graft(
 
   // ---- reads (O4-O8) ------------------------------------------------------
 
-  /** The log table as a DataFrame (full analytics surface applies). */
+  /** The log table as a DataFrame (full analytics surface applies), with
+    * every row's `message` frame served ([[LogIngest.table]]).
+    */
   def logs: DataFrame = LogIngest.table(spark, tableRoot)
 
   /** `docker logs --since --until --tail` semantics, including the zero-time
-    * sentinel, tail<1, and follow-ignores-tail rules.
+    * sentinel, tail<1, and follow-ignores-tail rules. Frames are rebuilt
+    * after the range and tail are applied, so only returned rows pay.
     */
   def readLogs(
       containerId: Option[String],
@@ -82,8 +85,9 @@ final class Graft(
     val req = LogOps.normalize(containerId, since, until, tail, follow)
     // The facade KNOWS the ingest layout (LogIngest partitions by
     // container_id/date), so it opts in to derived date-partition pruning.
-    LogOps.readRange(logs, "container_id", "seq", "ts_nano", req,
-      datePartCol = Some("date"))
+    LogIngest.withMessages(
+      LogOps.readRange(LogIngest.storedTable(spark, tableRoot),
+        "container_id", "seq", "ts_nano", req, datePartCol = Some("date")))
   }
 
   def countLogs(containerId: String): Long =

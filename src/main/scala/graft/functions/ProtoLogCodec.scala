@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Codec for the Docker log-driver protobuf `LogEntry` frame — the wire
   * format the reference ingests (logsqlite `src/entry.proto:5-17`,
@@ -50,10 +51,36 @@ object ProtoLogCodec {
     result
   }
 
-  private def writeVarint(out: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7FL) != 0) { out.write(((v & 0x7F) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
+  private def varintSize(v: Long): Int = {
+    var n = 1
+    var rest = v >>> 7
+    while (rest != 0) { n += 1; rest >>>= 7 }
+    n
+  }
+
+  /** Bytes of a length-delimited field of a field number below 16 (one
+    * tag byte, the length varint, the payload).
+    */
+  private def bytesFieldSize(len: Int): Int = 1 + varintSize(len.toLong) + len
+
+  /** Writer into an array sized exactly for the message, so encoding
+    * makes one allocation and no copy.
+    */
+  private final class Out(size: Int) {
+    val buf = new Array[Byte](size)
+    private var pos = 0
+    def varint(v0: Long): Unit = {
+      var v = v0
+      while ((v & ~0x7FL) != 0) { buf(pos) = ((v & 0x7F) | 0x80).toByte; pos += 1; v >>>= 7 }
+      buf(pos) = v.toByte
+      pos += 1
+    }
+    def tag(field: Int, wire: Int): Unit = varint((field.toLong << 3) | wire)
+    def bytesField(field: Int, b: Array[Byte]): Unit = {
+      tag(field, 2); varint(b.length.toLong)
+      System.arraycopy(b, 0, buf, pos, b.length)
+      pos += b.length
+    }
   }
 
   private def readBytes(buf: ByteBuffer): Array[Byte] = {
@@ -111,28 +138,32 @@ object ProtoLogCodec {
   }
 
   def encode(e: LogEntry): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(e.line.length + 32)
-    def tag(field: Int, wire: Int): Unit = writeVarint(out, (field.toLong << 3) | wire)
-    def bytesField(field: Int, b: Array[Byte]): Unit = {
-      tag(field, 2); writeVarint(out, b.length.toLong); out.write(b)
-    }
-    if (e.source.nonEmpty) bytesField(1, e.source.getBytes("UTF-8"))
-    if (e.timeNano != 0) { tag(2, 0); writeVarint(out, e.timeNano) }
-    if (e.line.nonEmpty) bytesField(3, e.line)
-    if (e.partial) { tag(4, 0); writeVarint(out, 1) }
-    e.partialMeta.foreach { m =>
-      val inner = new java.io.ByteArrayOutputStream(m.id.length + 16)
-      def itag(field: Int, wire: Int): Unit = writeVarint(inner, (field.toLong << 3) | wire)
-      if (m.last) { itag(1, 0); writeVarint(inner, 1) }
-      if (m.id.nonEmpty) {
-        val idb = m.id.getBytes("UTF-8")
-        itag(2, 2); writeVarint(inner, idb.length.toLong)
-        inner.write(idb)
-      }
-      if (m.ordinal != 0) { itag(3, 0); writeVarint(inner, m.ordinal.toLong) }
-      bytesField(5, inner.toByteArray)
-    }
-    out.toByteArray
+    val source = e.source.getBytes(UTF_8)
+    val meta = e.partialMeta.map(encodeMeta)
+    val out = new Out(
+      (if (source.nonEmpty) bytesFieldSize(source.length) else 0) +
+      (if (e.timeNano != 0) 1 + varintSize(e.timeNano) else 0) +
+      (if (e.line.nonEmpty) bytesFieldSize(e.line.length) else 0) +
+      (if (e.partial) 2 else 0) +
+      meta.fold(0)(m => bytesFieldSize(m.length)))
+    if (source.nonEmpty) out.bytesField(1, source)
+    if (e.timeNano != 0) { out.tag(2, 0); out.varint(e.timeNano) }
+    if (e.line.nonEmpty) out.bytesField(3, e.line)
+    if (e.partial) { out.tag(4, 0); out.varint(1) }
+    meta.foreach(out.bytesField(5, _))
+    out.buf
+  }
+
+  private def encodeMeta(m: PartialMeta): Array[Byte] = {
+    val id = m.id.getBytes(UTF_8)
+    val out = new Out(
+      (if (m.last) 2 else 0) +
+      (if (id.nonEmpty) bytesFieldSize(id.length) else 0) +
+      (if (m.ordinal != 0) 1 + varintSize(m.ordinal.toLong) else 0))
+    if (m.last) { out.tag(1, 0); out.varint(1) }
+    if (id.nonEmpty) out.bytesField(2, id)
+    if (m.ordinal != 0) { out.tag(3, 0); out.varint(m.ordinal.toLong) }
+    out.buf
   }
 
   // ---- framing (u32 big-endian length prefix, src/logger.rs:90-104) ------

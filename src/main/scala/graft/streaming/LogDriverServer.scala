@@ -10,7 +10,7 @@ import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
 import graft.Graft
-import graft.functions.ProtoLogCodec
+import graft.functions.{LogConf, ProtoLogCodec}
 
 /** The reference's docker log-driver plugin wire protocol — HTTP/1.1 over
   * a unix socket (logsqlite `src/main.rs:97-110`) — served on top of the
@@ -24,7 +24,10 @@ import graft.functions.ProtoLogCodec
   *    (`src/docker.rs:59-84`); bad options → `{"Err": msg}`.
   *  - `POST /LogDriver.StopLogging`    → resolved by FIFO path, the
   *    reference's keying (`src/docker.rs:86-109`; the fifo→container map
-  *    is the adapter's, as it is the StateHandler's there).
+  *    is the adapter's, as it is the StateHandler's there). Honours the
+  *    container's `delete_when_stopped` (default true): when false, the
+  *    FIFO's last lines are committed before the ingest stops, and data
+  *    and checkpoint stay for a later StartLogging.
   *  - `POST /LogDriver.ReadLogs`       → a stream of big-endian
   *    u32-length-prefixed protobuf LogEntry frames (`src/logger.rs:126`),
   *    honoring Since/Until (zero-time sentinels), Tail (<1 = all,
@@ -45,9 +48,9 @@ final class LogDriverServer(
     followPollMs: Long = 1000L,
     followIdlePolls: Int = 3600) {
 
-  // fifo path → (container id, pump), exactly the reference StateHandler's
-  // keying (it also resolves StopLogging by fifo path)
-  private val fifoToContainer = TrieMap.empty[String, (String, FifoPump)]
+  // fifo path → the container logging through it, exactly the reference
+  // StateHandler's keying (it also resolves StopLogging by fifo path)
+  private val fifoToContainer = TrieMap.empty[String, LogDriverServer.Logging]
   @volatile private var channel: ServerSocketChannel = _
   @volatile private var running = false
   // cap on a request's headers and on its body: plugin bodies are < 1 KiB
@@ -204,7 +207,10 @@ final class LogDriverServer(
         val pump = new FifoPump(java.nio.file.Paths.get(fifo),
           java.nio.file.Paths.get(graft.stagingDir(containerId)))
         pump.start()
-        fifoToContainer.put(fifo, (containerId, pump))
+        // startLoggingWithOptions accepted these options: this parse succeeds
+        val deleteWhenStopped = LogConf.fromOptions(options).forall(_.deleteWhenStopped)
+        fifoToContainer.put(fifo,
+          LogDriverServer.Logging(containerId, pump, deleteWhenStopped))
         respondJson(conn, """{"Err":""}""")
     }
   }
@@ -212,9 +218,9 @@ final class LogDriverServer(
   private def stopLogging(conn: SocketChannel, body: Any): Unit = {
     val fifo = str(obj(body).getOrElse("File", ""))
     fifoToContainer.remove(fifo) match {
-      case Some((containerId, pump)) =>
-        pump.close() // drain + flush the fifo's tail before the last batch
-        graft.stopLogging(containerId)
+      case Some(l) =>
+        l.pump.close() // drain + flush the fifo's tail before the last batch
+        graft.stopLogging(l.containerId, l.deleteWhenStopped)
       case None => // unknown fifo: the reference also answers Err:"" (no-op)
     }
     respondJson(conn, """{"Err":""}""")
@@ -273,6 +279,14 @@ final class LogDriverServer(
   }
 }
 
+object LogDriverServer {
+  /** One StartLogging: the container, its FIFO's pump, and its parsed
+    * `delete_when_stopped` option.
+    */
+  private final case class Logging(
+      containerId: String, pump: FifoPump, deleteWhenStopped: Boolean)
+}
+
 /** Reads the docker FIFO the daemon hands StartLogging and lands its
   * framed protobuf stream as burst files in the container's staging
   * directory — the hand-off point where the reference's in-process reader
@@ -281,6 +295,10 @@ final class LogDriverServer(
   * so every staged burst deframes cleanly; bursts cut at ~100 ms or
   * 1 MiB, whichever first — the reference's batch cadence — and a FIFO
   * that goes quiet still has its complete frames landed by the deadline.
+  * Burst files are named `pump-<lifetime>-<burst>.pblog`: a pump started
+  * on a container whose ingest checkpoint survived (a StartLogging after
+  * a StopLogging that kept the data, or a replay) must not reuse a path
+  * the checkpointed file source has already seen, or it would skip it.
   */
 private[streaming] final class FifoPump(fifo: java.nio.file.Path, stagingDir: java.nio.file.Path)
     extends Thread(s"fifo-pump-$fifo") {
@@ -293,6 +311,7 @@ private[streaming] final class FifoPump(fifo: java.nio.file.Path, stagingDir: ja
 
   // burst state, shared by the read loop and the idle flusher
   private val lock = new Object
+  private val lifetime = FifoPump.nextLifetime()
   private var acc = Array.emptyByteArray
   private var burst = 0
   private var lastFlush = System.nanoTime()
@@ -362,10 +381,10 @@ private[streaming] final class FifoPump(fifo: java.nio.file.Path, stagingDir: ja
   private def writeOut(acc: Array[Byte], end: Int, burst: Int): (Array[Byte], Boolean) = {
     if (end == 0) (acc, false)
     else {
-      val tmp = stagingDir.resolve(s"pump-$burst.tmp")
+      val tmp = stagingDir.resolve(s"pump-$lifetime-$burst.tmp")
       Files.write(tmp, java.util.Arrays.copyOf(acc, end))
       // rename so the binaryFile source never sees a half-written burst
-      Files.move(tmp, stagingDir.resolve(f"pump-$burst%06d.pblog"),
+      Files.move(tmp, stagingDir.resolve(f"pump-$lifetime-$burst%06d.pblog"),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       (java.util.Arrays.copyOfRange(acc, end, acc.length), true)
     }
@@ -377,6 +396,16 @@ private[streaming] final class FifoPump(fifo: java.nio.file.Path, stagingDir: ja
     if (s != null) try s.close() catch { case NonFatal(_) => }
     join(5000)
   }
+}
+
+private[streaming] object FifoPump {
+  private val lastLifetime = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A token no earlier pump has used: the start time in ms, bumped past
+    * the last token this process handed out (two pumps in one ms).
+    */
+  private def nextLifetime(): Long =
+    lastLifetime.updateAndGet(last => math.max(last + 1, System.currentTimeMillis()))
 }
 
 /** Minimal JSON reader for the plugin protocol's small request bodies

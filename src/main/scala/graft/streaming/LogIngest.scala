@@ -1,11 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.ProtoLogCodec
+import graft.functions.ProtoLogCodec.{LogEntry, PartialMeta}
 
 /** Structured-Streaming ingest of the reference's log stream (SURVEY.md §2.1
   * O1/O2/O3), Spark-first.
@@ -22,6 +28,12 @@ import graft.functions.ProtoLogCodec
   *       per partition) → typed columns + verbatim re-encoded frame
   *     → writeStream parquet, partitionBy(container_id), micro-batch
   *       trigger 100 ms (the reference's burst timeout, `src/config.rs:177`)
+  *
+  * Each line is stored once, like the reference's `message BLOB`
+  * (`src/logger.rs:146-147`): the write step ([[commitBatch]]) keeps
+  * `message` only where [[frameOf]] cannot rebuild it from the columns
+  * (in practice, a line that was not valid UTF-8), and readers
+  * ([[table]], [[withMessages]]) serve the rebuilt frame everywhere else.
   *
   * The micro-batch epoch IS the reference's transaction: atomic commit of
   * the batch's files + checkpointed source offsets replace BEGIN/END and
@@ -52,6 +64,8 @@ object LogIngest {
     StructField("partial_id", StringType, nullable = true),
     StructField("partial_last", BooleanType, nullable = true),
     StructField("partial_ordinal", IntegerType, nullable = true),
+    // the encoded LogEntry, stored only where frameOf doesn't rebuild it
+    // from the columns; readers get the rebuilt frame (withMessages)
     StructField("message", BinaryType, nullable = true),
     // second-level partition key: the UTC day of ts_nano (timezone-free by
     // construction — a pure function of the int64, not of any session tz).
@@ -82,7 +96,8 @@ object LogIngest {
     * Reference semantics preserved: '\n' appended to every line before
     * storage, and `message` is the verbatim RE-ENCODED frame of the
     * newline-appended entry (`src/logger.rs:122-130`) so the read path can
-    * return byte-identical frames.
+    * return byte-identical frames. The write step drops it again wherever
+    * [[frameOf]] over the row's columns gives the same bytes.
     */
   def decodeBurst(
       containerId: String,
@@ -121,6 +136,70 @@ object LogIngest {
       }
     }
   }
+
+  /** The encoded `LogEntry` a log-table row describes: `ProtoLogCodec
+    * .encode` of its source, ts_nano, line (the `line` column's UTF-8
+    * bytes), partial flag and partial metadata (present iff any of the
+    * three `partial_*` columns is set).
+    * Over a [[decodeBurst]] row it equals the row's `message` unless the
+    * line's bytes were not valid UTF-8 (the codec decodes `source` and the
+    * partial id to strings before the frame is encoded, so those always
+    * rebuild). The write rule and the read path both call it, so a row
+    * stored without `message` is served exactly the frame it was decoded
+    * from.
+    */
+  def frameOf(
+      source: String,
+      ts_nano: Long,
+      line: Array[Byte],
+      partial: Boolean,
+      partial_id: String,
+      partial_last: java.lang.Boolean,
+      partial_ordinal: java.lang.Integer): Array[Byte] =
+    ProtoLogCodec.encode(LogEntry(
+      source = if (source == null) "" else source,
+      timeNano = ts_nano,
+      line = if (line == null) Array.emptyByteArray else line,
+      partial = partial,
+      partialMeta =
+        if (partial_id == null && partial_last == null && partial_ordinal == null) None
+        else Some(PartialMeta(
+          last = java.lang.Boolean.TRUE.equals(partial_last),
+          id = if (partial_id == null) "" else partial_id,
+          ordinal = if (partial_ordinal == null) 0 else partial_ordinal.intValue))))
+
+  /** [[frameOf]] over the expressions of its seven arguments, in order.
+    * A plain expression rather than a typed UDF: a UDF's input encoders
+    * are resolved on every analysis, which each read, follow poll and
+    * micro-batch commit would pay.
+    */
+  private final case class FrameOf(children: IndexedSeq[Expression])
+      extends Expression with CodegenFallback {
+    override def nullable: Boolean = false
+    override def dataType: DataType = BinaryType
+    override def eval(row: InternalRow): Any = {
+      def arg(i: Int): Any = children(i).eval(row)
+      def str(i: Int): String = { val v = arg(i); if (v == null) null else v.toString }
+      val line = arg(2).asInstanceOf[UTF8String]
+      frameOf(str(0), arg(1).asInstanceOf[Long], if (line == null) null else line.getBytes,
+        arg(3).asInstanceOf[Boolean], str(4), arg(5).asInstanceOf[java.lang.Boolean],
+        arg(6).asInstanceOf[java.lang.Integer])
+    }
+    override protected def withNewChildrenInternal(
+        newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
+  }
+
+  /** [[frameOf]] over a log-table DataFrame's columns. */
+  private def frameColumn: Column =
+    ColumnBridge.column(FrameOf(IndexedSeq("source", "ts_nano", "line", "partial",
+      "partial_id", "partial_last", "partial_ordinal").map(c => ColumnBridge.expression(col(c)))))
+
+  /** `df` with every row's `message` served: the stored frame where the
+    * write kept one, else the frame [[frameOf]] rebuilds. Apply it after
+    * filtering and limiting, so only the rows returned pay for it.
+    */
+  def withMessages(df: DataFrame): DataFrame =
+    df.withColumn("message", coalesce(col("message"), frameColumn))
 
   /** Streaming decode: binaryFile source over `stagingDir/<container>/...`
     * → typed log rows. Pure per-file work inside `flatMap` — no shuffle.
@@ -340,7 +419,9 @@ object LogIngest {
   }
 
   /** Step 3 of the protocol for the LOG table: partitioned+sorted staging
-    * write, destinations under `container_id=/date=` dirs.
+    * write, destinations under `container_id=/date=` dirs. `message` is
+    * written only where [[frameOf]] does not rebuild it, so each line is
+    * stored once.
     */
   private def stagePartitioned(
       batch: DataFrame,
@@ -350,6 +431,10 @@ object LogIngest {
       writeSaltBuckets: Int,
       namespace: String): Seq[(org.apache.hadoop.fs.Path, String)] = {
     val spark = batch.sparkSession
+    // null where frameOf rebuilds it (and where it is null already),
+    // before the shuffle, so the shuffle carries no second copy either
+    val compact = batch.withColumn("message",
+      when(col("message") =!= frameColumn, col("message")))
     // co-locate each container's rows before the partitioned write:
     // without this every decode task writes a file into every partition
     // dir (tasks × containers small files per batch); with it each
@@ -358,14 +443,14 @@ object LogIngest {
     // ts_nano stay tight (the reference's idx_ts analog, src/logger.rs:147).
     val parted =
       if (writeSaltBuckets <= 1)
-        batch.repartition(col("container_id"))
+        compact.repartition(col("container_id"))
       else
         // explicit partition count: AQE would otherwise coalesce a
         // small salted shuffle back into one task, undoing the salt
         // hash(seq), not raw seq % salt: regular timestamp spacing can
         // make every seq congruent mod salt (1 s ticks are ≡ 0 mod 8)
-        batch.repartition(
-          batch.sparkSession.sessionState.conf.numShufflePartitions,
+        compact.repartition(
+          spark.sessionState.conf.numShufflePartitions,
           col("container_id"), pmod(hash(col("seq")), lit(writeSaltBuckets)))
     parted
       .sortWithinPartitions("container_id", "date", "ts_nano")
@@ -378,7 +463,15 @@ object LogIngest {
       s"$tableDir/${cDir.getName}/${dDir.getName}/b$namespace-$batchId-${file.getName}")
   }
 
-  /** Batch view of the ingested log table. */
-  def table(spark: SparkSession, tableDir: String): DataFrame =
+  /** The log table as stored: `message` is null wherever [[frameOf]]
+    * rebuilds it. Retention reads and rewrites this form unchanged.
+    */
+  def storedTable(spark: SparkSession, tableDir: String): DataFrame =
     spark.read.schema(logSchema).parquet(tableDir)
+
+  /** Batch view of the ingested log table, every row's `message` served
+    * ([[withMessages]]).
+    */
+  def table(spark: SparkSession, tableDir: String): DataFrame =
+    withMessages(storedTable(spark, tableDir))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
 /** Active-stream registry (SURVEY.md §2.1 O14–O16): the Spark analog of the
   * reference's worker pool + `active_fetches` crash-recovery table
@@ -54,7 +54,14 @@ final class LogRegistry(
     }
 
   def stopLogging(containerId: String, deleteWhenStopped: Boolean = true): Unit = {
-    active.remove(containerId).foreach(_._1.stop())
+    active.remove(containerId).foreach { case (q, _) =>
+      // kept data includes what is already staged, e.g. the FIFO tail the
+      // pump flushes on StopLogging; a failed query keeps it staged and
+      // checkpointed for the next start instead
+      if (!deleteWhenStopped)
+        try q.processAllAvailable() catch { case _: StreamingQueryException => }
+      q.stop()
+    }
     if (deleteWhenStopped) {
       // reference semantics: drop the container's data AND its recovery
       // state (src/statehandler.rs:167-183) — keeping the checkpoint would
@@ -82,7 +89,10 @@ final class LogRegistry(
 
   def activeContainers: Set[String] = active.keySet.toSet
 
-  def stopAll(): Unit = active.keys.foreach(stopLogging(_, deleteWhenStopped = false))
+  /** Stop every ingest query, keeping data and checkpoints; bursts staged
+    * but not yet committed are ingested by the next start.
+    */
+  def stopAll(): Unit = active.keys.foreach(id => active.remove(id).foreach(_._1.stop()))
 
   /** Stop every active ingest query, run `f`, restart them with their
     * original triggers. Retention's rewrite-and-swap must not race a

@@ -28,6 +28,9 @@ import graft.operators.LogOps
   *  - only the BOUNDARY date (where the cutoff falls mid-partition) is
   *    rewritten: survivors to a shadow dir, then an atomic swap.
   *
+  * Both read and rewrite the table as stored ([[LogIngest.storedTable]]):
+  * a row written without `message` stays without it.
+  *
   * One Spark job computes per-(container, date) stats (count, min/max
   * ts_nano) for the entire sweep; every drop/rewrite decision is made
   * driver-side from that table. Rewrites then run CONCURRENTLY (they are
@@ -79,7 +82,7 @@ object Retention {
     // ONE action for the whole sweep: per-(container, date) row count and
     // ts bounds. Small result (containers × retained dates), collected to
     // the driver where every drop/rewrite decision is pure arithmetic.
-    val stats = LogIngest.table(spark, tableDir)
+    val stats = LogIngest.storedTable(spark, tableDir)
       .groupBy(col("container_id"), col("date"))
       .agg(count(lit(1)).as("cnt"), min(col("ts_nano")).as("min_ts"),
            max(col("ts_nano")).as("max_ts"))
@@ -206,7 +209,7 @@ object Retention {
 
   private def datePartition(
       spark: SparkSession, tableDir: String, container: String, date: LocalDate): DataFrame =
-    LogIngest.table(spark, tableDir)
+    LogIngest.storedTable(spark, tableDir)
       .where(col("container_id") === container &&
              col("date") === lit(java.sql.Date.valueOf(date)))
 

@@ -11,15 +11,18 @@ import graft.streaming.LogIngest
 
 /** Ingest throughput: N framed LogEntry lines across C containers →
   * partitioned parquet via the streaming path. Prints lines/s (the
-  * reference's self-metric, logsqlite src/logger.rs:187-196).
+  * reference's self-metric, logsqlite src/logger.rs:187-196) and the
+  * table's parquet bytes per staged framed byte. Runs local[<cores>] with
+  * one shuffle partition per core.
   * Usage: sbt "runMain graft.tools.IngestBench [lines] [containers]"
   */
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val totalLines = args.headOption.map(_.toInt).getOrElse(1000000)
     val containers = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cores = Runtime.getRuntime.availableProcessors
+    val spark = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -53,7 +56,14 @@ object IngestBench {
       .awaitTermination(600000)
     val dt = (System.nanoTime() - t0) / 1e9
     val n = LogIngest.table(spark, table).count()
-    println(f"[ingest-bench] ingested $n lines in $dt%.2f s = ${n / dt}%.0f lines/s")
+    def bytes(dir: String, suffix: String): Long = {
+      val files = Files.walk(Paths.get(dir))
+      try files.filter(_.toString.endsWith(suffix)).mapToLong(Files.size(_)).sum
+      finally files.close()
+    }
+    val ratio = bytes(table, ".parquet").toDouble / bytes(staging, ".pblog")
+    println(f"[ingest-bench] ingested $n lines in $dt%.2f s = ${n / dt}%.0f lines/s, " +
+      f"$ratio%.4f parquet bytes per staged framed byte")
     spark.stop()
   }
 }

@@ -40,6 +40,21 @@ class ProtoLogCodecSpec extends AnyFunSuite with graft.PropSpec {
     }
   }
 
+  test("encode writes the proto3 wire bytes: defaults omitted, int32 sign-extended") {
+    def bytes(xs: Int*): Seq[Byte] = xs.map(_.toByte)
+    assert(encode(LogEntry("stdout", 300L, "hi".getBytes, partial = true,
+      Some(PartialMeta(last = true, "p", 2)))).toSeq === bytes(
+      0x0A, 6, 's', 't', 'd', 'o', 'u', 't', // source
+      0x10, 0xAC, 0x02,                      // time_nano = 300
+      0x1A, 2, 'h', 'i',                     // line
+      0x20, 1,                               // partial
+      0x2A, 7, 0x08, 1, 0x12, 1, 'p', 0x18, 2)) // {last, id, ordinal}
+    assert(encode(LogEntry("", 0L, Array.emptyByteArray, partial = false, None)).isEmpty)
+    assert(encode(LogEntry("", 0L, Array.emptyByteArray, partial = false,
+      Some(PartialMeta(last = false, "", -1)))).toSeq ===
+      bytes(0x2A, 11, 0x18) ++ Seq.fill(9)(0xFF.toByte) ++ bytes(0x01))
+  }
+
   test("frame/deframe round-trips a concatenated stream") {
     forSamples(Gen.listOfN(5, genEntry), n = 40) { entries =>
       val stream = entries.map(e => frame(encode(e))).foldLeft(Array.emptyByteArray)(_ ++ _)

@@ -106,11 +106,12 @@ class LogDriverServerSpec extends SparkSpec {
     java.time.Instant.ofEpochSecond(0, t0 + second * 1000000000L).toString
 
   /** StartLogging for c1 over `fifo` (recorded StartLoggingConf shape,
-    * docker.rs:52-57).
+    * docker.rs:52-57) with the per-container option map `config`.
     */
-  private def startC1(sock: java.nio.file.Path, fifo: java.nio.file.Path): Unit = {
+  private def startC1(sock: java.nio.file.Path, fifo: java.nio.file.Path,
+      config: String = "{}"): Unit = {
     val startReq =
-      s"""{"File": "$fifo", "Info": {"Config": {},
+      s"""{"File": "$fifo", "Info": {"Config": $config,
          |  "ContainerID": "c1", "ContainerName": "/wire_test",
          |  "DaemonName": "docker", "LogPath": ""}}""".stripMargin
     assert(jsonStr(post(sock, "/LogDriver.StartLogging", startReq)) === """{"Err":""}""")
@@ -292,6 +293,78 @@ class LogDriverServerSpec extends SparkSpec {
       assert(jsonStr(post(sock, "/Plugin.Activate", "")) ===
         """{"Implements":["LogDriver"]}""")
     } finally server.stop()
+  }
+
+  test("a pump restarted on a kept checkpoint lands every line once, in order") {
+    val root = Files.createTempDirectory("graft-wire7").toString
+    val g = Graft(spark, root)
+    val staging = Paths.get(g.stagingDir("c1"))
+    Files.createDirectories(staging)
+    // a regular file stands in for the FIFO: the pump reads it to EOF,
+    // stages it as one burst and ends
+    def pump(name: String, lines: Range): Unit = {
+      val fifo = Paths.get(root, name)
+      Files.write(fifo, burst(lines))
+      val p = new FifoPump(fifo, staging)
+      p.start()
+      p.join(30000)
+      assert(!p.isAlive)
+    }
+    try {
+      g.startLogging("c1")
+      pump("a.fifo", 0 until 5)
+      awaitCommitted(root, g, 5)
+      g.stopLogging("c1", deleteWhenStopped = false) // data + checkpoint stay
+      g.startLogging("c1")
+      // the new pump's first burst must not reuse a staged path the
+      // checkpointed source has already seen
+      pump("b.fifo", 5 until 10)
+      awaitCommitted(root, g, 10)
+      val lines = g.frames(g.readLogs(Some("c1")))
+        .map(f => new String(ProtoLogCodec.decode(f._2).line, UTF_8)).toSeq
+      assert(lines === (0 until 10).map(i => s"wire $i\n"))
+    } finally g.stopAll()
+  }
+
+  test("delete_when_stopped=false keeps the container's lines across StopLogging") {
+    val root = Files.createTempDirectory("graft-wire8").toString
+    val sock = Paths.get(root, "graft.sock")
+    val g = Graft(spark, root)
+    val server = new LogDriverServer(g, sock)
+    server.start()
+    val keep = """{"delete_when_stopped": "false"}"""
+    def stop(fifo: java.nio.file.Path): Unit =
+      assert(jsonStr(post(sock, "/LogDriver.StopLogging",
+        s"""{"File": "$fifo"}""")) === """{"Err":""}""")
+    def readAll(): Seq[String] = decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs",
+      readReq(false))))
+    def awaitStaged(): Unit = {
+      def staged(): Boolean = {
+        val files = Files.list(Paths.get(g.stagingDir("c1")))
+        try files.anyMatch(_.toString.endsWith(".pblog")) finally files.close()
+      }
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!staged() && System.nanoTime() < deadline) Thread.sleep(20)
+    }
+    try {
+      val fifo1 = Paths.get(root, "c1-1.fifo")
+      Files.write(fifo1, burst(0 until 5))
+      startC1(sock, fifo1, keep)
+      awaitStaged() // the pump has read the FIFO; the ingest may not have run
+      stop(fifo1)   // commits what is staged, then stops; keeps everything
+      assert(g.activeContainers.isEmpty)
+      assert(readAll() === (0 until 5).map(i => s"wire $i\n"))
+
+      val fifo2 = Paths.get(root, "c1-2.fifo")
+      Files.write(fifo2, burst(5 until 10))
+      startC1(sock, fifo2, keep)
+      awaitCommitted(root, g, 10)
+      stop(fifo2)
+      assert(readAll() === (0 until 10).map(i => s"wire $i\n"))
+    } finally {
+      server.stop()
+      g.stopAll()
+    }
   }
 
   test("StartLogging with an invalid option map returns the parse error") {
