@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): one JSON line of per-query seconds.
   *
@@ -25,19 +24,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", LocalSession.cores.toString)
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "6").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC") // NTZ-as-UTC convention (Tables.events)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      "spark.sql.shuffle.partitions" -> shuffle, "spark.sql.adaptive.enabled" -> aqe)
     // warm the JVM + parquet reader once so timings measure queries, not
     // class-loading (same treatment for every query; tiny sf0.001 input).
     // Inside try/catch: r7's fixture-schema drift crashed this line and

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.LogOps
+import graft.sources.{AccessLog, JsonFileLog, LogfmtLog, SyslogLog}
 import graft.streaming.{LogIngest, LogRegistry, Retention}
 
 /** Public facade: the reference's full capability surface in one place.
@@ -144,32 +145,37 @@ final class Graft(
   def backfillJsonFile(
       jsonStagingDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    graft.sources.JsonFileLog.start(spark, jsonStagingDir, tableRoot,
-      s"$checkpointRoot/jsonfile-backfill", trigger)
+    backfill(jsonStagingDir, "jsonfile-backfill", JsonFileLog.decodeBurst, trigger)
 
   /** Backfill/tail RFC 5424 syslog captures into the same table (third
     * wire format; see [[graft.sources.SyslogLog]]). */
   def backfillSyslog(
       syslogStagingDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    graft.sources.SyslogLog.start(spark, syslogStagingDir, tableRoot,
-      s"$checkpointRoot/syslog-backfill", trigger)
+    backfill(syslogStagingDir, "syslog-backfill", SyslogLog.decodeBurst, trigger)
 
   /** Backfill/tail logfmt captures into the same table (fourth wire
     * format; see [[graft.sources.LogfmtLog]]). */
   def backfillLogfmt(
       logfmtStagingDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    graft.sources.LogfmtLog.start(spark, logfmtStagingDir, tableRoot,
-      s"$checkpointRoot/logfmt-backfill", trigger)
+    backfill(logfmtStagingDir, "logfmt-backfill", LogfmtLog.decodeBurst, trigger)
 
   /** Backfill/tail Apache CLF/Combined access logs into the same table
     * (fifth wire format; see [[graft.sources.AccessLog]]). */
   def backfillAccessLog(
       accessStagingDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    graft.sources.AccessLog.start(spark, accessStagingDir, tableRoot,
-      s"$checkpointRoot/accesslog-backfill", trigger)
+    backfill(accessStagingDir, "accesslog-backfill", AccessLog.decodeBurst, trigger)
+
+  /** The `.log` files under `dir/<container_id>/`, decoded by `decode`,
+    * through the one ingest query into the table; `name` is the
+    * checkpoint dir a rerun resumes from.
+    */
+  private def backfill(dir: String, name: String, decode: LogIngest.Decoder,
+      trigger: Trigger): StreamingQuery =
+    LogIngest.start(spark, dir, tableRoot, s"$checkpointRoot/$name", trigger,
+      glob = "*.log", decode = decode)
 
   // ---- log analytics over the live table ----------------------------------
 

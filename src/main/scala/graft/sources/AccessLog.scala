@@ -1,11 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
 
-import graft.streaming.{IngestMetrics, LogIngest}
+import graft.streaming.LogIngest
 import graft.streaming.LogIngest.LogRow
 
 /** Ingest source for HTTP access logs in Apache Common/Combined Log
@@ -30,7 +27,7 @@ import graft.streaming.LogIngest.LogRow
   * available to downstream extraction and `LogOps.templates`.
   * Structurally corrupt lines (unclosed bracket/quote, unparseable
   * timestamp, non-numeric status) are skipped and counted via
-  * [[IngestMetrics]] — the shared permissive-decode policy.
+  * [[graft.streaming.IngestMetrics]] — the shared permissive-decode policy.
   */
 object AccessLog {
 
@@ -111,81 +108,12 @@ object AccessLog {
     case _ => "other"
   }
 
-  /** Decode one access-log capture burst into log rows (same monotone-seq
-    * rule as the other four wire formats).
-    */
+  /** Decode one access-log capture burst into log rows. */
   def decodeBurst(
       containerId: String,
       bytes: Array[Byte],
-      skipCounter: Option[org.apache.spark.util.LongAccumulator] = None): Iterator[LogRow] = {
-    var prevSeq = Long.MinValue
-    new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty).flatMap { raw =>
-      parseLine(raw) match {
-        case None =>
-          skipCounter.foreach(_.add(1L))
-          Iterator.empty
-        case Some(rec) =>
-          val source = statusClass(rec.status)
-          val line = raw + "\n"
-          val base = (rec.tsNano / 1000L) * 1000L
-          val seq = if (base > prevSeq) base else prevSeq + 1
-          prevSeq = seq
-          Iterator.single(LogRow(
-            container_id = containerId,
-            seq = seq,
-            ts_nano = rec.tsNano,
-            source = source,
-            line = line,
-            partial = false,
-            partial_id = None,
-            partial_last = None,
-            partial_ordinal = None,
-            message = graft.functions.ProtoLogCodec.encode(
-              graft.functions.ProtoLogCodec.LogEntry(
-                source = source, timeNano = rec.tsNano,
-                line = line.getBytes("UTF-8"), partial = false,
-                partialMeta = None))))
-      }
+      skipCounter: Option[LongAccumulator] = None): Iterator[LogRow] =
+    LogIngest.decodeLines(containerId, bytes, skipCounter) { (rows, raw) =>
+      parseLine(raw).map(rec => rows(rec.tsNano, statusClass(rec.status), raw + "\n"))
     }
-  }
-
-  /** Streaming decode of `.log` access-log captures under
-    * `stagingDir/<container_id>/` (mirror of [[LogfmtLog.stream]]).
-    */
-  def stream(
-      spark: SparkSession,
-      stagingDir: String,
-      containerId: Option[String] = None): Dataset[LogRow] = {
-    import spark.implicits._
-    val skipped = IngestMetrics.skippedFrames(spark)
-    spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.log")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(containerId.map(id => s"$stagingDir/$id").getOrElse(s"$stagingDir/*"))
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, content) =>
-        val parts = path.stripSuffix("/").split("/")
-        decodeBurst(parts(parts.length - 2), content, Some(skipped))
-      }
-  }
-
-  /** Backfill/tail access-log captures into the engine's partitioned
-    * table — the same transactional sink as the other four wire formats.
-    */
-  def start(
-      spark: SparkSession,
-      stagingDir: String,
-      tableDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("100 milliseconds"),
-      containerId: Option[String] = None,
-      writeSaltBuckets: Int = 1): StreamingQuery =
-    LogIngest.startFrom(stream(spark, stagingDir, containerId),
-      tableDir, checkpointDir, trigger, writeSaltBuckets)
 }

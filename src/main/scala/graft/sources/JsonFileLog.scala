@@ -1,11 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
 
-import graft.streaming.{IngestMetrics, LogIngest}
+import graft.streaming.LogIngest
 import graft.streaming.LogIngest.LogRow
 
 /** Ingest source for docker's `json-file` logging driver — the format the
@@ -17,7 +14,8 @@ import graft.streaming.LogIngest.LogRow
   *
   * one JSON object per line. This source backfills (or tails) those files
   * into the SAME partitioned log table as the framed-protobuf path, through
-  * [[LogIngest.startFrom]] — one table, two wire formats.
+  * the one ingest query of [[LogIngest.start]] (`*.log`, [[decodeBurst]];
+  * `graft.Graft.backfillJsonFile`) — one table, two wire formats.
   *
   * Decode is per-file `flatMap` like the protobuf path: embarrassingly
   * parallel, no shuffle, stateful seq derivation per burst. Jackson (on
@@ -30,28 +28,22 @@ import graft.streaming.LogIngest.LogRow
   *    carries the newline for complete lines; a missing one marks a
   *    PARTIAL line (docker 17.06+ writes unterminated chunks verbatim),
   *    so: partial = !log.endsWith("\n"), newline appended either way.
-  *  - `message` is the re-encoded protobuf frame of the normalized entry,
-  *    byte-compatible with the framed-protobuf read path.
-  *  - corrupt lines are skipped and counted via [[IngestMetrics]], same
-  *    permissive-decode policy as the protobuf path.
+  *  - rows are built by [[LogIngest.BurstRows]]: the shared seq rule, and
+  *    no stored `message` — the read path serves the protobuf frame of the
+  *    normalized entry, byte-compatible with the framed-protobuf path.
+  *  - corrupt lines are skipped and counted via
+  *    [[graft.streaming.IngestMetrics]], same permissive-decode policy as
+  *    the protobuf path.
   */
 object JsonFileLog {
 
-  private val jsonSchema = StructType(Seq(
-    StructField("log", StringType), StructField("stream", StringType),
-    StructField("time", StringType)))
-
-  /** Decode one json-file burst (a whole staged file) into log rows.
-    * Same monotone-seq rule as the protobuf path: µs event time × 1000,
-    * bumped to prev+1 when the clock doesn't advance.
-    */
+  /** Decode one json-file burst (a whole staged file) into log rows. */
   def decodeBurst(
       containerId: String,
       bytes: Array[Byte],
-      skipCounter: Option[org.apache.spark.util.LongAccumulator] = None): Iterator[LogRow] = {
+      skipCounter: Option[LongAccumulator] = None): Iterator[LogRow] = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    var prevSeq = Long.MinValue
-    new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty).flatMap { lineJson =>
+    LogIngest.decodeLines(containerId, bytes, skipCounter) { (rows, lineJson) =>
       try {
         val node = mapper.readTree(lineJson)
         val log = node.get("log").asText()
@@ -60,72 +52,10 @@ object JsonFileLog {
         val tsNano = Math.addExact(
           Math.multiplyExact(inst.getEpochSecond, 1000000000L), inst.getNano.toLong)
         val partial = !log.endsWith("\n")
-        val line = if (partial) log + "\n" else log
-        val base = (tsNano / 1000L) * 1000L
-        val seq = if (base > prevSeq) base else prevSeq + 1
-        prevSeq = seq
-        Iterator.single(LogRow(
-          container_id = containerId,
-          seq = seq,
-          ts_nano = tsNano,
-          source = stream,
-          line = line,
-          partial = partial,
-          partial_id = None,
-          partial_last = None,
-          partial_ordinal = None,
-          message = graft.functions.ProtoLogCodec.encode(
-            graft.functions.ProtoLogCodec.LogEntry(
-              source = stream, timeNano = tsNano,
-              line = line.getBytes("UTF-8"), partial = partial,
-              partialMeta = None))))
+        Some(rows(tsNano, stream, if (partial) log + "\n" else log, partial))
       } catch {
-        case _: RuntimeException | _: java.io.IOException =>
-          skipCounter.foreach(_.add(1L))
-          Iterator.empty
+        case _: RuntimeException | _: java.io.IOException => None
       }
     }
   }
-
-  /** Streaming decode of the `.log` json-file bursts under
-    * `stagingDir/<container_id>/` → typed log rows (mirror of
-    * [[LogIngest.decodedStream]]).
-    */
-  def stream(
-      spark: SparkSession,
-      stagingDir: String,
-      containerId: Option[String] = None): Dataset[LogRow] = {
-    import spark.implicits._
-    val skipped = IngestMetrics.skippedFrames(spark)
-    spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.log")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(containerId.map(id => s"$stagingDir/$id").getOrElse(s"$stagingDir/*"))
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, content) =>
-        val parts = path.stripSuffix("/").split("/")
-        decodeBurst(parts(parts.length - 2), content, Some(skipped))
-      }
-  }
-
-  /** Backfill/tail json-file logs into the engine's partitioned table —
-    * the same sink path (transactional micro-batches, container/date
-    * layout) as the protobuf ingest.
-    */
-  def start(
-      spark: SparkSession,
-      stagingDir: String,
-      tableDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("100 milliseconds"),
-      containerId: Option[String] = None,
-      writeSaltBuckets: Int = 1): StreamingQuery =
-    LogIngest.startFrom(stream(spark, stagingDir, containerId),
-      tableDir, checkpointDir, trigger, writeSaltBuckets)
 }

@@ -312,7 +312,9 @@ private[streaming] final class FifoPump(fifo: java.nio.file.Path, stagingDir: ja
   // burst state, shared by the read loop and the idle flusher
   private val lock = new Object
   private val lifetime = FifoPump.nextLifetime()
-  private var acc = Array.emptyByteArray
+  // pending bytes: acc(0 until len); grows by doubling, never copied per read
+  private var acc = new Array[Byte](64 * 1024)
+  private var len = 0
   private var burst = 0
   private var lastFlush = System.nanoTime()
   private var fresh = false // acc holds bytes read since the last flush
@@ -330,8 +332,14 @@ private[streaming] final class FifoPump(fifo: java.nio.file.Path, stagingDir: ja
       val buf = new Array[Byte](64 * 1024)
       var n = 0
       while (!closing && { n = in.read(buf); n >= 0 }) lock.synchronized {
-        if (n > 0) { acc = acc ++ java.util.Arrays.copyOf(buf, n); fresh = true }
-        if (acc.length >= maxBuf || System.nanoTime() - lastFlush >= flushNanos) flush()
+        if (n > 0) {
+          if (len + n > acc.length)
+            acc = java.util.Arrays.copyOf(acc, math.max(acc.length * 2, len + n))
+          System.arraycopy(buf, 0, acc, len, n)
+          len += n
+          fresh = true
+        }
+        if (len >= maxBuf || System.nanoTime() - lastFlush >= flushNanos) flush()
       }
     } catch {
       case NonFatal(_) => // stream closed under us (close()) or fifo vanished
@@ -356,38 +364,30 @@ private[streaming] final class FifoPump(fifo: java.nio.file.Path, stagingDir: ja
       case NonFatal(_) => // staging dir gone: the read loop's next flush fails alike
     }
 
-  /** Cut a burst from `acc`; call holding `lock`. */
-  private def flush(): Unit = {
-    acc = flushComplete(acc, burst) match {
-      case (rest, wrote) => if (wrote) burst += 1; rest
-    }
-    lastFlush = System.nanoTime()
-    fresh = false
-  }
-
-  /** Write the longest complete-frame prefix of `acc` as one burst file;
-    * return (unflushed remainder, wrote-a-file).
+  /** Write the longest complete-frame prefix of the pending bytes as one
+    * burst file and keep the rest pending; call holding `lock`.
     */
-  private def flushComplete(acc: Array[Byte], burst: Int): (Array[Byte], Boolean) = {
+  private def flush(): Unit = {
     var end = 0
-    while (acc.length - end >= 4) {
-      val len = ByteBuffer.wrap(acc, end, 4).getInt
-      if (len < 0 || acc.length - end - 4 < len) return writeOut(acc, end, burst)
-      end += 4 + len
+    var more = true
+    while (more && len - end >= 4) {
+      val frameLen = ByteBuffer.wrap(acc, end, 4).getInt
+      if (frameLen < 0 || len - end - 4 < frameLen) more = false
+      else end += 4 + frameLen
     }
-    writeOut(acc, end, burst)
-  }
-
-  private def writeOut(acc: Array[Byte], end: Int, burst: Int): (Array[Byte], Boolean) = {
-    if (end == 0) (acc, false)
-    else {
+    if (end > 0) {
       val tmp = stagingDir.resolve(s"pump-$lifetime-$burst.tmp")
-      Files.write(tmp, java.util.Arrays.copyOf(acc, end))
+      val out = Files.newOutputStream(tmp)
+      try out.write(acc, 0, end) finally out.close()
       // rename so the binaryFile source never sees a half-written burst
       Files.move(tmp, stagingDir.resolve(f"pump-$lifetime-$burst%06d.pblog"),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      (java.util.Arrays.copyOfRange(acc, end, acc.length), true)
+      burst += 1
+      System.arraycopy(acc, end, acc, 0, len - end)
+      len -= end
     }
+    lastFlush = System.nanoTime()
+    fresh = false
   }
 
   def close(): Unit = {

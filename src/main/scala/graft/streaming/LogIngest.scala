@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -9,6 +11,7 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.LongAccumulator
 
 import graft.functions.ProtoLogCodec
 import graft.functions.ProtoLogCodec.{LogEntry, PartialMeta}
@@ -25,15 +28,18 @@ import graft.functions.ProtoLogCodec.{LogEntry, PartialMeta}
   *
   *   staging/<container_id>/<burst>.pblog   (concatenated frames)
   *     → readStream binaryFile → deframe/decode (ProtoLogCodec, one pass
-  *       per partition) → typed columns + verbatim re-encoded frame
+  *       per partition) → typed columns
   *     → writeStream parquet, partitionBy(container_id), micro-batch
   *       trigger 100 ms (the reference's burst timeout, `src/config.rs:177`)
   *
+  * The same query ingests the four text formats of `graft.sources` from
+  * their own staging dirs ([[start]]'s `glob` and `decode`).
+  *
   * Each line is stored once, like the reference's `message BLOB`
-  * (`src/logger.rs:146-147`): the write step ([[commitBatch]]) keeps
-  * `message` only where [[frameOf]] cannot rebuild it from the columns
-  * (in practice, a line that was not valid UTF-8), and readers
-  * ([[table]], [[withMessages]]) serve the rebuilt frame everywhere else.
+  * (`src/logger.rs:146-147`): decode ([[BurstRows]]) sets `message` only
+  * where [[frameOf]] cannot rebuild it from the columns (a line that is
+  * not valid UTF-8), and readers ([[table]], [[withMessages]]) serve the
+  * rebuilt frame everywhere else.
   *
   * The micro-batch epoch IS the reference's transaction: atomic commit of
   * the batch's files + checkpointed source offsets replace BEGIN/END and
@@ -80,31 +86,72 @@ object LogIngest {
       partial_last: Option[Boolean], partial_ordinal: Option[Int],
       message: Array[Byte])
 
-  /** Decode one staged burst file into rows.
+  /** Decodes one staged burst of a container into log rows, counting the
+    * records it skips on the accumulator: [[decodeBurst]] for the FIFO's
+    * framed protobuf, each `graft.sources` format's `decodeBurst` for text.
+    */
+  type Decoder = (String, Array[Byte], Option[LongAccumulator]) => Iterator[LogRow]
+
+  /** Builds one burst's rows in arrival order: the one place that holds
+    * the seq rule and the storage rule for every wire format.
     *
     * `seq` (the ROWID analog) must be monotone per container across
     * micro-batches and stable across restarts, so it is derived from data,
     * never from `monotonically_increasing_id()`: µs event time × 1000,
     * bumped to `prev+1` whenever the time-derived base does not advance —
     * so seq is STRICTLY increasing in arrival order within a burst even
-    * when a coarse clock stamps many frames with the same µs (the naive
-    * `+ idx % 1000` form collides and wraps at 1000 frames/µs). Across
+    * when a coarse clock stamps many lines with the same µs (the naive
+    * `+ idx % 1000` form collides and wraps at 1000 lines/µs). Across
     * bursts, ordering follows event time at µs resolution, like the
     * reference's single-writer ROWID follows arrival. Values stay < 2^63
     * through year 2260.
     *
-    * Reference semantics preserved: '\n' appended to every line before
-    * storage, and `message` is the verbatim RE-ENCODED frame of the
-    * newline-appended entry (`src/logger.rs:122-130`) so the read path can
-    * return byte-identical frames. The write step drops it again wherever
-    * [[frameOf]] over the row's columns gives the same bytes.
+    * Storage: every line is stored newline-appended (`src/logger.rs:123`).
+    * `message` is set only for a decoded frame whose newline-appended line
+    * bytes do not survive a UTF-8 decode/encode round trip; it then holds
+    * the re-encoded frame (`src/logger.rs:122-130`). Every other row's
+    * frame is exactly what [[frameOf]] rebuilds from its columns (the codec
+    * decodes `source` and the partial id to strings before any encode, so
+    * only the line can differ), and readers serve that. Text formats hand
+    * their line over as a String, so their rows never carry a frame.
+    */
+  final class BurstRows(containerId: String) {
+    private var prevSeq = Long.MinValue
+
+    /** The row of a text-format line; `line` already ends with '\n'. */
+    def apply(tsNano: Long, source: String, line: String, partial: Boolean = false): LogRow =
+      row(tsNano, source, line, partial, None, null)
+
+    /** The row of a decoded frame, '\n' appended to its line. */
+    def apply(e: LogEntry): LogRow = {
+      val bytes = java.util.Arrays.copyOf(e.line, e.line.length + 1)
+      bytes(e.line.length) = '\n'
+      val line = new String(bytes, UTF_8)
+      val message =
+        if (java.util.Arrays.equals(line.getBytes(UTF_8), bytes)) null
+        else ProtoLogCodec.encode(e.copy(line = bytes))
+      row(e.timeNano, e.source, line, e.partial, e.partialMeta, message)
+    }
+
+    private def row(tsNano: Long, source: String, line: String, partial: Boolean,
+        meta: Option[PartialMeta], message: Array[Byte]): LogRow = {
+      val base = (tsNano / 1000L) * 1000L
+      val seq = if (base > prevSeq) base else prevSeq + 1
+      prevSeq = seq
+      LogRow(containerId, seq, tsNano, source, line, partial,
+        meta.map(_.id), meta.map(_.last), meta.map(_.ordinal), message)
+    }
+  }
+
+  /** Decode one staged burst of framed `LogEntry`s into rows
+    * ([[BurstRows]]).
     */
   def decodeBurst(
       containerId: String,
       bytes: Array[Byte],
-      skipCounter: Option[org.apache.spark.util.LongAccumulator] = None): Iterator[LogRow] = {
-    var prevSeq = Long.MinValue
-    ProtoLogCodec.deframe(bytes).zipWithIndex.flatMap { case (frame, idx) =>
+      skipCounter: Option[LongAccumulator] = None): Iterator[LogRow] = {
+    val rows = new BurstRows(containerId)
+    ProtoLogCodec.deframe(bytes).flatMap { frame =>
       // Permissive decode: a corrupt frame is skipped, not fatal. The
       // reference's policy — kill and restart the ingest loop on a decode
       // error (src/statehandler.rs:147-166) — also loses the bad frame
@@ -112,24 +159,8 @@ object LogIngest {
       // semantics without poisoning the whole stream on one bad burst.
       // Each skip increments the IngestMetrics counter: silent data loss
       // on a corrupt burst must be observable (VERDICT r1 "what's missing").
-      try {
-        val e = ProtoLogCodec.decode(frame)
-        val withNl = e.copy(line = e.line :+ '\n'.toByte)
-        val base = (e.timeNano / 1000L) * 1000L
-        val seq = if (base > prevSeq) base else prevSeq + 1
-        prevSeq = seq
-        Iterator.single(LogRow(
-          container_id = containerId,
-          seq = seq,
-          ts_nano = e.timeNano,
-          source = e.source,
-          line = new String(withNl.line, "UTF-8"),
-          partial = e.partial,
-          partial_id = e.partialMeta.map(_.id),
-          partial_last = e.partialMeta.map(_.last),
-          partial_ordinal = e.partialMeta.map(_.ordinal),
-          message = ProtoLogCodec.encode(withNl)))
-      } catch {
+      try Iterator.single(rows(ProtoLogCodec.decode(frame)))
+      catch {
         case _: RuntimeException =>
           skipCounter.foreach(_.add(1L))
           Iterator.empty
@@ -137,16 +168,29 @@ object LogIngest {
     }
   }
 
+  /** Decode one burst of a line-per-record text format: `parse` maps each
+    * non-empty line to its row through the burst's [[BurstRows]], or to
+    * None for a corrupt line, which is skipped and counted.
+    */
+  def decodeLines(
+      containerId: String,
+      bytes: Array[Byte],
+      skipCounter: Option[LongAccumulator])(
+      parse: (BurstRows, String) => Option[LogRow]): Iterator[LogRow] = {
+    val rows = new BurstRows(containerId)
+    new String(bytes, UTF_8).linesIterator.filter(_.nonEmpty).flatMap { raw =>
+      val row = parse(rows, raw)
+      if (row.isEmpty) skipCounter.foreach(_.add(1L))
+      row
+    }
+  }
+
   /** The encoded `LogEntry` a log-table row describes: `ProtoLogCodec
     * .encode` of its source, ts_nano, line (the `line` column's UTF-8
     * bytes), partial flag and partial metadata (present iff any of the
     * three `partial_*` columns is set).
-    * Over a [[decodeBurst]] row it equals the row's `message` unless the
-    * line's bytes were not valid UTF-8 (the codec decodes `source` and the
-    * partial id to strings before the frame is encoded, so those always
-    * rebuild). The write rule and the read path both call it, so a row
-    * stored without `message` is served exactly the frame it was decoded
-    * from.
+    * Over a [[BurstRows]] row stored without `message` it is exactly the
+    * frame the row was decoded from, which is what the read path serves.
     */
   def frameOf(
       source: String,
@@ -170,8 +214,8 @@ object LogIngest {
 
   /** [[frameOf]] over the expressions of its seven arguments, in order.
     * A plain expression rather than a typed UDF: a UDF's input encoders
-    * are resolved on every analysis, which each read, follow poll and
-    * micro-batch commit would pay.
+    * are resolved on every analysis, which each read and follow poll would
+    * pay.
     */
   private final case class FrameOf(children: IndexedSeq[Expression])
       extends Expression with CodegenFallback {
@@ -189,32 +233,43 @@ object LogIngest {
         newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
   }
 
-  /** [[frameOf]] over a log-table DataFrame's columns. */
-  private def frameColumn: Column =
-    ColumnBridge.column(FrameOf(IndexedSeq("source", "ts_nano", "line", "partial",
-      "partial_id", "partial_last", "partial_ordinal").map(c => ColumnBridge.expression(col(c)))))
-
-  /** `df` with every row's `message` served: the stored frame where the
-    * write kept one, else the frame [[frameOf]] rebuilds. Apply it after
+  /** `df` with every row's `message` served: the stored frame where
+    * decode kept one, else the frame [[frameOf]] rebuilds. Apply it after
     * filtering and limiting, so only the rows returned pay for it.
     */
   def withMessages(df: DataFrame): DataFrame =
-    df.withColumn("message", coalesce(col("message"), frameColumn))
+    df.withColumn("message", coalesce(col("message"),
+      ColumnBridge.column(FrameOf(IndexedSeq("source", "ts_nano", "line", "partial",
+        "partial_id", "partial_last", "partial_ordinal").map(c => ColumnBridge.expression(col(c)))))))
 
-  /** Streaming decode: binaryFile source over `stagingDir/<container>/...`
-    * → typed log rows. Pure per-file work inside `flatMap` — no shuffle.
+  /** Start an ingest query: the staged burst files matching `glob` under
+    * `stagingDir/<container_id>/` (only `containerId`'s subdir when given),
+    * each decoded by `decode`, land in the partitioned parquet log table.
+    * One path serves every wire format: the FIFO's framed protobuf is the
+    * default (`*.pblog`, [[decodeBurst]]); the `graft.sources` text
+    * formats pass `*.log` and their own `decodeBurst`. Decode is pure
+    * per-file work inside `flatMap`, no shuffle.
+    *
+    * The 100 ms processing-time trigger mirrors the reference's
+    * burst-commit cadence; tests pass `Trigger.AvailableNow()` for
+    * run-to-completion.
     */
-  def decodedStream(
+  def start(
       spark: SparkSession,
       stagingDir: String,
+      tableDir: String,
+      checkpointDir: String,
+      trigger: Trigger = Trigger.ProcessingTime("100 milliseconds"),
       containerId: Option[String] = None,
-      maxBytesPerTrigger: Option[Long] = None): Dataset[LogRow] = {
+      maxBytesPerTrigger: Option[Long] = None,
+      glob: String = "*.pblog",
+      decode: Decoder = decodeBurst): StreamingQuery = {
     import spark.implicits._
     // resolved on the driver, captured (serializable) by the decode closure
     val skipped = IngestMetrics.skippedFrames(spark)
     val reader = spark.readStream
       .format("binaryFile")
-      .option("pathGlobFilter", "*.pblog")
+      .option("pathGlobFilter", glob)
     // The reference's per-tx byte cap (max_size_per_tx, config.rs:176)
     // maps to the micro-batch byte budget — but ONLY when explicitly
     // configured: the reference's 10 MiB default is a single-writer SQLite
@@ -233,49 +288,10 @@ object LogIngest {
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, content) =>
-        // .../<container_id>/<burst>.pblog
+        // .../<container_id>/<burst file>
         val parts = path.stripSuffix("/").split("/")
-        decodeBurst(parts(parts.length - 2), content, Some(skipped))
+        decode(parts(parts.length - 2), content, Some(skipped))
       }
-  }
-
-  /** Start the ingest query: staging files → partitioned parquet log table.
-    * 100 ms processing-time trigger mirrors the reference's burst-commit
-    * cadence; tests pass `Trigger.AvailableNow()` for run-to-completion.
-    */
-  /** `writeSaltBuckets`: escape hatch for a hot container. The default
-    * repartition(container_id) gives each container ONE write task per
-    * micro-batch (one file per batch — the reference's single-writer
-    * semantics, src/logger.rs:250-251); a container bursting faster than
-    * one task can serialize would bottleneck there, so salt>1 spreads each
-    * container's batch over `salt` tasks keyed on seq, trading file count
-    * for write parallelism. Opt-in because more files per partition is the
-    * wrong default at the reference's burst sizes.
-    */
-  def start(
-      spark: SparkSession,
-      stagingDir: String,
-      tableDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("100 milliseconds"),
-      containerId: Option[String] = None,
-      maxBytesPerTrigger: Option[Long] = None,
-      writeSaltBuckets: Int = 1): StreamingQuery =
-    startFrom(decodedStream(spark, stagingDir, containerId, maxBytesPerTrigger),
-      tableDir, checkpointDir, trigger, writeSaltBuckets)
-
-  /** Sink half of [[start]], source-agnostic: any decoded [[LogRow]]
-    * stream (framed-protobuf staging, docker json-file backfill, …) lands
-    * in the same partitioned table through the same transactional
-    * micro-batch path.
-    */
-  def startFrom(
-      rows: Dataset[LogRow],
-      tableDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("100 milliseconds"),
-      writeSaltBuckets: Int = 1): StreamingQuery = {
-    rows
       // integer div, not `/`: ns epoch values exceed double's 2^53
       .withColumn("ts", timestamp_micros(expr("ts_nano div 1000")))
       .withColumn("date",
@@ -295,8 +311,7 @@ object LogIngest {
       // plain-parquet readers outside Spark wouldn't see.
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          commitBatch(batch, batchId, tableDir, writeSaltBuckets,
-            namespace = commitNamespace(checkpointDir))
+          commitBatch(batch, batchId, tableDir, namespace = commitNamespace(checkpointDir))
       }
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
@@ -347,11 +362,9 @@ object LogIngest {
       batch: DataFrame,
       batchId: Long,
       tableDir: String,
-      writeSaltBuckets: Int = 1,
       namespace: String = "q"): Unit =
     manifestCommit(batch.sparkSession, tableDir, batchId, namespace) { staging =>
-      stagePartitioned(batch, batchId, tableDir, staging,
-        writeSaltBuckets, namespace)
+      stagePartitioned(batch, batchId, tableDir, staging, namespace)
     }
 
   /** Steps 1–2 and 4–6 of the commit protocol above, shared by
@@ -419,40 +432,25 @@ object LogIngest {
   }
 
   /** Step 3 of the protocol for the LOG table: partitioned+sorted staging
-    * write, destinations under `container_id=/date=` dirs. `message` is
-    * written only where [[frameOf]] does not rebuild it, so each line is
-    * stored once.
+    * write, destinations under `container_id=/date=` dirs. Rows are
+    * written as given: [[BurstRows]] already left `message` null wherever
+    * [[frameOf]] rebuilds it.
     */
   private def stagePartitioned(
       batch: DataFrame,
       batchId: Long,
       tableDir: String,
       staging: String,
-      writeSaltBuckets: Int,
       namespace: String): Seq[(org.apache.hadoop.fs.Path, String)] = {
     val spark = batch.sparkSession
-    // null where frameOf rebuilds it (and where it is null already),
-    // before the shuffle, so the shuffle carries no second copy either
-    val compact = batch.withColumn("message",
-      when(col("message") =!= frameColumn, col("message")))
     // co-locate each container's rows before the partitioned write:
     // without this every decode task writes a file into every partition
     // dir (tasks × containers small files per batch); with it each
-    // container gets one file per batch (per salt bucket). The in-task
-    // sort restores ts order so parquet row-group min/max stats on
-    // ts_nano stay tight (the reference's idx_ts analog, src/logger.rs:147).
-    val parted =
-      if (writeSaltBuckets <= 1)
-        compact.repartition(col("container_id"))
-      else
-        // explicit partition count: AQE would otherwise coalesce a
-        // small salted shuffle back into one task, undoing the salt
-        // hash(seq), not raw seq % salt: regular timestamp spacing can
-        // make every seq congruent mod salt (1 s ticks are ≡ 0 mod 8)
-        compact.repartition(
-          spark.sessionState.conf.numShufflePartitions,
-          col("container_id"), pmod(hash(col("seq")), lit(writeSaltBuckets)))
-    parted
+    // container gets one file per batch, the reference's single-writer
+    // semantics (src/logger.rs:250-251). The in-task sort restores ts
+    // order so parquet row-group min/max stats on ts_nano stay tight (the
+    // reference's idx_ts analog, src/logger.rs:147).
+    batch.repartition(col("container_id"))
       .sortWithinPartitions("container_id", "date", "ts_nano")
       .write.mode("overwrite").partitionBy("container_id", "date").parquet(staging)
     for {

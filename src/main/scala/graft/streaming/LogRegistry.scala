@@ -22,19 +22,23 @@ final class LogRegistry(
     tableRoot: String,
     checkpointRoot: String) {
 
-  private val active = TrieMap.empty[String, (StreamingQuery, Trigger)]
+  /** A running ingest query and the arguments it was started with. */
+  private final class Started(val q: StreamingQuery, val trigger: Trigger,
+      val maxBytesPerTrigger: Option[Long])
+
+  private val active = TrieMap.empty[String, Started]
 
   def startLogging(
       containerId: String,
       trigger: Trigger = Trigger.ProcessingTime("100 milliseconds"),
       maxBytesPerTrigger: Option[Long] = None): StreamingQuery = {
     // a crashed/terminated query must not shadow a restart
-    active.get(containerId).filter(_._1.isActive) match {
-      case Some((q, _)) => q
+    active.get(containerId).filter(_.q.isActive) match {
+      case Some(s) => s.q
       case None =>
         val q = LogIngest.start(spark, stagingRoot, tableRoot,
           s"$checkpointRoot/$containerId", trigger, Some(containerId), maxBytesPerTrigger)
-        active.put(containerId, (q, trigger))
+        active.put(containerId, new Started(q, trigger, maxBytesPerTrigger))
         q
     }
   }
@@ -54,7 +58,7 @@ final class LogRegistry(
     }
 
   def stopLogging(containerId: String, deleteWhenStopped: Boolean = true): Unit = {
-    active.remove(containerId).foreach { case (q, _) =>
+    active.remove(containerId).map(_.q).foreach { q =>
       // kept data includes what is already staged, e.g. the FIFO tail the
       // pump flushes on StopLogging; a failed query keeps it staged and
       // checkpointed for the next start instead
@@ -92,19 +96,20 @@ final class LogRegistry(
   /** Stop every ingest query, keeping data and checkpoints; bursts staged
     * but not yet committed are ingested by the next start.
     */
-  def stopAll(): Unit = active.keys.foreach(id => active.remove(id).foreach(_._1.stop()))
+  def stopAll(): Unit = active.keys.foreach(id => active.remove(id).foreach(_.q.stop()))
 
-  /** Stop every active ingest query, run `f`, restart them with their
-    * original triggers. Retention's rewrite-and-swap must not race a
-    * concurrent appender: a file landing between the survivor snapshot and
-    * the directory swap would be deleted (its offsets are already
-    * checkpointed, so it would never be re-ingested).
+  /** Stop every active ingest query, run `f`, restart each with the
+    * trigger and byte budget it was started with. Retention's
+    * rewrite-and-swap must not race a concurrent appender: a file landing
+    * between the survivor snapshot and the directory swap would be deleted
+    * (its offsets are already checkpointed, so it would never be
+    * re-ingested).
     */
   def quiesced[T](f: => T): T = {
     val snapshot = active.toMap
-    snapshot.foreach { case (id, (q, _)) => q.stop(); active.remove(id) }
+    snapshot.foreach { case (id, s) => s.q.stop(); active.remove(id) }
     try f
-    finally snapshot.foreach { case (id, (_, trig)) => startLogging(id, trig) }
+    finally snapshot.foreach { case (id, s) => startLogging(id, s.trigger, s.maxBytesPerTrigger) }
   }
 
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Fixed-batch incremental-attach scaling: time
@@ -12,10 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object AttachScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     // fixed batch: 200 docs from sf0.1, ids shifted clear of any corpus
     val batch = spark.read
       .parquet("/root/testdata/sf0.1/documents.parquet")

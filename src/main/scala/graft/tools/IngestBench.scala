@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.ProtoLogCodec
@@ -12,19 +11,15 @@ import graft.streaming.LogIngest
 /** Ingest throughput: N framed LogEntry lines across C containers →
   * partitioned parquet via the streaming path. Prints lines/s (the
   * reference's self-metric, logsqlite src/logger.rs:187-196) and the
-  * table's parquet bytes per staged framed byte. Runs local[<cores>] with
-  * one shuffle partition per core.
+  * table's parquet bytes per staged framed byte. Runs on
+  * [[graft.LocalSession]] (host-sized).
   * Usage: sbt "runMain graft.tools.IngestBench [lines] [containers]"
   */
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val totalLines = args.headOption.map(_.toInt).getOrElse(1000000)
     val containers = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val cores = Runtime.getRuntime.availableProcessors
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
 
     val base = Files.createTempDirectory("graft-ibench").toString
     val (staging, table, ckpt) = (s"$base/staging", s"$base/logs", s"$base/ckpt")

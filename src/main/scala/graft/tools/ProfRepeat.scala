@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Noise-robust profiling: run each selected query N times warm, report
   * min/median. Usage: sbt "runMain graft.tools.ProfRepeat <sfDir> <n> <prefix...>"
@@ -10,10 +9,7 @@ object ProfRepeat {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val n = args.drop(1).headOption.map(_.toInt).getOrElse(3)
     val prefixes = args.drop(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     graft.SparkEntry.entry(spark).count() // warm
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (prefixes.isEmpty || prefixes.exists(name.startsWith)) {

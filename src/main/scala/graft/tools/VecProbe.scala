@@ -1,17 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off probe: stage-level timing of labelOutliers' pieces (r10). */
 object VecProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     def time[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"$tag%-28s ${(System.nanoTime() - t0) / 1e9}%6.3f s"); r

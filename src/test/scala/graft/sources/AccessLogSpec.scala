@@ -74,7 +74,8 @@ class AccessLogSpec extends SparkSpec {
     Files.write(dir.resolve("b0.log"), lines.mkString("\n").getBytes("UTF-8"))
 
     val skippedBefore = IngestMetrics.skippedFrames(spark).value
-    val q = AccessLog.start(spark, staging, table, ckpt, Trigger.AvailableNow())
+    val q = LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow(),
+      glob = "*.log", decode = AccessLog.decodeBurst)
     q.awaitTermination(60000)
 
     val df = LogIngest.table(spark, table)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.functions.ProtoLogCodec
+import graft.functions.ProtoLogCodec.LogEntry
 import graft.streaming.{IngestMetrics, LogIngest}
 
 /** Docker json-file backfill source: same table, same invariants as the
@@ -44,9 +45,14 @@ class JsonFileLogSpec extends SparkSpec {
     // seq strictly monotone even when µs clock doesn't advance
     assert(rows.map(_.seq) == rows.map(_.seq).sorted &&
       rows.map(_.seq).distinct.length == 3)
-    // message frames decode back to the normalized entry
-    val d = ProtoLogCodec.decode(rows(0).message)
+    // no row stores a frame: the columns rebuild the normalized entry's
+    assert(rows.forall(_.message == null))
+    val frames = rows.map(r =>
+      LogIngest.frameOf(r.source, r.ts_nano, r.line.getBytes("UTF-8"), r.partial, null, null, null))
+    val d = ProtoLogCodec.decode(frames(0))
     assert(new String(d.line, "UTF-8") == "hello\n" && d.timeNano == rows(0).ts_nano)
+    assert(frames(2).toSeq == ProtoLogCodec.encode(LogEntry("stdout", rows(2).ts_nano,
+      "chunk\n".getBytes("UTF-8"), partial = true, None)).toSeq)
   }
 
   test("backfill end-to-end into the shared table; corrupt lines counted") {
@@ -62,7 +68,8 @@ class JsonFileLogSpec extends SparkSpec {
       })
 
     val skippedBefore = IngestMetrics.skippedFrames(spark).value
-    val q = JsonFileLog.start(spark, staging, table, ckpt, Trigger.AvailableNow())
+    val q = LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow(),
+      glob = "*.log", decode = JsonFileLog.decodeBurst)
     q.awaitTermination(60000)
 
     val df = LogIngest.table(spark, table)
@@ -71,6 +78,11 @@ class JsonFileLogSpec extends SparkSpec {
     val cj = df.where(col("container_id") === "cj").orderBy("seq").collect()
     assert(cj.length == 10)
     assert(cj.head.getAs[String]("line") == "m0\n")
+    // served frame = the normalized entry's, byte-for-byte; none is stored
+    assert(cj.head.getAs[Array[Byte]]("message").toSeq == ProtoLogCodec.encode(LogEntry(
+      "stdout", cj.head.getAs[Long]("ts_nano"), "m0\n".getBytes("UTF-8"),
+      partial = false, None)).toSeq)
+    assert(LogIngest.storedTable(spark, table).where(col("message").isNotNull).count() == 0)
     assert(IngestMetrics.skippedFrames(spark).value - skippedBefore == 1)
     // date partition column derives from ts_nano (retention-droppable)
     assert(df.select("date").distinct().collect()

@@ -274,6 +274,36 @@ class LogDriverServerSpec extends SparkSpec {
     }
   }
 
+  test("frames over 64 KiB straddle reads and a stream over 1 MiB lands once, in order") {
+    val root = Files.createTempDirectory("graft-wire9").toString
+    val sock = Paths.get(root, "graft.sock")
+    val g = Graft(spark, root)
+    val server = new LogDriverServer(g, sock)
+    server.start()
+    // every 10th line is ~100 KiB, so its frame spans two or more 64 KiB
+    // reads; ~3 MiB in all, so the pump cuts several 1 MiB bursts
+    val lines = (0 until 300).map(i =>
+      if (i % 10 == 3) s"big $i " + ("abcdefghijklmnopqrstuvwxyz".charAt(i % 26).toString * 100000)
+      else s"wire $i")
+    val bytes = Array.concat(lines.zipWithIndex.map { case (l, i) =>
+      ProtoLogCodec.frame(ProtoLogCodec.encode(LogEntry(
+        "stdout", t0 + i * 1000000000L, l.getBytes(UTF_8), partial = false, None)))
+    }: _*)
+    assert(bytes.length > (3 << 20) - (200 << 10))
+    try {
+      // a regular file stands in for the FIFO: the pump reads it to EOF
+      val fifo = Paths.get(root, "c1.fifo")
+      Files.write(fifo, bytes)
+      startC1(sock, fifo)
+      awaitCommitted(root, g, lines.size)
+      assert(decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", readReq(false)))) ===
+        lines.map(_ + "\n"))
+    } finally {
+      server.stop()
+      g.stopAll()
+    }
+  }
+
   test("malformed requests get 400 and the server keeps serving") {
     val root = Files.createTempDirectory("graft-wire6").toString
     val sock = Paths.get(root, "graft.sock")

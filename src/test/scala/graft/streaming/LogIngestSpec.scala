@@ -348,23 +348,6 @@ class LogIngestSpec extends SparkSpec {
     assert(Retention.compact(spark, table) === 0) // idempotent
   }
 
-  test("salted write spreads a hot container over several files, same rows") {
-    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
-    writeBurst(staging, "c1", "b0", (0 until 40).map(entry(_, "c1")))
-    LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow(),
-      writeSaltBuckets = 8).awaitTermination(60000)
-    val df = LogIngest.table(spark, table)
-    assert(df.count() === 40)
-    val seqs = df.select("seq").collect().map(_.getLong(0)).toSet
-    assert(seqs.size === 40) // no duplication, no loss across salt buckets
-    // the one date leaf now holds multiple files (one per salt bucket task)
-    val cDir = Files.list(Paths.get(table, "container_id=c1")).iterator().next()
-    val files = Files.list(cDir).iterator()
-    var n = 0
-    while (files.hasNext) { if (files.next().toString.endsWith(".parquet")) n += 1 }
-    assert(n > 1, s"expected salted write to produce several files, got $n")
-  }
-
   test("per-container options drive the ingest query (config -> engine)") {
     val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
     writeBurst(staging, "c5", "b0", (0 until 8).map(entry(_, "c5")))
@@ -379,6 +362,29 @@ class LogIngestSpec extends SparkSpec {
     val bad = reg.startLoggingWithOptions("c6", Map("cleanup_age" -> "oops"))
     assert(bad.isLeft)
     assert(reg.activeContainers === Set.empty)
+  }
+
+  test("retention restarts a container with its byte budget (max_size_per_tx)") {
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    Files.createDirectories(Paths.get(staging, "cq"))
+    val reg = new LogRegistry(spark, staging, table, ckpt)
+    assert(reg.startLoggingWithOptions("cq", Map(
+      "max_size_per_tx" -> "1k", "message_read_timeout" -> "50")).isRight)
+    try {
+      // six bursts of ~1.6 KiB staged while retention holds the query
+      // stopped: under the 1 KiB budget the restarted query takes one per
+      // batch; without it, all six in one
+      reg.quiesced {
+        (0 until 6).foreach { b =>
+          writeBurst(staging, "cq", s"b$b", (b * 40 until (b + 1) * 40).map(entry(_, "cq")))
+        }
+      }
+      val q = reg.startLogging("cq") // the restarted query
+      eventually(30000) {
+        assert(LogIngest.table(spark, table).count() === 240)
+        assert(q.recentProgress.count(_.numInputRows > 0) >= 6)
+      }
+    } finally reg.stopAll()
   }
 
   test("registry: start/stop/replay lifecycle with delete-when-stopped") {

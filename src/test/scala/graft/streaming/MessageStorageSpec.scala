@@ -10,9 +10,9 @@ import graft.{Graft, SparkSpec}
 import graft.functions.ProtoLogCodec
 import graft.functions.ProtoLogCodec.{LogEntry, PartialMeta}
 
-/** Each log line is stored once: the log table keeps `message` only where
+/** Each log line is stored once: decode keeps `message` only where
   * [[LogIngest.frameOf]] cannot rebuild it from the decoded columns, and
-  * every reader is served the frame [[LogIngest.decodeBurst]] encoded.
+  * every reader is served the encoded, newline-appended entry.
   */
 class MessageStorageSpec extends SparkSpec {
 
@@ -78,14 +78,14 @@ class MessageStorageSpec extends SparkSpec {
     rows.zip(entries :+ withUnknownEntry).foreach { case (r, e) =>
       val want = ProtoLogCodec.encode(withNl(e))
       assert(frameOf(r).toSeq === want.toSeq, r.line)
-      assert(r.message.toSeq === want.toSeq, r.line)
+      assert(r.message == null, r.line)
     }
     // partial rows carry their metadata columns; the others none
     assert(rows.map(_.partial_ordinal) ===
       Seq(Some(0), Some(3), Some(0), None, None, None, None, Some(2)))
 
     // a line that is not valid UTF-8 loses bytes in the `line` column, so
-    // its columns do not rebuild the frame and the write must keep it
+    // its columns do not rebuild the frame and decode must keep it
     val binary = LogEntry("stdout", t0, Array[Byte](-1, -2, 0x78), partial = false, None)
     val row = LogIngest.decodeBurst("c1", framed(Seq(ProtoLogCodec.encode(binary)))).next()
     assert(row.message.toSeq === ProtoLogCodec.encode(withNl(binary)).toSeq)
@@ -109,8 +109,11 @@ class MessageStorageSpec extends SparkSpec {
     // from that string to begin with, and frameOf rebuilds it exactly
     assert(storedNonNull(table) === 1)
 
-    // served = what decodeBurst produced as each row's frame, byte-for-byte
-    val want = LogIngest.decodeBurst("c1", framed(messages)).map(_.message.toSeq).toSeq
+    // decode stores a frame for the broken line only
+    assert(LogIngest.decodeBurst("c1", framed(messages)).map(_.message != null).toSeq ===
+      (0 until 22).map(_ == 20))
+    // served = each entry encoded with its newline, byte-for-byte
+    val want = messages.map(m => ProtoLogCodec.encode(withNl(ProtoLogCodec.decode(m))).toSeq)
     val g = new Graft(spark, staging, table, ckpt)
     assert(served(g) === want)
     assert(served(g, tail = 2) === want.takeRight(2))
