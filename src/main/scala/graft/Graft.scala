@@ -2,23 +2,26 @@ package graft
 
 import java.time.Instant
 
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
+import graft.functions.LogConf
 import graft.operators.LogOps
 import graft.sources.{AccessLog, JsonFileLog, LogfmtLog, SyslogLog}
-import graft.streaming.{LogIngest, LogRegistry, Retention}
+import graft.streaming.{FsUtil, LogIngest, Retention}
 
 /** Public facade: the reference's full capability surface in one place.
   * A daschr/logsqlite user maps their operations 1:1:
   *
   * | logsqlite (docker log driver)     | graft |
   * |---|---|
-  * | StartLogging (FIFO → SQLite)      | `Graft(spark, dirs).startLogging(id)` |
-  * | StopLogging (+ delete db)         | `stopLogging(id, deleteWhenStopped)` |
+  * | StartLogging (FIFO → SQLite)      | `Graft(spark, dirs).startLogging(id, options)` |
+  * | StopLogging (+ delete db)         | `stopLogging(id)`, deleting per the container's `delete_when_stopped` |
   * | ReadLogs since/until/tail         | `readLogs(id, since, until, tail)` |
   * | ReadLogs follow=true              | `follow(id, since, until, after)(emit)` |
   * | cleanup_age / cleanup_max_lines   | `cleanup(age, maxLines)` |
@@ -27,6 +30,12 @@ import graft.streaming.{LogIngest, LogRegistry, Retention}
   * plus the analytics surface (`SparkEntry.queries`) the reference never
   * had. Directory roots play the role of the reference's
   * `databases_dir` (logsqlite `src/config.rs:141-145`).
+  *
+  * A container's record is the reference's `active_fetches` row
+  * (`src/statehandler.rs:84,193-219`): its running ingest query and the
+  * option map it was started with, kept in memory and, as
+  * `<checkpoint>/options.json`, beside the query's checkpoint, so a
+  * restart recovers the query from its definition plus its checkpoint.
   */
 final class Graft(
     spark: SparkSession,
@@ -34,37 +43,130 @@ final class Graft(
     tableRoot: String,
     checkpointRoot: String) {
 
-  private val registry = new LogRegistry(spark, stagingRoot, tableRoot, checkpointRoot)
+  /** A running container: its ingest query and the options it started with. */
+  private final class Logging(val q: StreamingQuery, val options: Map[String, String])
+
+  private val active = TrieMap.empty[String, Logging]
 
   // ---- lifecycle (SURVEY §2.1 O1-O3, O14-O16) -----------------------------
 
+  /** StartLogging with the reference's per-container option map
+    * (`src/config.rs:186-231`): a ContainerID that is not a single path
+    * segment or a bad option → Left(error string), the plugin protocol's
+    * `{"Err": msg}` contract. Creates the container's staging dir (the
+    * query lists it at analysis time) and keeps the options for
+    * [[stopLogging]], retention restarts and [[replayState]]. A container
+    * already running keeps its query and options.
+    */
   def startLogging(
       containerId: String,
-      trigger: Trigger = Trigger.ProcessingTime("100 milliseconds")): StreamingQuery =
-    registry.startLogging(containerId, trigger)
-
-  /** StartLogging with the reference's per-container option map
-    * (`src/config.rs:186-231`): bad options → Left(error string), the
-    * plugin protocol's `{"Err": msg}` contract.
-    */
-  def startLoggingWithOptions(
-      containerId: String,
-      options: Map[String, String]): Either[String, StreamingQuery] =
-    registry.startLoggingWithOptions(containerId, options)
+      options: Map[String, String] = Map.empty): Either[String, StreamingQuery] =
+    for {
+      _ <- Either.cond(Graft.ContainerId.matches(containerId), (),
+        s"invalid ContainerID \"$containerId\": not a single path segment")
+      s <- settings(options)
+    } yield active.get(containerId).filter(_.q.isActive) match {
+      // a crashed/terminated query must not shadow a restart
+      case Some(l) => l.q
+      case None =>
+        FsUtil.mkdirs(spark, stagingDir(containerId))
+        FsUtil.writeString(spark, optionsFile(containerId),
+          Graft.json.writeValueAsString(options.asJava))
+        val q = LogIngest.start(spark, stagingRoot, tableRoot,
+          s"$checkpointRoot/$containerId", s.trigger, Some(containerId), s.maxBytesPerTrigger)
+        active.put(containerId, new Logging(q, options))
+        q
+    }
 
   /** Staging directory a log shipper (or the wire-protocol adapter's FIFO
     * pump) writes framed bursts into for `containerId`.
     */
   def stagingDir(containerId: String): String = s"$stagingRoot/$containerId"
 
-  def stopLogging(containerId: String, deleteWhenStopped: Boolean = true): Unit =
-    registry.stopLogging(containerId, deleteWhenStopped)
+  /** StopLogging under the container's `delete_when_stopped` (its running
+    * options, else the kept ones, else the default true). Kept data
+    * includes what is already staged, e.g. the FIFO tail the pump flushes
+    * on StopLogging; deleting drops the container's rows, staging and
+    * checkpoint with its options (`src/statehandler.rs:167-183`). An id
+    * that [[startLogging]] refuses was never started: nothing to stop.
+    */
+  def stopLogging(containerId: String): Unit = {
+    if (!Graft.ContainerId.matches(containerId)) return
+    val running = active.remove(containerId)
+    val options = running.map(_.options).getOrElse(storedOptions(containerId))
+    val delete = settings(options).forall(_.deleteWhenStopped)
+    running.map(_.q).foreach { q =>
+      // a failed query keeps what is staged and checkpointed for the next start
+      if (!delete)
+        try q.processAllAvailable() catch { case _: StreamingQueryException => }
+      q.stop()
+    }
+    if (delete) {
+      // keeping the checkpoint would let replayState() resurrect a deleted
+      // container, and keeping the staging bursts would re-ingest the
+      // "deleted" data on a fresh start. Hadoop FileSystem, not java.nio:
+      // these roots live on object storage/HDFS at deployment scale.
+      FsUtil.deleteRecursively(spark, s"$tableRoot/container_id=$containerId")
+      FsUtil.deleteRecursively(spark, s"$checkpointRoot/$containerId")
+      FsUtil.deleteRecursively(spark, stagingDir(containerId))
+      // deleted files may still be in the shared listing cache
+      org.apache.spark.sql.graft.ColumnBridge.invalidateFileListing(spark)
+      if (FsUtil.isDirectory(spark, tableRoot))
+        spark.catalog.refreshByPath(tableRoot)
+    }
+  }
 
-  def replayState(): Seq[String] = registry.replayState()
+  /** Crash recovery: restart every container that has both a checkpoint
+    * and a staging dir (a backfill's checkpoint has no staging dir), with
+    * its kept options, or the defaults for a checkpoint kept without them.
+    * Returns the containers restarted.
+    */
+  def replayState(): Seq[String] =
+    FsUtil.listDirs(spark, checkpointRoot).map(_.getName)
+      .filter(id => FsUtil.isDirectory(spark, stagingDir(id)))
+      .flatMap(id => startLogging(id, storedOptions(id)).toOption.map(_ => id))
 
-  def activeContainers: Set[String] = registry.activeContainers
+  def activeContainers: Set[String] = active.keySet.toSet
 
-  def stopAll(): Unit = registry.stopAll()
+  /** Stop every ingest query, keeping data, checkpoints and options;
+    * bursts staged but not yet committed are ingested by the next start.
+    */
+  def stopAll(): Unit = active.keys.foreach(id => active.remove(id).foreach(_.q.stop()))
+
+  /** What a container's option map sets (merged over the reference's
+    * defaults): the micro-batch trigger (`message_read_timeout`), the
+    * batch byte budget (only when `max_size_per_tx` is given, see
+    * [[LogIngest.start]]) and whether StopLogging deletes its data.
+    */
+  private def settings(options: Map[String, String]): Either[String, Graft.Settings] =
+    LogConf.fromOptions(options).map(c => Graft.Settings(
+      Trigger.ProcessingTime(s"${c.messageReadTimeout.toMillis} milliseconds"),
+      if (options.contains("max_size_per_tx")) Some(c.maxSizePerTx) else None,
+      c.deleteWhenStopped))
+
+  private def optionsFile(containerId: String): String =
+    s"$checkpointRoot/$containerId/options.json"
+
+  /** The options `containerId` was last started with; none kept (a
+    * checkpoint written before options were kept) reads as the defaults.
+    */
+  private def storedOptions(containerId: String): Map[String, String] =
+    if (!FsUtil.exists(spark, optionsFile(containerId))) Map.empty
+    else Graft.json.readTree(FsUtil.readLines(spark, optionsFile(containerId)).mkString("\n"))
+      .properties.asScala.map(e => e.getKey -> e.getValue.asText).toMap
+
+  /** Stop every running ingest query, run `f`, restart each with the
+    * options it was started with. Retention's rewrite-and-swap must not
+    * race a concurrent appender: a file landing between the survivor
+    * snapshot and the directory swap would be deleted (its offsets are
+    * already checkpointed, so it would never be re-ingested).
+    */
+  private[graft] def quiesced[T](f: => T): T = {
+    val snapshot = active.toMap
+    snapshot.foreach { case (id, l) => l.q.stop(); active.remove(id) }
+    try f
+    finally snapshot.foreach { case (id, l) => startLogging(id, l.options) }
+  }
 
   // ---- reads (O4-O8) ------------------------------------------------------
 
@@ -192,15 +294,25 @@ final class Graft(
   // ---- retention / maintenance (O10-O13) ----------------------------------
 
   def cleanup(age: Option[java.time.Duration], maxLines: Option[Long]): Retention.SweepStats =
-    registry.quiesced {
+    quiesced {
       Retention.sweep(spark, tableRoot, age.map(a => Instant.now().minus(a)), maxLines)
     }
 
   def compact(targetBytes: Long = 128L << 20): Int =
-    registry.quiesced(Retention.compact(spark, tableRoot, targetBytes))
+    quiesced(Retention.compact(spark, tableRoot, targetBytes))
 }
 
 object Graft {
+  /** A ContainerID usable as one path segment (docker's are 64 hex chars):
+    * ids are pasted into the staging, checkpoint and table paths.
+    */
+  private val ContainerId = "[A-Za-z0-9][A-Za-z0-9_.-]*".r
+
+  private val json = new ObjectMapper()
+
+  private final case class Settings(
+      trigger: Trigger, maxBytesPerTrigger: Option[Long], deleteWhenStopped: Boolean)
+
   def apply(spark: SparkSession, root: String): Graft =
     new Graft(spark, s"$root/staging", s"$root/logs", s"$root/checkpoints")
 }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Filesystem plumbing for the maintenance paths (retention, compaction,
-  * registry delete), routed through Hadoop [[FileSystem]] — never
+  * StopLogging's delete), routed through Hadoop [[FileSystem]] — never
   * `java.nio` — so the same code runs on local disk, HDFS, and object
   * stores. The 100 TB deployment target is object storage; `java.nio`
   * only ever sees the driver's local disk.
@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   *    atomic. The swap stays correct (the shadow is fully written and
   *    fsync'd before the first rename) but a concurrent reader can observe
   *    a missing partition for the duration of the rename window. Runs
-  *    there should either quiesce readers (LogRegistry.quiesced already
+  *    there should either quiesce readers (Graft.quiesced already
   *    quiesces writers) or put an ACID table format under the log table;
   *    the swap is confined to [[Retention.swapDir]] so that substitution
   *    is one function.

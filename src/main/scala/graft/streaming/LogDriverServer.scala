@@ -7,10 +7,13 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+
 import graft.Graft
-import graft.functions.{LogConf, ProtoLogCodec}
+import graft.functions.ProtoLogCodec
 
 /** The reference's docker log-driver plugin wire protocol — HTTP/1.1 over
   * a unix socket (logsqlite `src/main.rs:97-110`) — served on top of the
@@ -19,15 +22,16 @@ import graft.functions.{LogConf, ProtoLogCodec}
   *
   *  - `POST /Plugin.Activate`          → `{"Implements": ["LogDriver"]}`
   *  - `POST /LogDriver.Capabilities`   → `{"Cap": {"ReadLogs": true}}`
-  *  - `POST /LogDriver.StartLogging`   → start ingest for
-  *    `Info.ContainerID`, per-container options from `Info.Config`
-  *    (`src/docker.rs:59-84`); bad options → `{"Err": msg}`.
+  *  - `POST /LogDriver.StartLogging`   → [[graft.Graft.startLogging]]
+  *    for `Info.ContainerID` with the per-container options in
+  *    `Info.Config` (`src/docker.rs:59-84`), then a pump from `File`
+  *    into the container's staging dir; a ContainerID that is not a
+  *    single path segment or bad options → `{"Err": msg}`.
   *  - `POST /LogDriver.StopLogging`    → resolved by FIFO path, the
   *    reference's keying (`src/docker.rs:86-109`; the fifo→container map
-  *    is the adapter's, as it is the StateHandler's there). Honours the
-  *    container's `delete_when_stopped` (default true): when false, the
-  *    FIFO's last lines are committed before the ingest stops, and data
-  *    and checkpoint stay for a later StartLogging.
+  *    is the adapter's, as it is the StateHandler's there): the pump
+  *    flushes the FIFO's tail, then [[graft.Graft.stopLogging]] keeps or
+  *    deletes the data per the container's `delete_when_stopped`.
   *  - `POST /LogDriver.ReadLogs`       → a stream of big-endian
   *    u32-length-prefixed protobuf LogEntry frames (`src/logger.rs:126`),
   *    honoring Since/Until (zero-time sentinels), Tail (<1 = all,
@@ -40,7 +44,8 @@ import graft.functions.{LogConf, ProtoLogCodec}
   * and ReadLogs iterates `toLocalIterator` so a large log range never
   * materializes on the adapter's heap. Requests missing a content-type
   * are treated as JSON, mirroring `normalize_dockerjson`
-  * (`src/main.rs:17-29`).
+  * (`src/main.rs:17-29`); bodies are parsed by Jackson, and trailing
+  * content or nesting past its default depth cap is a 400.
   */
 final class LogDriverServer(
     graft: Graft,
@@ -94,8 +99,7 @@ final class LogDriverServer(
     val req =
       try readRequest(conn)
       catch {
-        // StackOverflowError: deeply nested JSON in MiniJson's recursive parse
-        case e @ (NonFatal(_) | _: StackOverflowError) =>
+        case NonFatal(e) =>
           respond(conn, "400 Bad Request", "text/plain; charset=utf-8",
             s"bad request: ${e.getMessage}".getBytes(UTF_8))
           return
@@ -122,7 +126,7 @@ final class LogDriverServer(
     * Content-Length or JSON body, and on headers or a body over
     * `maxRequestBytes`.
     */
-  private def readRequest(conn: SocketChannel): (String, Any) = {
+  private def readRequest(conn: SocketChannel): (String, JsonNode) = {
     val head = new java.io.ByteArrayOutputStream()
     val one = ByteBuffer.allocate(1)
     // read byte-wise until CRLFCRLF (headers are tiny; body read in bulk)
@@ -154,8 +158,7 @@ final class LogDriverServer(
     while (body.hasRemaining)
       if (conn.read(body) < 0)
         throw new java.io.EOFException("truncated body")
-    val text = new String(body.array(), UTF_8)
-    (target(1), if (text.trim.isEmpty) Map.empty[String, Any] else MiniJson.parse(text))
+    (target(1), LogDriverServer.json.readTree(new String(body.array(), UTF_8)))
   }
 
   private def respond(conn: SocketChannel, status: String, ctype: String,
@@ -176,68 +179,46 @@ final class LogDriverServer(
 
   // ---- endpoints ----------------------------------------------------------
 
-  private def obj(v: Any): Map[String, Any] = v match {
-    case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-    case _ => Map.empty
-  }
+  /** A string field's value; "" when absent or not a string. */
+  private def str(v: JsonNode): String = Option(v.textValue).getOrElse("")
 
-  private def str(v: Any): String = v match {
-    case s: String => s
-    case _ => ""
-  }
+  private def respondErr(conn: SocketChannel, msg: String): Unit =
+    respondJson(conn, LogDriverServer.json.writeValueAsString(java.util.Map.of("Err", msg)))
 
-  private def startLogging(conn: SocketChannel, body: Any): Unit = {
-    val conf = obj(body)
-    val fifo = str(conf.getOrElse("File", ""))
-    val info = obj(conf.getOrElse("Info", Map.empty))
-    val containerId = str(info.getOrElse("ContainerID", ""))
-    val options = obj(info.getOrElse("Config", Map.empty))
-      .map { case (k, v) => k -> str(v) }
-    if (containerId.isEmpty) {
-      respondJson(conn, """{"Err":"missing ContainerID"}""")
-      return
-    }
-    // the ingest query lists this dir at analysis time — it must exist
-    // before the (asynchronous) pump first flushes into it
-    Files.createDirectories(java.nio.file.Paths.get(graft.stagingDir(containerId)))
-    graft.startLoggingWithOptions(containerId, options) match {
-      case Left(err) =>
-        respondJson(conn, s"""{"Err":${MiniJson.quote(err)}}""")
+  private def startLogging(conn: SocketChannel, body: JsonNode): Unit = {
+    val fifo = str(body.path("File"))
+    val info = body.path("Info")
+    val containerId = str(info.path("ContainerID"))
+    val options = info.path("Config").properties.asScala
+      .map(e => e.getKey -> str(e.getValue)).toMap
+    graft.startLogging(containerId, options) match {
+      case Left(err) => respondErr(conn, err)
       case Right(_) =>
         val pump = new FifoPump(java.nio.file.Paths.get(fifo),
           java.nio.file.Paths.get(graft.stagingDir(containerId)))
         pump.start()
-        // startLoggingWithOptions accepted these options: this parse succeeds
-        val deleteWhenStopped = LogConf.fromOptions(options).forall(_.deleteWhenStopped)
-        fifoToContainer.put(fifo,
-          LogDriverServer.Logging(containerId, pump, deleteWhenStopped))
-        respondJson(conn, """{"Err":""}""")
+        fifoToContainer.put(fifo, LogDriverServer.Logging(containerId, pump))
+        respondErr(conn, "")
     }
   }
 
-  private def stopLogging(conn: SocketChannel, body: Any): Unit = {
-    val fifo = str(obj(body).getOrElse("File", ""))
-    fifoToContainer.remove(fifo) match {
+  private def stopLogging(conn: SocketChannel, body: JsonNode): Unit = {
+    fifoToContainer.remove(str(body.path("File"))) match {
       case Some(l) =>
         l.pump.close() // drain + flush the fifo's tail before the last batch
-        graft.stopLogging(l.containerId, l.deleteWhenStopped)
+        graft.stopLogging(l.containerId)
       case None => // unknown fifo: the reference also answers Err:"" (no-op)
     }
-    respondJson(conn, """{"Err":""}""")
+    respondErr(conn, "")
   }
 
-  private def readLogs(conn: SocketChannel, body: Any): Unit = {
-    val root = obj(body)
-    val cfg = obj(root.getOrElse("Config", Map.empty))
-    val info = obj(root.getOrElse("Info", Map.empty))
-    val containerId = str(info.getOrElse("ContainerID", ""))
-    val since = cfg.get("Since").map(str).filter(_.nonEmpty)
-    val until = cfg.get("Until").map(str).filter(_.nonEmpty)
-    val tail = cfg.get("Tail") match {
-      case Some(d: Double) => d.toLong
-      case _ => 0L
-    }
-    val follow = cfg.get("Follow").contains(true)
+  private def readLogs(conn: SocketChannel, body: JsonNode): Unit = {
+    val cfg = body.path("Config")
+    val containerId = str(body.path("Info").path("ContainerID"))
+    val since = Some(str(cfg.path("Since"))).filter(_.nonEmpty)
+    val until = Some(str(cfg.path("Until"))).filter(_.nonEmpty)
+    val tail = cfg.path("Tail").asLong(0L)
+    val follow = cfg.path("Follow").booleanValue
 
     // resolve the range BEFORE streaming: an unreadable table (e.g. no
     // batch committed yet) answers the reference's pre-stream error shape
@@ -247,8 +228,7 @@ final class LogDriverServer(
       catch { case NonFatal(e) => Left(Option(e.getMessage).getOrElse(e.toString)) }
     val df = initial match {
       case Left(msg) =>
-        respondJson(conn,
-          s"""{"Err":${MiniJson.quote(s"[graft] Could not read logs: $msg")}}""")
+        respondErr(conn, s"[graft] Could not read logs: $msg")
         return
       case Right(d) => d
     }
@@ -280,11 +260,11 @@ final class LogDriverServer(
 }
 
 object LogDriverServer {
-  /** One StartLogging: the container, its FIFO's pump, and its parsed
-    * `delete_when_stopped` option.
-    */
-  private final case class Logging(
-      containerId: String, pump: FifoPump, deleteWhenStopped: Boolean)
+  /** One StartLogging: the container and its FIFO's pump. */
+  private final case class Logging(containerId: String, pump: FifoPump)
+
+  // plugin request bodies; `{"a":1} x` is malformed, not `{"a":1}`
+  private val json = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 }
 
 /** Reads the docker FIFO the daemon hands StartLogging and lands its
@@ -406,120 +386,4 @@ private[streaming] object FifoPump {
     */
   private def nextLifetime(): Long =
     lastLifetime.updateAndGet(last => math.max(last + 1, System.currentTimeMillis()))
-}
-
-/** Minimal JSON reader for the plugin protocol's small request bodies
-  * (objects/arrays/strings/numbers/bools/null; numbers as Double).
-  */
-private[streaming] object MiniJson {
-
-  def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  def parse(text: String): Any = {
-    val p = new P(text)
-    val v = p.value()
-    p.ws()
-    require(p.eof, s"trailing JSON content at ${p.pos}")
-    v
-  }
-
-  private final class P(s: String) {
-    var pos = 0
-    def eof: Boolean = pos >= s.length
-    def ws(): Unit = while (!eof && s.charAt(pos).isWhitespace) pos += 1
-    private def expect(c: Char): Unit = {
-      require(!eof && s.charAt(pos) == c, s"expected '$c' at $pos")
-      pos += 1
-    }
-    def value(): Any = {
-      ws()
-      require(!eof, "unexpected end of JSON")
-      s.charAt(pos) match {
-        case '{' => objValue()
-        case '[' => arrValue()
-        case '"' => strValue()
-        case 't' => lit("true", true)
-        case 'f' => lit("false", false)
-        case 'n' => lit("null", null)
-        case _ => numValue()
-      }
-    }
-    private def lit(word: String, v: Any): Any = {
-      require(s.startsWith(word, pos), s"bad literal at $pos")
-      pos += word.length
-      v
-    }
-    private def objValue(): Map[String, Any] = {
-      expect('{'); ws()
-      val b = Map.newBuilder[String, Any]
-      if (!eof && s.charAt(pos) == '}') { pos += 1; return b.result() }
-      var more = true
-      while (more) {
-        ws()
-        val k = strValue()
-        ws(); expect(':')
-        b += k -> value()
-        ws()
-        if (!eof && s.charAt(pos) == ',') pos += 1 else more = false
-      }
-      expect('}')
-      b.result()
-    }
-    private def arrValue(): List[Any] = {
-      expect('['); ws()
-      val b = List.newBuilder[Any]
-      if (!eof && s.charAt(pos) == ']') { pos += 1; return b.result() }
-      var more = true
-      while (more) {
-        b += value()
-        ws()
-        if (!eof && s.charAt(pos) == ',') pos += 1 else more = false
-      }
-      expect(']')
-      b.result()
-    }
-    private def strValue(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (s.charAt(pos) != '"') {
-        val c = s.charAt(pos)
-        if (c == '\\') {
-          pos += 1
-          s.charAt(pos) match {
-            case '"' => sb += '"'
-            case '\\' => sb += '\\'
-            case '/' => sb += '/'
-            case 'b' => sb += '\b'
-            case 'f' => sb += '\f'
-            case 'n' => sb += '\n'
-            case 'r' => sb += '\r'
-            case 't' => sb += '\t'
-            case 'u' =>
-              sb += Integer.parseInt(s.substring(pos + 1, pos + 5), 16).toChar
-              pos += 4
-            case c2 => throw new IllegalArgumentException(s"bad escape \\$c2")
-          }
-        } else sb += c
-        pos += 1
-      }
-      pos += 1
-      sb.toString
-    }
-    private def numValue(): Double = {
-      val start = pos
-      if (!eof && (s.charAt(pos) == '-' || s.charAt(pos) == '+')) pos += 1
-      while (!eof && (s.charAt(pos).isDigit || "eE+-.".indexOf(s.charAt(pos)) >= 0))
-        pos += 1
-      s.substring(start, pos).toDouble
-    }
-  }
 }

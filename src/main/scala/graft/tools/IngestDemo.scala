@@ -3,15 +3,15 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
+import graft.Graft
 import graft.functions.ProtoLogCodec
 import graft.functions.ProtoLogCodec.LogEntry
 import graft.operators.LogOps
-import graft.streaming.{LogIngest, LogRegistry, Retention}
+import graft.streaming.LogIngest
 
 /** Runnable demo of the full reference lifecycle: framed-protobuf bursts →
-  * streaming ingest → range/tail read → retention sweep → registry replay.
+  * streaming ingest → range/tail read → retention sweep.
   * Usage: sbt "runMain graft.tools.IngestDemo"
   */
 object IngestDemo {
@@ -19,7 +19,7 @@ object IngestDemo {
     val spark = graft.LocalSession()
 
     val base = Files.createTempDirectory("graft-demo").toString
-    val (staging, table, ckpt) = (s"$base/staging", s"$base/logs", s"$base/ckpt")
+    val (staging, table) = (s"$base/staging", s"$base/logs")
     val t0 = 1700000000000000000L
 
     // two containers' bursts land in staging (what a FIFO shipper produces)
@@ -33,9 +33,8 @@ object IngestDemo {
       Files.write(dir.resolve("burst0.pblog"), bytes)
     }
 
-    val reg = new LogRegistry(spark, staging, table, ckpt)
-    Seq("web-1", "db-1").foreach(c =>
-      reg.startLogging(c, Trigger.AvailableNow()).awaitTermination(60000))
+    val g = Graft(spark, base)
+    Seq("web-1", "db-1").foreach(c => g.startLogging(c).foreach(_.processAllAvailable()))
     val df = LogIngest.table(spark, table)
     println(s"[demo] ingested rows = ${df.count()} (expect 160)")
     df.groupBy("container_id").count().show()
@@ -51,12 +50,12 @@ object IngestDemo {
     read.select("seq", "source", "line").show(truncate = false)
 
     // retention: keep 20 newest lines per container
-    val stats = Retention.sweep(spark, table, None, Some(20L))
+    val stats = g.cleanup(age = None, maxLines = Some(20L))
     val after = LogIngest.table(spark, table)
     println(s"[demo] retention dropped ${stats.dropped} / rewrote ${stats.rewritten} " +
       s"partitions; rows now = ${after.count()} (expect 40)")
 
-    reg.stopAll()
+    g.stopAll()
     spark.stop()
   }
 }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.functions.ProtoLogCodec
 import graft.functions.ProtoLogCodec.LogEntry
 
@@ -24,13 +22,23 @@ class GraftSpec extends SparkSpec {
     Files.write(dir.resolve(s"b$offset.pblog"), bytes)
   }
 
+  /** StartLogging `container` with `options` and wait until everything
+    * staged for it so far is committed.
+    */
+  private def ingest(g: Graft, container: String,
+      options: Map[String, String] = Map.empty): Unit = {
+    val q = g.startLogging(container, options)
+    assert(q.isRight, q)
+    q.foreach(_.processAllAvailable())
+  }
+
   test("start → read (since/tail) → cleanup → stop lifecycle") {
     val root = Files.createTempDirectory("graft-facade").toString
     val g = Graft(spark, root)
 
     stage(root, "web", 30)
 
-    g.startLogging("web", Trigger.AvailableNow()).awaitTermination(60000)
+    ingest(g, "web")
     assert(g.activeContainers === Set("web"))
     assert(g.countLogs("web") === 30)
 
@@ -45,7 +53,7 @@ class GraftSpec extends SparkSpec {
     assert(g.cleanup(age = None, maxLines = Some(10L)).total === 1)
     assert(g.countLogs("web") === 10)
 
-    g.stopLogging("web", deleteWhenStopped = true)
+    g.stopLogging("web") // delete_when_stopped defaults to true
     assert(g.activeContainers.isEmpty)
     assert(!Files.exists(Paths.get(root, "logs", "container_id=web")))
     // table remains readable after the partition delete (listing cache
@@ -59,8 +67,8 @@ class GraftSpec extends SparkSpec {
     val g = Graft(spark, root)
     stage(root, "a", 10)
     stage(root, "b", 20)
-    g.startLogging("a", Trigger.AvailableNow()).awaitTermination(60000)
-    g.startLogging("b", Trigger.AvailableNow()).awaitTermination(60000)
+    ingest(g, "a")
+    ingest(g, "b")
     assert(g.countLogs("a") === 10)
     assert(g.countLogs("b") === 20)
     assert(g.logs.count() === 30)
@@ -71,7 +79,7 @@ class GraftSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-facade3").toString
     val g = Graft(spark, root)
     stage(root, "web", 5)
-    g.startLogging("web", Trigger.AvailableNow()).awaitTermination(60000)
+    ingest(g, "web")
     // migrated history from the json-file era of a second container
     val jdir = Paths.get(root, "jsonfile", "old")
     Files.createDirectories(jdir)
@@ -112,7 +120,7 @@ class GraftSpec extends SparkSpec {
     val g = Graft(spark, root)
     // 1. framed protobuf (the reference's plugin stream)
     stage(root, "proto", 4)
-    g.startLogging("proto", Trigger.AvailableNow()).awaitTermination(60000)
+    ingest(g, "proto")
     // 2. docker json-file
     val jdir = Paths.get(root, "jsonfile", "jf")
     Files.createDirectories(jdir)
@@ -157,5 +165,31 @@ class GraftSpec extends SparkSpec {
     val g = Graft(spark, Files.createTempDirectory("graft-empty").toString)
     assert(g.cleanup(Some(java.time.Duration.ofDays(1)), Some(10L)).total === 0)
     assert(g.compact() === 0)
+  }
+
+  test("replay restarts the kept containers with their options, never a backfill") {
+    val root = Files.createTempDirectory("graft-replay").toString
+    val g = Graft(spark, root)
+    ingest(g, "c1", Map("delete_when_stopped" -> "false",
+      "max_size_per_tx" -> "1k", "message_read_timeout" -> "50"))
+    g.stopLogging("c1") // kept: data, checkpoint, options
+    val jdir = Paths.get(root, "jsonfile", "old")
+    Files.createDirectories(jdir)
+    Files.write(jdir.resolve("hist.log"),
+      """{"log":"old 0\n","stream":"stdout","time":"2023-11-14T22:13:20.5Z"}""".getBytes("UTF-8"))
+    g.backfillJsonFile(s"$root/jsonfile").awaitTermination(60000)
+    // six ~2 KiB bursts staged while c1 is down: under its 1 KiB budget the
+    // replayed query takes one per batch; without it, all six in one
+    (0 until 6).foreach(b => stage(root, "c1", 60, b * 60))
+
+    val g2 = Graft(spark, root) // a fresh process over the same root
+    try {
+      assert(g2.replayState() === Seq("c1"))
+      assert(g2.activeContainers === Set("c1"))
+      val q = g2.startLogging("c1").toOption.get // the replayed, running query
+      q.processAllAvailable()
+      assert(g2.countLogs("c1") === 360)
+      assert(q.recentProgress.count(_.numInputRows > 0) >= 6)
+    } finally g2.stopAll()
   }
 }

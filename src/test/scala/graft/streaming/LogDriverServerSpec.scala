@@ -6,6 +6,8 @@ import java.nio.channels.SocketChannel
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.{Graft, SparkSpec}
 import graft.functions.ProtoLogCodec
 import graft.functions.ProtoLogCodec.LogEntry
@@ -304,6 +306,9 @@ class LogDriverServerSpec extends SparkSpec {
     }
   }
 
+  private def withBody(path: String, body: String): String =
+    s"POST $path HTTP/1.1\r\nContent-Length: ${body.getBytes(UTF_8).length}\r\n\r\n$body"
+
   test("malformed requests get 400 and the server keeps serving") {
     val root = Files.createTempDirectory("graft-wire6").toString
     val sock = Paths.get(root, "graft.sock")
@@ -315,7 +320,11 @@ class LogDriverServerSpec extends SparkSpec {
         "POST /Plugin.Activate HTTP/1.1\r\nContent-Length: abc\r\n\r\n",
         "POST /LogDriver.ReadLogs HTTP/1.1\r\nContent-Length: -5\r\n\r\n",
         "POST /LogDriver.ReadLogs HTTP/1.1\r\nContent-Length: 2147483647\r\n\r\n",
-        "POST /LogDriver.StartLogging HTTP/1.1\r\nContent-Length: 9\r\n\r\n{\"File\": ")
+        "POST /LogDriver.StartLogging HTTP/1.1\r\nContent-Length: 9\r\n\r\n{\"File\": ",
+        // nested past the JSON parser's depth cap
+        withBody("/LogDriver.ReadLogs", "[" * 100000),
+        // a complete object followed by trailing content
+        withBody("/LogDriver.StopLogging", """{"File": "f"} x"""))
       for (r <- requests) {
         val response = new String(raw(sock, r.getBytes(UTF_8)), UTF_8)
         assert(response.startsWith("HTTP/1.1 400 Bad Request\r\n"), r)
@@ -340,12 +349,13 @@ class LogDriverServerSpec extends SparkSpec {
       p.join(30000)
       assert(!p.isAlive)
     }
+    val keep = Map("delete_when_stopped" -> "false")
     try {
-      g.startLogging("c1")
+      assert(g.startLogging("c1", keep).isRight)
       pump("a.fifo", 0 until 5)
       awaitCommitted(root, g, 5)
-      g.stopLogging("c1", deleteWhenStopped = false) // data + checkpoint stay
-      g.startLogging("c1")
+      g.stopLogging("c1") // data + checkpoint stay
+      assert(g.startLogging("c1", keep).isRight)
       // the new pump's first burst must not reuse a staged path the
       // checkpointed source has already seen
       pump("b.fifo", 5 until 10)
@@ -411,5 +421,36 @@ class LogDriverServerSpec extends SparkSpec {
       assert(err.startsWith("""{"Err":""""))
       assert(err !== """{"Err":""}""")
     } finally server.stop()
+  }
+
+  test("a ContainerID that is not one path segment gets Err and touches nothing") {
+    val outer = Files.createTempDirectory("graft-wire10")
+    val root = outer.resolve("root").toString
+    val sock = outer.resolve("graft.sock")
+    val g = Graft(spark, root)
+    val server = new LogDriverServer(g, sock)
+    server.start()
+    try {
+      for (id <- Seq("../../escaped", "a/../../../escaped", "..", ".", "a/b", "")) {
+        val fifo = outer.resolve("x.fifo")
+        Files.write(fifo, burst(0 until 1))
+        val req = s"""{"File": "$fifo", "Info": {"Config": {}, "ContainerID": "$id"}}"""
+        val err = jsonStr(post(sock, "/LogDriver.StartLogging", req))
+        assert(err.startsWith("""{"Err":""""), id)
+        assert(err !== """{"Err":""}""", id)
+        // the fifo was never registered: StopLogging is the no-op
+        assert(jsonStr(post(sock, "/LogDriver.StopLogging", s"""{"File": "$fifo"}""")) ===
+          """{"Err":""}""", id)
+        g.stopLogging(id) // nothing was started under this id: nothing to delete
+      }
+      assert(g.activeContainers.isEmpty)
+      // without the check, "../../escaped" would resolve to outer/escaped
+      val outside = Files.list(outer)
+      try assert(outside.iterator().asScala.map(_.getFileName.toString).toSet --
+        Set("root", "graft.sock", "x.fifo") === Set.empty) finally outside.close()
+    } finally {
+      server.stop()
+      g.stopAll()
+    }
   }
 }

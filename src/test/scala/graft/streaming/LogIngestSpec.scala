@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.{Graft, SparkSpec}
 import graft.functions.ProtoLogCodec
 import graft.functions.ProtoLogCodec.{LogEntry, PartialMeta}
 
@@ -351,15 +351,15 @@ class LogIngestSpec extends SparkSpec {
   test("per-container options drive the ingest query (config -> engine)") {
     val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
     writeBurst(staging, "c5", "b0", (0 until 8).map(entry(_, "c5")))
-    val reg = new LogRegistry(spark, staging, table, ckpt)
+    val reg = new Graft(spark, staging, table, ckpt)
     // valid options: tiny byte budget still ingests everything (over more batches)
-    val q = reg.startLoggingWithOptions("c5", Map(
+    val q = reg.startLogging("c5", Map(
       "max_size_per_tx" -> "1k", "message_read_timeout" -> "50"))
     assert(q.isRight)
     eventually(30000)(assert(LogIngest.table(spark, table).count() === 8))
     reg.stopAll()
     // invalid options are rejected with the reference's error, not started
-    val bad = reg.startLoggingWithOptions("c6", Map("cleanup_age" -> "oops"))
+    val bad = reg.startLogging("c6", Map("cleanup_age" -> "oops"))
     assert(bad.isLeft)
     assert(reg.activeContainers === Set.empty)
   }
@@ -367,8 +367,8 @@ class LogIngestSpec extends SparkSpec {
   test("retention restarts a container with its byte budget (max_size_per_tx)") {
     val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
     Files.createDirectories(Paths.get(staging, "cq"))
-    val reg = new LogRegistry(spark, staging, table, ckpt)
-    assert(reg.startLoggingWithOptions("cq", Map(
+    val reg = new Graft(spark, staging, table, ckpt)
+    assert(reg.startLogging("cq", Map(
       "max_size_per_tx" -> "1k", "message_read_timeout" -> "50")).isRight)
     try {
       // six bursts of ~1.6 KiB staged while retention holds the query
@@ -379,7 +379,7 @@ class LogIngestSpec extends SparkSpec {
           writeBurst(staging, "cq", s"b$b", (b * 40 until (b + 1) * 40).map(entry(_, "cq")))
         }
       }
-      val q = reg.startLogging("cq") // the restarted query
+      val q = reg.startLogging("cq").toOption.get // the restarted, running query
       eventually(30000) {
         assert(LogIngest.table(spark, table).count() === 240)
         assert(q.recentProgress.count(_.numInputRows > 0) >= 6)
@@ -390,24 +390,28 @@ class LogIngestSpec extends SparkSpec {
   test("registry: start/stop/replay lifecycle with delete-when-stopped") {
     val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
     writeBurst(staging, "c9", "b0", (0 until 5).map(entry(_, "c9")))
-    val reg = new LogRegistry(spark, staging, table, ckpt)
-    val q = reg.startLogging("c9", Trigger.AvailableNow())
-    q.awaitTermination(60000)
+    val reg = new Graft(spark, staging, table, ckpt)
+    val q = reg.startLogging("c9", Map("delete_when_stopped" -> "false"))
+    q.foreach(_.processAllAvailable())
     assert(reg.activeContainers === Set("c9"))
     assert(LogIngest.table(spark, table).count() === 5)
 
     // stop WITHOUT delete keeps data + recovery state: a crashed process's
     // replacement resumes every container from checkpoints alone
-    reg.stopLogging("c9", deleteWhenStopped = false)
+    reg.stopLogging("c9")
     assert(reg.activeContainers === Set.empty)
-    val reg2 = new LogRegistry(spark, staging, table, ckpt)
+    val reg2 = new Graft(spark, staging, table, ckpt)
     assert(reg2.replayState() === Seq("c9"))
     reg2.stopAll()
+    // a stopped container's StopLogging still follows its kept options
+    reg2.stopLogging("c9")
+    assert(Files.exists(Paths.get(table, "container_id=c9")))
 
     // stop WITH delete drops data AND recovery state (statehandler.rs:167-183)
-    reg2.stopLogging("c9", deleteWhenStopped = true)
+    assert(reg2.startLogging("c9", Map("delete_when_stopped" -> "true")).isRight)
+    reg2.stopLogging("c9")
     assert(!Files.exists(Paths.get(table, "container_id=c9")))
-    val reg3 = new LogRegistry(spark, staging, table, ckpt)
+    val reg3 = new Graft(spark, staging, table, ckpt)
     assert(reg3.replayState() === Nil)
   }
 
