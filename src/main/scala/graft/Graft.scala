@@ -1,6 +1,7 @@
 package graft
 
 import java.time.Instant
+import java.util.concurrent.TimeUnit
 
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -48,6 +49,11 @@ final class Graft(
 
   private val active = TrieMap.empty[String, Logging]
 
+  /** Each logging container's commits, which its followers wait on, from
+    * StartLogging to its stop; retention's restart keeps them.
+    */
+  private val followed = TrieMap.empty[String, Graft.Commits]
+
   // ---- lifecycle (SURVEY §2.1 O1-O3, O14-O16) -----------------------------
 
   /** StartLogging with the reference's per-container option map
@@ -72,8 +78,10 @@ final class Graft(
         FsUtil.mkdirs(spark, stagingDir(containerId))
         FsUtil.writeString(spark, optionsFile(containerId),
           Graft.json.writeValueAsString(options.asJava))
+        val commits = followed.getOrElseUpdate(containerId, new Graft.Commits)
         val q = LogIngest.start(spark, stagingRoot, tableRoot,
-          s"$checkpointRoot/$containerId", s.trigger, Some(containerId), s.maxBytesPerTrigger)
+          s"$checkpointRoot/$containerId", s.trigger, Some(containerId), s.maxBytesPerTrigger,
+          onCommit = () => commits.committed())
         active.put(containerId, new Logging(q, options))
         q
     }
@@ -87,8 +95,9 @@ final class Graft(
     * options, else the kept ones, else the default true). Kept data
     * includes what is already staged, e.g. the FIFO tail the pump flushes
     * on StopLogging; deleting drops the container's rows, staging and
-    * checkpoint with its options (`src/statehandler.rs:167-183`). An id
-    * that [[startLogging]] refuses was never started: nothing to stop.
+    * checkpoint with its options (`src/statehandler.rs:167-183`). Its
+    * followers then end, after a last read. An id that [[startLogging]]
+    * refuses was never started: nothing to stop.
     */
   def stopLogging(containerId: String): Unit = {
     if (!Graft.ContainerId.matches(containerId)) return
@@ -114,6 +123,7 @@ final class Graft(
       if (FsUtil.isDirectory(spark, tableRoot))
         spark.catalog.refreshByPath(tableRoot)
     }
+    followed.remove(containerId).foreach(_.stop())
   }
 
   /** Crash recovery: restart every container that has both a checkpoint
@@ -130,8 +140,12 @@ final class Graft(
 
   /** Stop every ingest query, keeping data, checkpoints and options;
     * bursts staged but not yet committed are ingested by the next start.
+    * Every follower ends, after a last read.
     */
-  def stopAll(): Unit = active.keys.foreach(id => active.remove(id).foreach(_.q.stop()))
+  def stopAll(): Unit = {
+    active.keys.foreach(id => active.remove(id).foreach(_.q.stop()))
+    followed.keys.foreach(id => followed.remove(id).foreach(_.stop()))
+  }
 
   /** What a container's option map sets (merged over the reference's
     * defaults): the micro-batch trigger (`message_read_timeout`), the
@@ -156,10 +170,11 @@ final class Graft(
       .properties.asScala.map(e => e.getKey -> e.getValue.asText).toMap
 
   /** Stop every running ingest query, run `f`, restart each with the
-    * options it was started with. Retention's rewrite-and-swap must not
-    * race a concurrent appender: a file landing between the survivor
-    * snapshot and the directory swap would be deleted (its offsets are
-    * already checkpointed, so it would never be re-ingested).
+    * options it was started with; followers keep following. Retention's
+    * rewrite-and-swap must not race a concurrent appender: a file landing
+    * between the survivor snapshot and the directory swap would be deleted
+    * (its offsets are already checkpointed, so it would never be
+    * re-ingested).
     */
   private[graft] def quiesced[T](f: => T): T = {
     val snapshot = active.toMap
@@ -198,34 +213,44 @@ final class Graft(
 
   // ---- follow mode (O9) ---------------------------------------------------
 
-  /** `docker logs --follow` past the lines a caller already has: the
-    * reference's cursor poll (`src/logger.rs:287-288,398-453`). Every
-    * `pollMs` it re-issues the request's own [[readLogs]] range (container,
-    * `since`, `until`; follow ignores tail) with `seq > cursor` added,
-    * hands each new line's seq and encoded LogEntry to `emit` in seq order,
-    * and advances the cursor to the last seq emitted. Blocks the calling
-    * thread until `idlePolls` polls in a row find nothing (the reference
-    * gives up after 3600 empty 1 s polls) or `emit` throws.
+  /** `docker logs --follow` past the lines a caller already has: re-issues
+    * the request's own [[readLogs]] range (container, `since`, `until`;
+    * follow ignores tail) with `seq > cursor` added, hands each new line's
+    * seq and encoded LogEntry to `emit` in seq order, and advances the
+    * cursor to the last seq emitted. `after` is the cursor's start: the
+    * seq of the last line the caller has already emitted, e.g. from its
+    * initial [[readLogs]].
     *
-    * `after` is the cursor's start: the seq of the last line the caller
-    * has already emitted, e.g. from its initial [[readLogs]].
+    * The first read runs at once (a commit may have landed since the
+    * caller's read); each later one waits for the container's next commit
+    * and starts at least 1 s after the previous read ended, the reference's
+    * poll cadence (`src/logger.rs:287-288`). Blocks until the container
+    * stops (a last read then delivers what was committed before the stop),
+    * at once if it was not logging, after 3600 s with no line emitted (the
+    * reference's 3600 empty 1 s polls), or when `emit` throws. Retention's
+    * restart ([[quiesced]]) does not end it.
     */
   def follow(
-      containerId: Option[String],
+      containerId: String,
       since: Option[String] = None,
       until: Option[String] = None,
-      after: Long = Long.MinValue,
-      pollMs: Long = 1000L,
-      idlePolls: Int = 3600)(
+      after: Long = Long.MinValue)(
       emit: (Long, Array[Byte]) => Unit): Unit = {
+    val commits = followed.getOrElse(containerId, new Graft.Commits(stopped = true))
     var cursor = after
-    var idle = 0
-    while (idle < idlePolls) {
-      Thread.sleep(pollMs)
-      val before = cursor
-      frames(readLogs(containerId, since, until, follow = true).where(col("seq") > cursor))
-        .foreach { case (seq, message) => emit(seq, message); cursor = seq }
-      idle = if (cursor == before) idle + 1 else 0
+    var lastLine = System.nanoTime()
+    var open = true
+    while (open) {
+      // count first: a stop after it is seen now or wakes the next read
+      val seen = commits.count
+      val last = commits.stopped
+      frames(readLogs(Some(containerId), since, until, follow = true).where(col("seq") > cursor))
+        .foreach { case (seq, message) =>
+          emit(seq, message); cursor = seq; lastLine = System.nanoTime()
+        }
+      val readEnd = System.nanoTime()
+      open = !last && commits.await(seen, lastLine + Graft.FollowIdleNanos) != seen
+      if (open) TimeUnit.NANOSECONDS.sleep(readEnd + Graft.FollowEveryNanos - System.nanoTime())
     }
   }
 
@@ -312,6 +337,29 @@ object Graft {
 
   private final case class Settings(
       trigger: Trigger, maxBytesPerTrigger: Option[Long], deleteWhenStopped: Boolean)
+
+  // the reference's follow cadence: a 1 s waker (FOLLOW_WAKETIME) that
+  // gives up after 3600 empty wakes (FOLLOW_COUNTER_MAX), logger.rs:287-288
+  private val FollowEveryNanos = TimeUnit.SECONDS.toNanos(1)
+  private val FollowIdleNanos = TimeUnit.SECONDS.toNanos(3600)
+
+  /** A logging container's count of committed batches, bumped once more by
+    * its stop: what its followers wait on.
+    */
+  private final class Commits(@volatile var stopped: Boolean = false) {
+    @volatile var count = 0L
+
+    def committed(): Unit = synchronized { count += 1; notifyAll() }
+
+    def stop(): Unit = synchronized { stopped = true; committed() }
+
+    /** The count once it passes `seen`, or at `deadline` (a `System.nanoTime`). */
+    def await(seen: Long, deadline: Long): Long = synchronized {
+      while (count == seen && deadline - System.nanoTime() > 0)
+        TimeUnit.NANOSECONDS.timedWait(this, deadline - System.nanoTime())
+      count
+    }
+  }
 
   def apply(spark: SparkSession, root: String): Graft =
     new Graft(spark, s"$root/staging", s"$root/logs", s"$root/checkpoints")

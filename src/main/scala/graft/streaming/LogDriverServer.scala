@@ -5,6 +5,8 @@ import java.nio.ByteBuffer
 import java.nio.channels.{ServerSocketChannel, SocketChannel}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
+import java.util.TimerTask
+import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -35,9 +37,10 @@ import graft.functions.ProtoLogCodec
   *  - `POST /LogDriver.ReadLogs`       → a stream of big-endian
   *    u32-length-prefixed protobuf LogEntry frames (`src/logger.rs:126`),
   *    honoring Since/Until (zero-time sentinels), Tail (<1 = all,
-  *    ignored under Follow) and Follow ([[graft.Graft.follow]]'s cursor
-  *    poll every `followPollMs`, idle give-up after `followIdlePolls`
-  *    empty polls — `src/logger.rs:287-288`).
+  *    ignored under Follow) and Follow ([[graft.Graft.follow]]: a read
+  *    after each of the container's commits, at most one a second; the
+  *    stream ends with the chunk terminator once the container stops, at
+  *    once when it was not logging, or after an hour with no line).
   *
   * Transport notes: one request per connection (`Connection: close`),
   * which every docker plugin client tolerates; responses stream chunked,
@@ -45,13 +48,11 @@ import graft.functions.ProtoLogCodec
   * materializes on the adapter's heap. Requests missing a content-type
   * are treated as JSON, mirroring `normalize_dockerjson`
   * (`src/main.rs:17-29`); bodies are parsed by Jackson, and trailing
-  * content or nesting past its default depth cap is a 400.
+  * content or nesting past its default depth cap is a 400. A request not
+  * read in full within `RequestDeadlineMs` has its connection closed; a
+  * response, a follow stream included, has no deadline.
   */
-final class LogDriverServer(
-    graft: Graft,
-    socketPath: Path,
-    followPollMs: Long = 1000L,
-    followIdlePolls: Int = 3600) {
+final class LogDriverServer(graft: Graft, socketPath: Path) {
 
   // fifo path → the container logging through it, exactly the reference
   // StateHandler's keying (it also resolves StopLogging by fifo path)
@@ -94,18 +95,30 @@ final class LogDriverServer(
   // ---- HTTP/1.1 over the socket -------------------------------------------
 
   private def handle(conn: SocketChannel): Unit = {
-    // a malformed request gets a 400 and the connection closes; the
-    // handler thread must not die without a reply
+    // a client that stalls mid-request must not hold this thread: closing
+    // the channel ends the blocked read. Whichever of the deadline and the
+    // parsed request comes first owns the connection.
+    val owned = new AtomicBoolean()
+    val deadline = new TimerTask {
+      def run(): Unit =
+        if (owned.compareAndSet(false, true)) try conn.close() catch { case NonFatal(_) => }
+    }
+    LogDriverServer.deadlines.schedule(deadline, LogDriverServer.RequestDeadlineMs)
     val req =
-      try readRequest(conn)
-      catch {
-        case NonFatal(e) =>
-          respond(conn, "400 Bad Request", "text/plain; charset=utf-8",
-            s"bad request: ${e.getMessage}".getBytes(UTF_8))
-          return
-      }
-    if (req == null) return
-    val (path, body) = req
+      try Right(readRequest(conn))
+      catch { case NonFatal(e) => Left(e) }
+    deadline.cancel()
+    if (!owned.compareAndSet(false, true)) return // past the deadline: closed
+    val (path, body) = req match {
+      // a malformed request gets a 400 and the connection closes; the
+      // handler thread must not die without a reply
+      case Left(e) =>
+        respond(conn, "400 Bad Request", "text/plain; charset=utf-8",
+          s"bad request: ${e.getMessage}".getBytes(UTF_8))
+        return
+      case Right(null) => return
+      case Right(r) => r
+    }
     path match {
       case "/Plugin.Activate" =>
         respondJson(conn, """{"Implements":["LogDriver"]}""")
@@ -244,8 +257,7 @@ final class LogDriverServer(
       var last = Long.MinValue
       graft.frames(df).foreach { case (seq, message) => writeFrame(message); last = seq }
       if (follow)
-        graft.follow(Some(containerId), since, until, last, followPollMs, followIdlePolls)(
-          (_, message) => writeFrame(message))
+        graft.follow(containerId, since, until, last)((_, message) => writeFrame(message))
       writeFully(conn, "0\r\n\r\n".getBytes(UTF_8))
     } catch {
       case NonFatal(_) => // client hung up mid-stream: stop following
@@ -265,6 +277,14 @@ object LogDriverServer {
 
   // plugin request bodies; `{"a":1} x` is malformed, not `{"a":1}`
   private val json = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** How long a client has to send its whole request. Plugin requests are
+    * under 1 KiB and the daemon sends each at once.
+    */
+  val RequestDeadlineMs = 5000L
+
+  /** One daemon thread closes the connections that miss the deadline. */
+  private val deadlines = new java.util.Timer("logdriver-request-deadline", true)
 }
 
 /** Reads the docker FIFO the daemon hands StartLogging and lands its

@@ -248,7 +248,8 @@ object LogIngest {
     * One path serves every wire format: the FIFO's framed protobuf is the
     * default (`*.pblog`, [[decodeBurst]]); the `graft.sources` text
     * formats pass `*.log` and their own `decodeBurst`. Decode is pure
-    * per-file work inside `flatMap`, no shuffle.
+    * per-file work inside `flatMap`, no shuffle. `onCommit` runs on the
+    * driver after each batch's [[commitBatch]] returns.
     *
     * The 100 ms processing-time trigger mirrors the reference's
     * burst-commit cadence; tests pass `Trigger.AvailableNow()` for
@@ -263,7 +264,8 @@ object LogIngest {
       containerId: Option[String] = None,
       maxBytesPerTrigger: Option[Long] = None,
       glob: String = "*.pblog",
-      decode: Decoder = decodeBurst): StreamingQuery = {
+      decode: Decoder = decodeBurst,
+      onCommit: () => Unit = () => ()): StreamingQuery = {
     import spark.implicits._
     // resolved on the driver, captured (serializable) by the decode closure
     val skipped = IngestMetrics.skippedFrames(spark)
@@ -312,6 +314,7 @@ object LogIngest {
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           commitBatch(batch, batchId, tableDir, namespace = commitNamespace(checkpointDir))
+          onCommit()
       }
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")

@@ -190,21 +190,6 @@ object Retention {
     todo.size
   }
 
-  /** Periodic sweep loop (reference default 600 s, `src/config.rs:180`) —
-    * driver-side scheduling like the reference's cleaner task.
-    */
-  def run(
-      spark: SparkSession,
-      tableDir: String,
-      ageCutoff: Option[java.time.Instant],
-      maxLines: Option[Long],
-      intervalMillis: Long,
-      rounds: Int): Unit =
-    (0 until rounds).foreach { _ =>
-      sweep(spark, tableDir, ageCutoff, maxLines)
-      Thread.sleep(intervalMillis)
-    }
-
   // ---- plumbing ------------------------------------------------------------
 
   private def datePartition(

@@ -129,16 +129,52 @@ class LogDriverServerSpec extends SparkSpec {
     assert(committed() === n)
   }
 
-  /** A follow ReadLogs in its own thread; the result holds its lines once
-    * the stream ends.
+  /** A follow ReadLogs in its own thread; the result holds the raw
+    * response once the stream ends.
     */
   private def followInBackground(sock: java.nio.file.Path, req: String)
-      : (Thread, java.util.concurrent.atomic.AtomicReference[Seq[String]]) = {
-    val collector = new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-    val reader = new Thread(() => collector.set(
-      decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", req)))))
+      : (Thread, java.util.concurrent.atomic.AtomicReference[Array[Byte]]) = {
+    val response = new java.util.concurrent.atomic.AtomicReference[Array[Byte]]()
+    val reader = new Thread(() => response.set(post(sock, "/LogDriver.ReadLogs", req)))
     reader.start()
-    (reader, collector)
+    (reader, response)
+  }
+
+  private val keep = """{"delete_when_stopped": "false"}"""
+
+  private def stopC1(sock: java.nio.file.Path, fifo: java.nio.file.Path): Unit =
+    assert(jsonStr(post(sock, "/LogDriver.StopLogging",
+      s"""{"File": "$fifo"}""")) === """{"Err":""}""")
+
+  /** StopLogging ends the follow stream: it must close with the chunk
+    * terminator, having streamed `lines` once each, in order.
+    */
+  private def stopEndsFollow(sock: java.nio.file.Path, fifo: java.nio.file.Path,
+      reader: Thread, response: java.util.concurrent.atomic.AtomicReference[Array[Byte]],
+      lines: Seq[String]): Unit = {
+    assert(reader.isAlive, "follow stream must stay open while the container logs")
+    stopC1(sock, fifo)
+    reader.join(30000)
+    assert(!reader.isAlive, "follow stream must end at StopLogging")
+    assert(new String(response.get(), UTF_8).endsWith("\r\n0\r\n\r\n"),
+      "follow stream must end with the chunk terminator")
+    assert(decodedLines(bodyOf(response.get())) === lines)
+  }
+
+  /** Stage `bytes` as one burst of c1, renamed into place so the running
+    * ingest query never sees half of it.
+    */
+  private def stage(g: Graft, name: String, bytes: Array[Byte]): Unit = {
+    val dir = Paths.get(g.stagingDir("c1"))
+    val tmp = Files.write(dir.resolve(s"$name.tmp"), bytes)
+    Files.move(tmp, dir.resolve(s"$name.pblog"), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Bytes staged for c1 so far (staged bursts are kept after their commit). */
+  private def stagedBytes(g: Graft): Long = {
+    val files = Files.list(Paths.get(g.stagingDir("c1")))
+    try files.iterator().asScala.filter(_.toString.endsWith(".pblog")).map(Files.size).sum
+    finally files.close()
   }
 
   test("Activate / Capabilities / fallback speak the recorded shapes") {
@@ -159,36 +195,46 @@ class LogDriverServerSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-wire1").toString
     val sock = Paths.get(root, "graft.sock")
     val g = Graft(spark, root)
-    val server = new LogDriverServer(g, sock,
-      followPollMs = 200L, followIdlePolls = 4)
+    val server = new LogDriverServer(g, sock)
     server.start()
+    // the FIFO docker hands the driver: a framed protobuf stream whose
+    // writer stays open until the container exits
+    val fifo = Paths.get(root, "c1.fifo")
+    assert(new ProcessBuilder("mkfifo", fifo.toString).start().waitFor() === 0)
     try {
-      // the "fifo" docker hands the driver — a framed protobuf stream
-      val fifo = Paths.get(root, "c1.fifo")
-      Files.write(fifo, burst(0 until 5))
-      startC1(sock, fifo)
-      // pump lands the fifo into staging; the 100 ms ingest commits it
-      awaitCommitted(root, g, 5)
+      startC1(sock, fifo, keep)
+      val writer = new java.io.FileOutputStream(fifo.toFile) // opens once the pump reads
+      val (reader, response) = try {
+        writer.write(burst(0 until 5))
+        writer.flush()
+        // pump lands the fifo into staging; the 100 ms ingest commits it
+        awaitCommitted(root, g, 5)
 
-      val lines = decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", readReq(false))))
-      assert(lines === (0 until 5).map(i => s"wire $i\n"))
+        val lines = decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", readReq(false))))
+        assert(lines === (0 until 5).map(i => s"wire $i\n"))
 
-      // tail applies when not following
-      assert(decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", readReq(false, tail = 2))))
-        === Seq("wire 3\n", "wire 4\n"))
+        // tail applies when not following
+        assert(decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", readReq(false, tail = 2))))
+          === Seq("wire 3\n", "wire 4\n"))
 
-      // follow: a late burst staged while the stream is open must be
-      // emitted before the idle give-up closes it
-      val (reader, collector) = followInBackground(sock, readReq(true))
-      Thread.sleep(400) // initial batch emitted, stream idling
-      Files.write(Paths.get(g.stagingDir("c1")).resolve("late.pblog"), burst(5 until 8))
-      reader.join(30000)
-      assert(!reader.isAlive, "follow stream must give up after idle polls")
-      assert(collector.get() === (0 until 8).map(i => s"wire $i\n"))
+        // follow: a late burst committed while the stream is open is emitted
+        val follower = followInBackground(sock, readReq(true))
+        Thread.sleep(400) // initial batch emitted, stream waiting
+        writer.write(burst(5 until 8))
+        writer.flush()
+        awaitCommitted(root, g, 8)
+        // the container's last lines, then it exits: the pump lands the
+        // FIFO's tail at EOF
+        writer.write(burst(8 until 10))
+        follower
+      } finally writer.close()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (stagedBytes(g) < burst(0 until 10).length && System.nanoTime() < deadline)
+        Thread.sleep(20)
 
-      // StopLogging resolves by fifo path (docker.rs:88-91)
-      assert(jsonStr(post(sock, "/LogDriver.StopLogging",
-        s"""{"File": "$fifo"}""")) === """{"Err":""}""")
+      // StopLogging resolves by fifo path (docker.rs:88-91), commits the
+      // tail, and the follower's last read delivers it
+      stopEndsFollow(sock, fifo, reader, response, (0 until 10).map(i => s"wire $i\n"))
       assert(g.activeContainers.isEmpty)
     } finally {
       server.stop()
@@ -200,22 +246,21 @@ class LogDriverServerSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-wire3").toString
     val sock = Paths.get(root, "graft.sock")
     val g = Graft(spark, root)
-    val server = new LogDriverServer(g, sock, followPollMs = 200L, followIdlePolls = 15)
+    val server = new LogDriverServer(g, sock)
     server.start()
     try {
       val fifo = Paths.get(root, "c1.fifo")
       Files.write(fifo, burst(0 until 5))
-      startC1(sock, fifo)
+      startC1(sock, fifo, keep)
       awaitCommitted(root, g, 5)
       // Since lies past every committed line, so the initial read is empty;
-      // the polls must still apply Since and Until, not replay history
-      val (reader, collector) =
+      // the later reads must still apply Since and Until, not replay history
+      val (reader, response) =
         followInBackground(sock, readReq(true, since = at(10), until = at(21)))
       Thread.sleep(300)
-      Files.write(Paths.get(g.stagingDir("c1")).resolve("late.pblog"), burst(20 until 23))
-      reader.join(30000)
-      assert(!reader.isAlive, "follow stream must give up after idle polls")
-      assert(collector.get() === Seq("wire 20\n", "wire 21\n"))
+      stage(g, "late", burst(20 until 23))
+      awaitCommitted(root, g, 8)
+      stopEndsFollow(sock, fifo, reader, response, Seq("wire 20\n", "wire 21\n"))
     } finally {
       server.stop()
       g.stopAll()
@@ -226,7 +271,7 @@ class LogDriverServerSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-wire4").toString
     val sock = Paths.get(root, "graft.sock")
     val g = Graft(spark, root)
-    val server = new LogDriverServer(g, sock, followPollMs = 200L, followIdlePolls = 4)
+    val server = new LogDriverServer(g, sock)
     server.start()
     try {
       val fifo = Paths.get(root, "c1.fifo")
@@ -331,7 +376,67 @@ class LogDriverServerSpec extends SparkSpec {
       }
       assert(jsonStr(post(sock, "/Plugin.Activate", "")) ===
         """{"Implements":["LogDriver"]}""")
+
+      // 15 of 17 declared body bytes, the connection held open: the server
+      // closes it at the read deadline and serves other clients meanwhile
+      val held = SocketChannel.open(StandardProtocolFamily.UNIX)
+      try {
+        held.connect(UnixDomainSocketAddress.of(sock))
+        val short = """{"File": "abcde"""
+        assert(short.length === 15)
+        val req = ByteBuffer.wrap(
+          s"POST /LogDriver.StopLogging HTTP/1.1\r\nContent-Length: 17\r\n\r\n$short".getBytes(UTF_8))
+        while (req.hasRemaining) held.write(req)
+        val sent = System.nanoTime()
+        val answered = new java.util.concurrent.atomic.AtomicLong(-1)
+        val closedAfter = new java.util.concurrent.atomic.AtomicLong(-1)
+        val watcher = new Thread(() =>
+          try {
+            val buf = ByteBuffer.allocate(1024)
+            var n, total = 0
+            while ({ n = held.read(buf); n >= 0 }) { total += n; buf.clear() }
+            answered.set(total)
+            closedAfter.set((System.nanoTime() - sent) / 1000000)
+          } catch { case _: java.io.IOException => }) // closed by this test
+        watcher.start()
+        assert(jsonStr(post(sock, "/Plugin.Activate", "")) ===
+          """{"Implements":["LogDriver"]}""")
+        assert(watcher.isAlive, "the stalled request is held until its deadline")
+        watcher.join(LogDriverServer.RequestDeadlineMs + 10000)
+        assert(!watcher.isAlive, "the stalled request's connection must be closed")
+        assert(answered.get === 0) // closed, not answered
+        assert(closedAfter.get >= LogDriverServer.RequestDeadlineMs - 100)
+      } finally held.close()
+      assert(jsonStr(post(sock, "/Plugin.Activate", "")) ===
+        """{"Implements":["LogDriver"]}""")
     } finally server.stop()
+  }
+
+  test("a FIFO closed mid-frame lands each complete frame once and skips nothing") {
+    val root = Files.createTempDirectory("graft-wire11").toString
+    val sock = Paths.get(root, "graft.sock")
+    val g = Graft(spark, root)
+    val server = new LogDriverServer(g, sock)
+    server.start()
+    val skippedBefore = IngestMetrics.skippedFrames(spark).value
+    try {
+      // a regular file stands in for the FIFO: frames 0-4, then the first
+      // half of frame 5, then EOF
+      val fifo = Paths.get(root, "c1.fifo")
+      val torn = entryBytes(5)
+      Files.write(fifo, burst(0 until 5) ++ torn.take(torn.length / 2))
+      startC1(sock, fifo, keep)
+      awaitCommitted(root, g, 5)
+      stopC1(sock, fifo) // the pump has hit EOF; the stop commits all it staged
+      assert(stagedBytes(g) === burst(0 until 5).length) // the torn frame is never staged
+      assert(g.countLogs("c1") === 5)
+      assert(decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", readReq(false)))) ===
+        (0 until 5).map(i => s"wire $i\n"))
+      assert(IngestMetrics.skippedFrames(spark).value - skippedBefore === 0)
+    } finally {
+      server.stop()
+      g.stopAll()
+    }
   }
 
   test("a pump restarted on a kept checkpoint lands every line once, in order") {
@@ -372,10 +477,6 @@ class LogDriverServerSpec extends SparkSpec {
     val g = Graft(spark, root)
     val server = new LogDriverServer(g, sock)
     server.start()
-    val keep = """{"delete_when_stopped": "false"}"""
-    def stop(fifo: java.nio.file.Path): Unit =
-      assert(jsonStr(post(sock, "/LogDriver.StopLogging",
-        s"""{"File": "$fifo"}""")) === """{"Err":""}""")
     def readAll(): Seq[String] = decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs",
       readReq(false))))
     def awaitStaged(): Unit = {
@@ -391,7 +492,7 @@ class LogDriverServerSpec extends SparkSpec {
       Files.write(fifo1, burst(0 until 5))
       startC1(sock, fifo1, keep)
       awaitStaged() // the pump has read the FIFO; the ingest may not have run
-      stop(fifo1)   // commits what is staged, then stops; keeps everything
+      stopC1(sock, fifo1) // commits what is staged, then stops; keeps everything
       assert(g.activeContainers.isEmpty)
       assert(readAll() === (0 until 5).map(i => s"wire $i\n"))
 
@@ -399,7 +500,7 @@ class LogDriverServerSpec extends SparkSpec {
       Files.write(fifo2, burst(5 until 10))
       startC1(sock, fifo2, keep)
       awaitCommitted(root, g, 10)
-      stop(fifo2)
+      stopC1(sock, fifo2)
       assert(readAll() === (0 until 10).map(i => s"wire $i\n"))
     } finally {
       server.stop()

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -30,7 +32,9 @@ class LogIngestSpec extends SparkSpec {
     Files.createDirectories(dir)
     val bytes = entries.map(e => ProtoLogCodec.frame(ProtoLogCodec.encode(e)))
       .foldLeft(Array.emptyByteArray)(_ ++ _)
-    Files.write(dir.resolve(s"$burst.pblog"), bytes)
+    // renamed into place, so a running ingest query never sees half a burst
+    val tmp = Files.write(dir.resolve(s"$burst.tmp"), bytes)
+    Files.move(tmp, dir.resolve(s"$burst.pblog"), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   private def tmp(): String = Files.createTempDirectory("graft-ingest").toString
@@ -70,40 +74,102 @@ class LogIngestSpec extends SparkSpec {
     assert(LogIngest.table(spark, table).count() === 80)
   }
 
-  /** [[graft.Graft.follow]] over the spec's staging/table/checkpoint dirs,
-    * run in its own thread (it blocks until the idle give-up); collects
-    * every emitted seq.
+  private val keep = Map("delete_when_stopped" -> "false")
+
+  private def seqOf(i: Int): Long = t0 + i * 1000000000L
+
+  /** A Graft over fresh dirs with `lines` staged for c1 and committed by
+    * c1's running ingest query (under delete_when_stopped=false).
     */
-  private def following(staging: String, table: String, ckpt: String,
-      since: Option[String], pollMs: Long, idlePolls: Int)
+  private def logging(lines: Range): (Graft, String, String) = {
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    writeBurst(staging, "c1", "b0", lines.map(entry(_, "c1")))
+    val g = new Graft(spark, staging, table, ckpt)
+    assert(g.startLogging("c1", keep).isRight)
+    eventually(30000)(assert(g.countLogs("c1") === lines.size))
+    (g, staging, table)
+  }
+
+  /** [[graft.Graft.follow]] of c1 in its own thread (it blocks until c1
+    * stops); collects every emitted seq.
+    */
+  private def following(g: Graft, since: Option[String] = None)
       : (Thread, java.util.concurrent.ConcurrentLinkedQueue[Long]) = {
-    val g = new graft.Graft(spark, staging, table, ckpt)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val t = new Thread(() => g.follow(Some("c1"), since, None,
-      pollMs = pollMs, idlePolls = idlePolls)((seq, _) => seen.add(seq)))
+    val t = new Thread(() => g.follow("c1", since)((seq, _) => seen.add(seq)))
     t.start()
     (t, seen)
   }
 
-  test("follow mode keeps emitting as new bursts land (src/logger.rs:287,442-451)") {
-    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
-    writeBurst(staging, "c1", "b0", (0 until 10).map(entry(_, "c1")))
-    LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow())
-      .awaitTermination(60000)
+  /** StopLogging ends the follow; it must have emitted `lines`, once each, in order. */
+  private def stopAndCheck(g: Graft, t: Thread,
+      seen: java.util.concurrent.ConcurrentLinkedQueue[Long], lines: Range): Unit = {
+    g.stopLogging("c1")
+    t.join(30000)
+    assert(!t.isAlive, "follow must end at StopLogging")
+    assert(seen.asScala.toSeq === lines.map(seqOf))
+  }
 
-    val since = java.time.Instant.ofEpochSecond(0, t0 + 5 * 1000000000L).toString
-    val (t, seen) = following(staging, table, ckpt, Some(since), 200L, 25)
+  test("follow mode keeps emitting as new bursts land (src/logger.rs:287,442-451)") {
+    val (g, staging, _) = logging(0 until 10)
     try {
+      val since = java.time.Instant.ofEpochSecond(0, seqOf(5)).toString
+      val (t, seen) = following(g, Some(since))
       eventually(10000)(assert(seen.size() === 5)) // rows 5..9 pass the since filter
       // new burst arrives while following → emitted incrementally
       writeBurst(staging, "c1", "b1", (10 until 15).map(entry(_, "c1")))
-      LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow())
-        .awaitTermination(60000)
       eventually(15000)(assert(seen.size() === 10))
-      val seqs = seen.asScala.toSeq
-      assert(seqs === seqs.sorted && seqs.distinct === seqs) // in order, once each
-    } finally t.join(30000)
-    assert(!t.isAlive)
+      stopAndCheck(g, t, seen, 5 until 15)
+    } finally g.stopAll()
+  }
+
+  test("a follower reads once at start and then once per commit, not every second") {
+    val (g, staging, table) = logging(0 until 10)
+    // the follow's reads: executions over this table planned with its
+    // `seq > cursor` predicate
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.physicalPlanDescription.contains("GreaterThan(seq,") &&
+              x.physicalPlanDescription.contains(table) => reads.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (t, seen) = following(g)
+      eventually(10000)(assert(seen.size() === 10))
+      Thread.sleep(500) // the listener bus delivers the first read's start
+      val first = reads.get
+      assert(first === 1)
+      // no writes for 3 s: no reads (a 1 s poll would have made three)
+      Thread.sleep(3000)
+      assert(reads.get === first)
+      // one burst: its lines arrive within two reads
+      writeBurst(staging, "c1", "b1", (10 until 15).map(entry(_, "c1")))
+      eventually(15000)(assert(seen.size() === 15))
+      Thread.sleep(1500)
+      assert(reads.get - first >= 1 && reads.get - first <= 2, s"${reads.get - first} reads")
+      stopAndCheck(g, t, seen, 0 until 15)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      g.stopAll()
+    }
+  }
+
+  test("a retention sweep during a follow leaves the stream open") {
+    val (g, staging, _) = logging(0 until 10)
+    try {
+      val (t, seen) = following(g)
+      eventually(10000)(assert(seen.size() === 10))
+      // stops and restarts c1's ingest query around the sweep
+      assert(g.cleanup(None, Some(100L)).total === 0)
+      assert(t.isAlive, "a quiesced restart must not end the follow")
+      writeBurst(staging, "c1", "b1", (10 until 15).map(entry(_, "c1")))
+      eventually(15000)(assert(seen.size() === 15))
+      stopAndCheck(g, t, seen, 0 until 15)
+    } finally g.stopAll()
   }
 
   test("retention sweep rewrites partitions atomically; survivors match the pure query") {
@@ -291,17 +357,24 @@ class LogIngestSpec extends SparkSpec {
     assert(IngestMetrics.skippedFrames(spark).value - skippedBefore === 1)
   }
 
-  test("follow gives up after the idle cap (logger.rs:287-288)") {
-    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
-    writeBurst(staging, "c1", "b0", (0 until 5).map(entry(_, "c1")))
-    LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow())
-      .awaitTermination(60000)
-    val (t, seen) = following(staging, table, ckpt, None, 100L, 15)
-    eventually(10000)(assert(seen.size() === 5)) // initial data emitted
-    // then nothing arrives → 15 empty polls end the follow on its own
-    t.join(15000)
-    assert(!t.isAlive)
-    assert(seen.size() === 5) // nothing emitted after the initial data
+  test("follow ends at StopLogging, after the lines the stop commits") {
+    val (g, staging, _) = logging(0 until 5)
+    try {
+      val (t, seen) = following(g)
+      eventually(10000)(assert(seen.size() === 5)) // initial data emitted
+      // a quiet container keeps its follower, and nothing more is emitted
+      Thread.sleep(2000)
+      assert(t.isAlive, "follow must not end while the container logs")
+      assert(seen.size() === 5)
+      // staged just before the stop: StopLogging commits it, the
+      // follower's last read delivers it
+      writeBurst(staging, "c1", "b1", (5 until 8).map(entry(_, "c1")))
+      stopAndCheck(g, t, seen, 0 until 8)
+      // a container that is not logging: the follow ends after one read
+      val once = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      g.follow("c1", after = seqOf(2))((seq, _) => once.add(seq))
+      assert(once.asScala.toSeq === (3 until 8).map(seqOf))
+    } finally g.stopAll()
   }
 
   test("rate listener records per-batch and lifetime lines/s (logger.rs:187-196)") {
