@@ -4,7 +4,9 @@ import java.time.Instant
 import java.util.concurrent.TimeUnit
 
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -49,8 +51,9 @@ final class Graft(
 
   private val active = TrieMap.empty[String, Logging]
 
-  /** Each logging container's commits, which its followers wait on, from
-    * StartLogging to its stop; retention's restart keeps them.
+  /** Each logging container's commits, which its followers wait on and
+    * are fed from, from StartLogging to its stop; retention's restart keeps
+    * them.
     */
   private val followed = TrieMap.empty[String, Graft.Commits]
 
@@ -81,7 +84,12 @@ final class Graft(
         val commits = followed.getOrElseUpdate(containerId, new Graft.Commits)
         val q = LogIngest.start(spark, stagingRoot, tableRoot,
           s"$checkpointRoot/$containerId", s.trigger, Some(containerId), s.maxBytesPerTrigger,
-          onCommit = () => commits.committed())
+          onCommit = files => {
+            var lines: Option[Array[Graft.Line]] = None
+            // counted even if the read is interrupted: followers read what is not kept
+            try if (files.nonEmpty && commits.isFollowed) lines = capture(files)
+            finally commits.committed(lines)
+          })
         active.put(containerId, new Logging(q, options))
         q
     }
@@ -96,8 +104,8 @@ final class Graft(
     * includes what is already staged, e.g. the FIFO tail the pump flushes
     * on StopLogging; deleting drops the container's rows, staging and
     * checkpoint with its options (`src/statehandler.rs:167-183`). Its
-    * followers then end, after a last read. An id that [[startLogging]]
-    * refuses was never started: nothing to stop.
+    * followers then end, after the batches committed before the stop. An
+    * id that [[startLogging]] refuses was never started: nothing to stop.
     */
   def stopLogging(containerId: String): Unit = {
     if (!Graft.ContainerId.matches(containerId)) return
@@ -140,7 +148,7 @@ final class Graft(
 
   /** Stop every ingest query, keeping data, checkpoints and options;
     * bursts staged but not yet committed are ingested by the next start.
-    * Every follower ends, after a last read.
+    * Every follower ends, after the batches committed before the stop.
     */
   def stopAll(): Unit = {
     active.keys.foreach(id => active.remove(id).foreach(_.q.stop()))
@@ -213,22 +221,28 @@ final class Graft(
 
   // ---- follow mode (O9) ---------------------------------------------------
 
-  /** `docker logs --follow` past the lines a caller already has: re-issues
-    * the request's own [[readLogs]] range (container, `since`, `until`;
-    * follow ignores tail) with `seq > cursor` added, hands each new line's
-    * seq and encoded LogEntry to `emit` in seq order, and advances the
-    * cursor to the last seq emitted. `after` is the cursor's start: the
-    * seq of the last line the caller has already emitted, e.g. from its
-    * initial [[readLogs]].
+  /** `docker logs --follow` past the lines a caller already has: hands each
+    * new line of the request's own [[readLogs]] range (container, `since`,
+    * `until`; follow ignores tail) with a seq above the cursor, its seq and
+    * encoded LogEntry, to `emit` in seq order, and advances the cursor to
+    * the last seq emitted. `after` is the cursor's start: the seq of the
+    * last line the caller has already emitted, e.g. from its initial
+    * [[readLogs]].
     *
-    * The first read runs at once (a commit may have landed since the
-    * caller's read); each later one waits for the container's next commit
-    * and starts at least 1 s after the previous read ended, the reference's
-    * poll cadence (`src/logger.rs:287-288`). Blocks until the container
-    * stops (a last read then delivers what was committed before the stop),
-    * at once if it was not logging, after 3600 s with no line emitted (the
-    * reference's 3600 empty 1 s polls), or when `emit` throws. Retention's
-    * restart ([[quiesced]]) does not end it.
+    * One catch-up read (`seq > after`) runs at once, since a commit may
+    * have landed after the caller's read. Later lines come from the
+    * container's commits: while a container has a follower, each commit
+    * reads its own batch once and hands it to every follower (the
+    * committed batch is the increment, as in Structured Streaming), so a
+    * follower on a quiet container does nothing. A follower that falls
+    * behind the batches kept (the latest [[Graft.CaptureBytes]] of frames
+    * per container), or meets a batch that was not read, reads
+    * `seq > cursor` once instead.
+    *
+    * Blocks until the container stops (after the batches committed before
+    * the stop), at once if it was not logging, after 3600 s with no line
+    * emitted (the reference's 3600 empty 1 s polls), or when `emit`
+    * throws. Retention's restart ([[quiesced]]) does not end it.
     */
   def follow(
       containerId: String,
@@ -237,22 +251,42 @@ final class Graft(
       after: Long = Long.MinValue)(
       emit: (Long, Array[Byte]) => Unit): Unit = {
     val commits = followed.getOrElse(containerId, new Graft.Commits(stopped = true))
+    val req = LogOps.normalize(Some(containerId), since, until, 0, follow = true)
+    val from = req.since.fold(Long.MinValue)(LogOps.nanos)
+    val to = req.until.fold(Long.MaxValue)(LogOps.nanos)
     var cursor = after
     var lastLine = System.nanoTime()
-    var open = true
-    while (open) {
-      // count first: a stop after it is seen now or wakes the next read
-      val seen = commits.count
-      val last = commits.stopped
-      frames(readLogs(Some(containerId), since, until, follow = true).where(col("seq") > cursor))
-        .foreach { case (seq, message) =>
-          emit(seq, message); cursor = seq; lastLine = System.nanoTime()
-        }
-      val readEnd = System.nanoTime()
-      open = !last && commits.await(seen, lastLine + Graft.FollowIdleNanos) != seen
-      if (open) TimeUnit.NANOSECONDS.sleep(readEnd + Graft.FollowEveryNanos - System.nanoTime())
+    def emitAll(lines: Iterator[(Long, Array[Byte])]): Unit = lines.foreach { case (seq, message) =>
+      emit(seq, message); cursor = seq; lastLine = System.nanoTime()
     }
+    def read(): Unit = emitAll(frames(
+      readLogs(Some(containerId), since, until, follow = true).where(col("seq") > cursor)))
+    commits.attach()
+    try {
+      // count first: a batch committed after it is in the read or fed below
+      var (seen, last) = commits.state
+      read()
+      while (!last) {
+        val (count, stopped) = commits.await(seen, lastLine + Graft.FollowIdleNanos)
+        if (count == seen && !stopped) return // idle
+        commits.captured(seen, count) match {
+          case Some(lines) =>
+            val c = cursor
+            emitAll(lines.iterator.filter(l => l.seq > c && l.tsNano >= from && l.tsNano <= to)
+              .map(l => (l.seq, l.frame)))
+          case None => read()
+        }
+        seen = count
+        last = stopped
+      }
+    } finally commits.detach()
   }
+
+  /** The lines of committed `files`, read once for every follower. */
+  private def capture(files: Seq[String]): Option[Array[Graft.Line]] =
+    try Some(LogIngest.filesTable(spark, tableRoot, files).select("seq", "ts_nano", "message")
+      .collect().map(r => Graft.Line(r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2))))
+    catch { case NonFatal(_) => None } // not captured: its followers read instead
 
   /** (seq, encoded LogEntry) of each row of a [[readLogs]] result, in
     * order, through `toLocalIterator` so a large range never materializes
@@ -338,26 +372,75 @@ object Graft {
   private final case class Settings(
       trigger: Trigger, maxBytesPerTrigger: Option[Long], deleteWhenStopped: Boolean)
 
-  // the reference's follow cadence: a 1 s waker (FOLLOW_WAKETIME) that
-  // gives up after 3600 empty wakes (FOLLOW_COUNTER_MAX), logger.rs:287-288
-  private val FollowEveryNanos = TimeUnit.SECONDS.toNanos(1)
+  // the reference's follow gives up after 3600 empty 1 s wakes
+  // (FOLLOW_COUNTER_MAX × FOLLOW_WAKETIME, logger.rs:287-288)
   private val FollowIdleNanos = TimeUnit.SECONDS.toNanos(3600)
 
-  /** A logging container's count of committed batches, bumped once more by
-    * its stop: what its followers wait on.
+  /** Frame bytes of the latest batches a followed container keeps for its
+    * followers; a bigger batch is not kept.
     */
-  private final class Commits(@volatile var stopped: Boolean = false) {
-    @volatile var count = 0L
+  private[graft] val CaptureBytes: Long = 16L << 20
 
-    def committed(): Unit = synchronized { count += 1; notifyAll() }
+  /** One committed line as a follower is fed it. */
+  private final case class Line(seq: Long, tsNano: Long, frame: Array[Byte])
 
-    def stop(): Unit = synchronized { stopped = true; committed() }
+  /** A logging container's committed batches: their count, the stopped
+    * flag, the followers attached and, while any is, the lines of the
+    * latest [[CaptureBytes]] of batches, keyed by the count each commit
+    * reached.
+    */
+  private final class Commits(stopped: Boolean = false) {
+    private var count = 0L
+    private var isStopped = stopped
+    private var followers = 0
+    // commit count → the batch's lines and frame bytes, oldest first
+    private val batches = mutable.LinkedHashMap.empty[Long, (Array[Line], Long)]
+    private var bytes = 0L
 
-    /** The count once it passes `seen`, or at `deadline` (a `System.nanoTime`). */
-    def await(seen: Long, deadline: Long): Long = synchronized {
-      while (count == seen && deadline - System.nanoTime() > 0)
+    def isFollowed: Boolean = synchronized(followers > 0)
+
+    def attach(): Unit = synchronized { followers += 1 }
+
+    def detach(): Unit = synchronized {
+      followers -= 1
+      if (followers == 0) { batches.clear(); bytes = 0 }
+    }
+
+    /** A batch committed, with its lines when they were read. */
+    def committed(lines: Option[Array[Line]]): Unit = synchronized {
+      count += 1
+      for (ls <- lines if followers > 0) {
+        val size = ls.iterator.map(_.frame.length.toLong).sum
+        if (size <= CaptureBytes) {
+          batches(count) = (ls, size)
+          bytes += size
+          while (bytes > CaptureBytes) bytes -= batches.remove(batches.head._1).get._2
+        }
+      }
+      notifyAll()
+    }
+
+    def stop(): Unit = synchronized { isStopped = true; notifyAll() }
+
+    /** The count and the stopped flag. */
+    def state: (Long, Boolean) = synchronized((count, isStopped))
+
+    /** [[state]] once the count passes `seen` or the container stops, or at
+      * `deadline` (a `System.nanoTime`).
+      */
+    def await(seen: Long, deadline: Long): (Long, Boolean) = synchronized {
+      while (count == seen && !isStopped && deadline - System.nanoTime() > 0)
         TimeUnit.NANOSECONDS.timedWait(this, deadline - System.nanoTime())
-      count
+      (count, isStopped)
+    }
+
+    /** The lines of the batches past `seen` up to `upTo`, in seq order;
+      * None when one of them is not kept.
+      */
+    def captured(seen: Long, upTo: Long): Option[Seq[Line]] = synchronized {
+      val range = seen + 1 to upTo
+      if (range.forall(batches.contains)) Some(range.flatMap(batches(_)._1).sortBy(_.seq))
+      else None
     }
   }
 

@@ -37,9 +37,9 @@ import graft.functions.ProtoLogCodec
   *  - `POST /LogDriver.ReadLogs`       → a stream of big-endian
   *    u32-length-prefixed protobuf LogEntry frames (`src/logger.rs:126`),
   *    honoring Since/Until (zero-time sentinels), Tail (<1 = all,
-  *    ignored under Follow) and Follow ([[graft.Graft.follow]]: a read
-  *    after each of the container's commits, at most one a second; the
-  *    stream ends with the chunk terminator once the container stops, at
+  *    ignored under Follow) and Follow ([[graft.Graft.follow]]: one
+  *    catch-up read, then the lines of each of the container's commits,
+  *    read once by the commit for all its followers; the stream ends with the chunk terminator once the container stops, at
   *    once when it was not logging, or after an hour with no line).
   *
   * Transport notes: one request per connection (`Connection: close`),

@@ -249,7 +249,8 @@ object LogIngest {
     * default (`*.pblog`, [[decodeBurst]]); the `graft.sources` text
     * formats pass `*.log` and their own `decodeBurst`. Decode is pure
     * per-file work inside `flatMap`, no shuffle. `onCommit` runs on the
-    * driver after each batch's [[commitBatch]] returns.
+    * driver after each batch's [[commitBatch]] returns, with the files that
+    * commit moved into the table (empty for a batch committed before).
     *
     * The 100 ms processing-time trigger mirrors the reference's
     * burst-commit cadence; tests pass `Trigger.AvailableNow()` for
@@ -265,7 +266,7 @@ object LogIngest {
       maxBytesPerTrigger: Option[Long] = None,
       glob: String = "*.pblog",
       decode: Decoder = decodeBurst,
-      onCommit: () => Unit = () => ()): StreamingQuery = {
+      onCommit: Seq[String] => Unit = _ => ()): StreamingQuery = {
     import spark.implicits._
     // resolved on the driver, captured (serializable) by the decode closure
     val skipped = IngestMetrics.skippedFrames(spark)
@@ -313,8 +314,7 @@ object LogIngest {
       // plain-parquet readers outside Spark wouldn't see.
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          commitBatch(batch, batchId, tableDir, namespace = commitNamespace(checkpointDir))
-          onCommit()
+          onCommit(commitBatch(batch, batchId, tableDir, namespace = commitNamespace(checkpointDir)))
       }
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
@@ -360,12 +360,15 @@ object LogIngest {
     * rename is copy+delete, so step 5 costs a copy — the documented
     * substitution point there is an ACID table format (FsUtil scaladoc),
     * the protocol above is still correct, just slower.
+    *
+    * Returns the manifest: the destination paths this call moved into the
+    * table, empty when the marker shows the batch was committed before.
     */
   def commitBatch(
       batch: DataFrame,
       batchId: Long,
       tableDir: String,
-      namespace: String = "q"): Unit =
+      namespace: String = "q"): Seq[String] =
     manifestCommit(batch.sparkSession, tableDir, batchId, namespace) { staging =>
       stagePartitioned(batch, batchId, tableDir, staging, namespace)
     }
@@ -377,16 +380,17 @@ object LogIngest {
     * drop, marker pruning. `stage` performs step 3 — write the batch under
     * the given staging dir and return the (stagedFile → destination)
     * moves, every destination carrying the `b<namespace>-<batchId>-`
-    * prefix so attempts can never collide.
+    * prefix so attempts can never collide. Returns the destinations moved,
+    * none when the marker short-circuits.
     */
   private def manifestCommit(
       spark: SparkSession,
       tableDir: String,
       batchId: Long,
       namespace: String)(
-      stage: String => Seq[(org.apache.hadoop.fs.Path, String)]): Unit = {
+      stage: String => Seq[(org.apache.hadoop.fs.Path, String)]): Seq[String] = {
     val marker = s"$tableDir/_commits/$namespace-$batchId"
-    if (FsUtil.exists(spark, marker)) return
+    if (FsUtil.exists(spark, marker)) return Nil
     val manifest = s"$tableDir/_commits/$namespace-$batchId.manifest"
     if (FsUtil.exists(spark, manifest))
       FsUtil.readLines(spark, manifest).foreach { dst =>
@@ -411,6 +415,7 @@ object LogIngest {
           FsUtil.fs(spark, p.toString).delete(p, false)
       }
     }
+    moves.map(_._2)
   }
 
   /** Exactly-once append of an UNPARTITIONED micro-batch result — the
@@ -465,10 +470,22 @@ object LogIngest {
   }
 
   /** The log table as stored: `message` is null wherever [[frameOf]]
-    * rebuilds it. Retention reads and rewrites this form unchanged.
+    * rebuilds it. Retention reads and rewrites this form unchanged. A table
+    * root that does not exist yet (nothing committed) throws a short
+    * FileNotFoundException: Spark's own check would log a WARN with a full
+    * stack trace on every such call.
     */
-  def storedTable(spark: SparkSession, tableDir: String): DataFrame =
+  def storedTable(spark: SparkSession, tableDir: String): DataFrame = {
+    if (!FsUtil.isDirectory(spark, tableDir))
+      throw new java.io.FileNotFoundException(s"no lines committed yet under $tableDir")
     spark.read.schema(logSchema).parquet(tableDir)
+  }
+
+  /** Exactly the rows of `files` (paths under `tableDir`, e.g. one
+    * [[commitBatch]]'s manifest), every `message` served.
+    */
+  def filesTable(spark: SparkSession, tableDir: String, files: Seq[String]): DataFrame =
+    withMessages(spark.read.schema(logSchema).option("basePath", tableDir).parquet(files: _*))
 
   /** Batch view of the ingested log table, every row's `message` served
     * ([[withMessages]]).

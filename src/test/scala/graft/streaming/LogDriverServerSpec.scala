@@ -282,6 +282,7 @@ class LogDriverServerSpec extends SparkSpec {
         assert(!isStream(response), s"follow=$follow")
         assert(jsonStr(response).startsWith("""{"Err":"[graft] Could not read logs: """),
           s"follow=$follow")
+        assert(jsonStr(response).contains("no lines committed yet"), s"follow=$follow")
       }
     } finally {
       server.stop()

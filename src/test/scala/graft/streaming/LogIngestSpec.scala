@@ -90,24 +90,45 @@ class LogIngestSpec extends SparkSpec {
     (g, staging, table)
   }
 
+  private type Seen = java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Byte])]
+
   /** [[graft.Graft.follow]] of c1 in its own thread (it blocks until c1
-    * stops); collects every emitted seq.
+    * stops); collects every emitted seq and frame, after `before` runs.
     */
-  private def following(g: Graft, since: Option[String] = None)
-      : (Thread, java.util.concurrent.ConcurrentLinkedQueue[Long]) = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val t = new Thread(() => g.follow("c1", since)((seq, _) => seen.add(seq)))
+  private def following(g: Graft, since: Option[String] = None, until: Option[String] = None,
+      before: Long => Unit = _ => ()): (Thread, Seen) = {
+    val seen: Seen = new java.util.concurrent.ConcurrentLinkedQueue()
+    val t = new Thread(() => g.follow("c1", since, until) { (seq, frame) =>
+      before(seq); seen.add((seq, frame.toSeq))
+    })
     t.start()
     (t, seen)
   }
 
   /** StopLogging ends the follow; it must have emitted `lines`, once each, in order. */
-  private def stopAndCheck(g: Graft, t: Thread,
-      seen: java.util.concurrent.ConcurrentLinkedQueue[Long], lines: Range): Unit = {
+  private def stopAndCheck(g: Graft, t: Thread, seen: Seen, lines: Seq[Int]): Unit = {
     g.stopLogging("c1")
     t.join(30000)
     assert(!t.isAlive, "follow must end at StopLogging")
-    assert(seen.asScala.toSeq === lines.map(seqOf))
+    assert(seen.asScala.toSeq.map(_._1) === lines.map(seqOf))
+  }
+
+  /** Counts the follow reads over `table` while `f` runs: SQL executions
+    * planned with a `seq > cursor` predicate.
+    */
+  private def countingReads[T](table: String)(f: java.util.concurrent.atomic.AtomicInteger => T)
+      : T = {
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.physicalPlanDescription.contains("GreaterThan(seq,") &&
+              x.physicalPlanDescription.contains(table) => reads.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try f(reads) finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("follow mode keeps emitting as new bursts land (src/logger.rs:287,442-451)") {
@@ -123,39 +144,113 @@ class LogIngestSpec extends SparkSpec {
     } finally g.stopAll()
   }
 
-  test("a follower reads once at start and then once per commit, not every second") {
+  test("a follower reads once at start and never again while commits feed it") {
     val (g, staging, table) = logging(0 until 10)
-    // the follow's reads: executions over this table planned with its
-    // `seq > cursor` predicate
-    val reads = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart
-            if x.physicalPlanDescription.contains("GreaterThan(seq,") &&
-              x.physicalPlanDescription.contains(table) => reads.incrementAndGet()
-        case _ =>
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    try countingReads(table) { reads =>
       val (t, seen) = following(g)
       eventually(10000)(assert(seen.size() === 10))
       Thread.sleep(500) // the listener bus delivers the first read's start
-      val first = reads.get
-      assert(first === 1)
+      assert(reads.get === 1)
       // no writes for 3 s: no reads (a 1 s poll would have made three)
       Thread.sleep(3000)
-      assert(reads.get === first)
-      // one burst: its lines arrive within two reads
-      writeBurst(staging, "c1", "b1", (10 until 15).map(entry(_, "c1")))
-      eventually(15000)(assert(seen.size() === 15))
+      assert(reads.get === 1)
+      // three separate bursts, each its own commit: fed, never read
+      for (b <- 1 to 3) {
+        writeBurst(staging, "c1", s"b$b", (b * 5 + 5 until b * 5 + 10).map(entry(_, "c1")))
+        eventually(15000)(assert(seen.size() === b * 5 + 10))
+      }
       Thread.sleep(1500)
-      assert(reads.get - first >= 1 && reads.get - first <= 2, s"${reads.get - first} reads")
-      stopAndCheck(g, t, seen, 0 until 15)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      g.stopAll()
-    }
+      assert(reads.get === 1, s"${reads.get - 1} reads after the first")
+      stopAndCheck(g, t, seen, 0 until 25)
+    } finally g.stopAll()
+  }
+
+  test("followers are fed the frames readLogs serves, inside their Since/Until") {
+    val (g, staging, table) = logging(0 until 10)
+    try countingReads(table) { reads =>
+      val at = (i: Int) => java.time.Instant.ofEpochSecond(0, seqOf(i)).toString
+      val (all, allSeen) = following(g)
+      val (ranged, rangedSeen) = following(g, Some(at(13)), Some(at(22)))
+      eventually(10000)(assert(allSeen.size() === 10))
+      // a line that is not valid UTF-8 (its stored frame is served) and
+      // partial metadata at ordinals 0 and 3, over two commits
+      val odd = Seq(
+        LogEntry("stdout", seqOf(10), Array[Byte](0x61, -61, 0x28, 0x62), partial = false, None),
+        LogEntry("stdout", seqOf(11), "part a".getBytes("UTF-8"), partial = true,
+          Some(PartialMeta(last = false, "p1", 0))),
+        LogEntry("stderr", seqOf(12), "part b".getBytes("UTF-8"), partial = true,
+          Some(PartialMeta(last = true, "p1", 3))))
+      writeBurst(staging, "c1", "b1", odd ++ (13 until 17).map(entry(_, "c1")))
+      eventually(15000)(assert(allSeen.size() === 17))
+      writeBurst(staging, "c1", "b2", (17 until 25).map(entry(_, "c1")))
+      eventually(15000)(assert(allSeen.size() === 25))
+      eventually(15000)(assert(rangedSeen.size() === 10))
+      Thread.sleep(500)
+      assert(reads.get === 2, "each follower's catch-up read, then only fed lines")
+      def served(since: Option[String], until: Option[String]): Seq[(Long, Seq[Byte])] =
+        g.frames(g.readLogs(Some("c1"), since, until)).map(l => (l._1, l._2.toSeq)).toSeq
+      assert(allSeen.asScala.toSeq === served(None, None))
+      assert(rangedSeen.asScala.toSeq === served(Some(at(13)), Some(at(22))))
+      assert(rangedSeen.asScala.map(_._1).toSeq === (13 to 22).map(seqOf))
+      stopAndCheck(g, all, allSeen, 0 until 25)
+      ranged.join(30000)
+      assert(!ranged.isAlive, "follow must end at StopLogging")
+    } finally g.stopAll()
+  }
+
+  test("a follower behind the kept batches reads once and gets every line once, in order") {
+    val (g, staging, table) = logging(0 until 4)
+    // 16 lines of 256 KiB per burst: a 4 MiB batch, so the first batches of
+    // six are no longer kept when the follower wakes
+    val lineBytes = 256 * 1024
+    assert(6L * 16 * lineBytes >= Graft.CaptureBytes + 2L * 16 * lineBytes)
+    def big(i: Int): LogEntry =
+      entry(i, "c1").copy(line = (s"big-$i-" + "x" * lineBytes).getBytes("UTF-8"))
+    try countingReads(table) { reads =>
+      val held = new java.util.concurrent.CountDownLatch(1)
+      val (t, seen) = following(g, before = _ => held.await())
+      for (b <- 0 until 6) {
+        val lines = 4 + b * 16 until 4 + (b + 1) * 16
+        writeBurst(staging, "c1", s"big$b", lines.map(big))
+        eventually(30000)(assert(g.countLogs("c1") === lines.end))
+      }
+      assert(seen.isEmpty, "emit is held on the catch-up read's first line")
+      held.countDown()
+      eventually(30000)(assert(seen.size() === 100))
+      Thread.sleep(500)
+      assert(reads.get === 2, "the catch-up read, then one read for the batches not kept")
+      stopAndCheck(g, t, seen, 0 until 100)
+    } finally g.stopAll()
+  }
+
+  test("a line reaches its follower before the container's next batch commits") {
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    writeBurst(staging, "c1", "b0", (0 until 5).map(entry(_, "c1")))
+    val g = new Graft(spark, staging, table, ckpt)
+    assert(g.startLogging("c1", keep + ("message_read_timeout" -> "1000")).isRight)
+    try {
+      eventually(30000)(assert(g.countLogs("c1") === 5))
+      // the newest batch committed when each line is emitted, from the
+      // table's commit markers (`_commits/<namespace>-<batchId>`)
+      val commitMarker = "[0-9a-f]+-([0-9]+)".r
+      def newestCommit(): Long = Files.list(Paths.get(table, "_commits")).iterator().asScala
+        .map(_.getFileName.toString).collect { case commitMarker(id) => id.toLong }.max
+      val newestAtEmit = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+      val (t, seen) = following(g, before = seq => newestAtEmit.put(seq, newestCommit()))
+      eventually(10000)(assert(seen.size() === 5))
+      // a burst every 250 ms for 6 s: one batch per 1 s trigger, never idle
+      for (b <- 1 to 24) {
+        writeBurst(staging, "c1", s"b$b", (b * 5 until b * 5 + 5).map(entry(_, "c1")))
+        Thread.sleep(250)
+      }
+      stopAndCheck(g, t, seen, 0 until 125)
+      val batchOf = g.logs.select(col("seq"), input_file_name()).collect().map { r =>
+        r.getLong(0) -> "/b[0-9a-f]+-([0-9]+)-".r.findFirstMatchIn(r.getString(1)).get.group(1).toLong
+      }.toMap
+      assert(batchOf.values.toSet.size >= 4, "the bursts span several batches")
+      val late = (25 until 125).map(seqOf).filter(s => newestAtEmit.get(s) > batchOf(s))
+      assert(late.isEmpty, s"${late.size} lines emitted after a later batch committed")
+    } finally g.stopAll()
   }
 
   test("a retention sweep during a follow leaves the stream open") {
@@ -375,6 +470,36 @@ class LogIngestSpec extends SparkSpec {
       g.follow("c1", after = seqOf(2))((seq, _) => once.add(seq))
       assert(once.asScala.toSeq === (3 until 8).map(seqOf))
     } finally g.stopAll()
+  }
+
+  test("a read before the first commit fails short, with no Spark WARN") {
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    val g = new Graft(spark, staging, table, ckpt)
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-spec-warnings", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        warnings.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    ctx.getConfiguration.getRootLogger.addAppender(
+      appender, org.apache.logging.log4j.Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      org.apache.logging.log4j.LogManager.getLogger("graft.spec").warn("probe")
+      for (read <- Seq(() => g.readLogs(Some("c1")), () => g.countLogs("c1"))) {
+        val e = intercept[java.io.FileNotFoundException](read())
+        assert(e.getMessage.startsWith("no lines committed yet"))
+      }
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(appender.getName)
+      ctx.updateLoggers()
+    }
+    assert(warnings.contains("graft.spec: probe"), "the appender records WARNs")
+    assert(!warnings.asScala.exists(_.contains("metadata directory")), warnings)
   }
 
   test("rate listener records per-batch and lifetime lines/s (logger.rs:187-196)") {
