@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+
 /** Benchmark main (driver contract): one JSON line of per-query seconds.
   *
   * Each query is timed `SPARK_GRAFT_RUNS` times (default 6) and reports the
@@ -17,6 +21,14 @@ package graft
   * first run of the first query also absorbs JVM/codegen warmup; the JSON
   * carries the run count for honesty.
   *
+  * The sidecar's `layers` split every sample, index-aligned with
+  * `samples`: build (`fn(spark, sfDir)`) and exec (the noop write)
+  * seconds, and the jobs, stages, tasks, executor run and CPU ms, shuffle
+  * bytes and spill of the pass's Spark jobs. Each pass runs under a local
+  * property naming it, which its jobs (broadcasts, subqueries and memo
+  * builds included) carry to one listener; the listener bus drains once,
+  * at `spark.stop()`, so the timed loop waits on nothing.
+  *
   * Fail-loud (VERDICT r4 #3): a throwing query is reported under "errors"
   * with its message and EXCLUDED from the per-query map and the total —
   * r4's swallow-and-time-zero let a broken query *improve* the bench.
@@ -29,6 +41,8 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "6").toInt
     val spark = LocalSession(
       "spark.sql.shuffle.partitions" -> shuffle, "spark.sql.adaptive.enabled" -> aqe)
+    val work = new QueryWork
+    spark.sparkContext.addSparkListener(work)
     // warm the JVM + parquet reader once so timings measure queries, not
     // class-loading (same treatment for every query; tiny sf0.001 input).
     // Inside try/catch: r7's fixture-schema drift crashed this line and
@@ -51,6 +65,8 @@ object Bench {
     // raw per-pass samples (sidecar only): the self-adjudication data —
     // outlier mins are checked against the floor gauges of their own passes
     val samples = scala.collection.mutable.Map[String, Vector[Double]]()
+    // (build, exec) seconds per pass, index-aligned with samples
+    val splits = scala.collection.mutable.Map[String, Vector[(Double, Double)]]()
     val floorPasses = scala.collection.mutable.Map[String, Vector[Double]]()
     // Per-query fixed-cost floor, measured INSIDE this window (VERDICT r10
     // #7: the driver window showed a ~0.5 s/query floor vs the builder's
@@ -103,7 +119,9 @@ object Bench {
       for (name <- "__floor__" +: names) {
       if (name == "__floor__") { probeFloor() } else {
       val fn = SparkEntry.queries(name)
+      spark.sparkContext.setLocalProperty(QueryWork.Key, s"$pass $name")
       val t0 = System.nanoTime()
+      var t1 = -1L
       try {
         // noop write, not count(): under count() column pruning deletes the
         // entire projection of a map-only query (regex redaction, chunk
@@ -112,10 +130,14 @@ object Bench {
         // weak-scaling study while the DuckDB twin (fetchall) paid full
         // price. The noop sink executes every column of every row and
         // keeps the final sort, matching what the twin measures.
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
+        val df = fn(spark, sfDir)
+        t1 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        val t2 = System.nanoTime()
+        val dt = (t2 - t0) / 1e9
         if (dt < best.getOrElse(name, Double.MaxValue)) best(name) = dt
         samples(name) = samples.getOrElse(name, Vector()) :+ dt
+        splits(name) = splits.getOrElse(name, Vector()) :+ (((t1 - t0) / 1e9, (t2 - t1) / 1e9))
       } catch {
         case e: Throwable =>
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -125,7 +147,9 @@ object Bench {
           // silently compact the vector. -1 is unambiguous (real samples
           // are positive) and stays valid JSON, unlike NaN.
           samples(name) = samples.getOrElse(name, Vector()) :+ -1.0
-      }
+          splits(name) = splits.getOrElse(name, Vector()) :+
+            ((if (t1 < 0) -1.0 else (t1 - t0) / 1e9, -1.0))
+      } finally spark.sparkContext.setLocalProperty(QueryWork.Key, null)
       }
       }
     }
@@ -152,7 +176,11 @@ object Bench {
     val layout =
       try graft.plans.FactLayout.report(spark)
       catch { case _: Throwable => Map.empty[String, String] }
-    spark.stop()
+    spark.stop() // drains the listener bus: `work` is complete from here
+    val layers = splits.map { case (name, ps) =>
+      name -> ps.zipWithIndex.map { case ((b, e), pass) =>
+        BenchFormat.Pass(b, e, work(s"$pass $name")) }
+    }.toMap
     // The harness keeps only the last ~2000 chars of stdout and parses the
     // JSON line out of that window. At 148 queries the full per-query map is
     // ~4.5 KB — it can never fit, which is why every BENCH_r0N through r4
@@ -171,7 +199,7 @@ object Bench {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outPath),
           (BenchFormat.fullLine(bestMap, errMap, sfDir, runs, floor.toMap, layout,
-            samples.toMap, floorPasses.toMap, passesDone) + "\n")
+            samples.toMap, floorPasses.toMap, passesDone, layers) + "\n")
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         BenchFormat.jstrFull(outPath)
       } catch {
@@ -183,4 +211,44 @@ object Bench {
     println(BenchFormat.compactLine(bestMap, errMap, sfDir, runs, fullField,
       floor.toMap, layout, passesDone))
   }
+}
+
+/** The Spark work of each timed pass: jobs, and the stages, tasks,
+  * executor run and CPU ms, shuffle read and write bytes and spill of
+  * their completed stages, summed per value of the [[QueryWork.Key]] local
+  * property the jobs were submitted under (in [[BenchFormat.WorkNames]]
+  * order). Listener events arrive on the bus thread; read after the bus
+  * has drained.
+  */
+private final class QueryWork extends SparkListener {
+  private val stageKey = new ConcurrentHashMap[Int, String]()
+  private val sums = new ConcurrentHashMap[String, Array[Long]]()
+
+  private def add(key: String, values: Long*): Unit = {
+    val a = sums.computeIfAbsent(key, _ => new Array[Long](BenchFormat.WorkNames.size))
+    values.indices.foreach(i => a(i) += values(i))
+  }
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    Option(e.properties).flatMap(p => Option(p.getProperty(QueryWork.Key))).foreach { key =>
+      add(key, 1)
+      e.stageIds.foreach(stageKey.put(_, key))
+    }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+    val s = e.stageInfo
+    for (key <- Option(stageKey.get(s.stageId)); m <- Option(s.taskMetrics))
+      add(key, 0, 1, s.numTasks, m.executorRunTime, m.executorCpuTime / 1000000L,
+        m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
+        m.memoryBytesSpilled + m.diskBytesSpilled)
+  }
+
+  /** The sums for `key`, zeros when none of its jobs ran. */
+  def apply(key: String): Seq[Long] =
+    Option(sums.get(key)).fold(Seq.fill(BenchFormat.WorkNames.size)(0L))(_.toSeq)
+}
+
+private object QueryWork {
+  /** The local property naming a timed pass: `"<pass> <query>"`. */
+  val Key = "graft.bench.pass"
 }

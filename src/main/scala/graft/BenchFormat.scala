@@ -97,8 +97,30 @@ object BenchFormat {
       .map { case (k, vs) => jstrFull(k) + ":" + vs.map(sec).mkString("[", ",", "]") }
       .mkString("\"" + name + "\":{", ",", "},")
 
+  /** One timed pass of one query split by layer (sidecar only): build
+    * (`fn(spark, sfDir)`) and exec (the noop write) seconds, -1 for a step
+    * that did not finish, and the Spark work its jobs ran, in
+    * [[WorkNames]] order.
+    */
+  final case class Pass(buildS: Double, execS: Double, work: Seq[Long])
+
+  val WorkNames = Seq("jobs", "stages", "tasks", "run_ms", "cpu_ms",
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes")
+
+  /** `"layers":{...},` fragment (or "" when not recorded): per query, one
+    * vector per layer, index-aligned with its `samples`.
+    */
+  private def layersFrag(layers: Map[String, Seq[Pass]]): String =
+    if (layers.isEmpty) ""
+    else layers.toSeq.sortBy(_._1).map { case (q, ps) =>
+      val cols = Seq("build_s" -> ps.map(p => sec(p.buildS)), "exec_s" -> ps.map(p => sec(p.execS))) ++
+        WorkNames.indices.map(i => WorkNames(i) -> ps.map(_.work(i).toString))
+      jstrFull(q) + cols.map { case (k, vs) => jstrFull(k) + ":" + vs.mkString("[", ",", "]") }
+        .mkString(":{", ",", "}")
+    }.mkString("\"layers\":{", ",", "},")
+
   /** The sidecar body: complete per-query map, complete errors, raw
-    * per-pass samples and per-pass floor gauges.
+    * per-pass samples and layers, and per-pass floor gauges.
     */
   def fullLine(
       best: Map[String, Double],
@@ -109,10 +131,11 @@ object BenchFormat {
       layout: Map[String, String] = Map.empty,
       samples: Map[String, Seq[Double]] = Map.empty,
       floorPasses: Map[String, Seq[Double]] = Map.empty,
-      passesDone: Int = -1): String = {
+      passesDone: Int = -1,
+      layers: Map[String, Seq[Pass]] = Map.empty): String = {
     val ok = best.keys.toSeq.sorted
     val fullQs = ok.map(n => jstrFull(n) + ":" + sec(best(n))).mkString("{", ",", "}")
-    s"""{"metric":"total","value":${sec(ok.map(best).sum)},"unit":"sec","queries":$fullQs,"errors":${errObj(errors.toSeq.sortBy(_._1))},${floorFrag(floor)}${layoutFrag(layout)}${seriesFrag("samples", samples)}${seriesFrag("floor_passes", floorPasses)}${passesFrag(passesDone)}"sf":${jstrFull(sfDir)},"runs":$runs}"""
+    s"""{"metric":"total","value":${sec(ok.map(best).sum)},"unit":"sec","queries":$fullQs,"errors":${errObj(errors.toSeq.sortBy(_._1))},${floorFrag(floor)}${layoutFrag(layout)}${seriesFrag("samples", samples)}${layersFrag(layers)}${seriesFrag("floor_passes", floorPasses)}${passesFrag(passesDone)}"sf":${jstrFull(sfDir)},"runs":$runs}"""
   }
 
   /** `"passes_done":N,` fragment (or "" when not recorded) — its OWN

@@ -127,9 +127,7 @@ final class Graft(
       FsUtil.deleteRecursively(spark, s"$checkpointRoot/$containerId")
       FsUtil.deleteRecursively(spark, stagingDir(containerId))
       // deleted files may still be in the shared listing cache
-      org.apache.spark.sql.graft.ColumnBridge.invalidateFileListing(spark)
-      if (FsUtil.isDirectory(spark, tableRoot))
-        spark.catalog.refreshByPath(tableRoot)
+      Retention.invalidate(spark, tableRoot)
     }
     followed.remove(containerId).foreach(_.stop())
   }
@@ -230,7 +228,8 @@ final class Graft(
     * [[readLogs]].
     *
     * One catch-up read (`seq > after`) runs at once, since a commit may
-    * have landed after the caller's read. Later lines come from the
+    * have landed after the caller's read; with the default `after` it
+    * reads the whole range. Later lines come from the
     * container's commits: while a container has a follower, each commit
     * reads its own batch once and hands it to every follower (the
     * committed batch is the increment, as in Structured Streaming), so a

@@ -376,7 +376,7 @@ object DedupOps {
     * CPU-heavy per-row kernels: the contraction makes the frame
     * byte-small, so AQE coalesces the semi-join exchange to ONE
     * partition locally and serializes regex/minhash/simhash work on a
-    * single core (StageProbe: every stage tasks=1, e.g. repeatSpans
+    * single core (every stage ran tasks=1, e.g. repeatSpans
     * 2.5 s warm at sf0.1 → 32-way after the pin). Size-gated: at corpus
     * scale the scan is already wide and the gate never fires — a forced
     * exchange there would shuffle the full text payload.

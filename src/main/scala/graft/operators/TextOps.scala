@@ -355,7 +355,7 @@ object TextOps {
     // transform(hash) + array_sort + filter(try_element_at) +
     // transform/filter with an array_contains probe per position was the
     // query's dominant 32-task stage (~11 core-seconds at sf0.1, measured
-    // by StageProbe this round). `repeatSeeds` fuses the whole selection
+    // per stage this round). `repeatSeeds` fuses the whole selection
     // — window hashes (xxh64 seed 42 of the ' '-joined window, value-
     // identical to the HOF spelling), duplicate-gram membership
     // (sorted-neighbor equality), positional emission — into ONE compiled

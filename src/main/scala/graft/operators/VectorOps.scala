@@ -1088,26 +1088,11 @@ object VectorOps {
         // satisfies every iteration's contribution join directly — the
         // edge table (the big side at scale) crosses the wire once at
         // build, not once per iteration.
-        // The layout leaf (cutLayout: partitioning + order physically
-        // carried) is SCALE-GATED on the corpus row count: below the
-        // gate the per-iteration rollup is broadcast-sized, AQE plans
-        // BHJ over 1-task stages, and advertising the 32-way layout
-        // only forces 32-task zero-exchange SMJs whose scheduling
-        // outprices the joins (measured b2b min-of-6: sf0.1 0.73 →
-        // 1.59 s, sf1 1.09 → 3.10 s with the leaf unconditional).
-        // Above it (~10 MB of 16-byte rank rows — the practical
-        // broadcast boundary) every iteration's damping join goes SMJ
-        // and the carried layout deletes one nodes-sized exchange +
-        // sort per iteration, which is the r14 §2.7 rationale this
-        // gate finally makes physically true (the plain cut() leaf
-        // FORGETS its partitioning — see SessionCache.cutLayout).
-        val bigGraph =
-          Tables.tableRows(ss, d, "embeddings") >= 1000000L
+        // Plain cut, not cutLayout: a carried layout leaf measured sf0.1
+        // 0.73 → 1.59 s (b2b min-of-6), forcing zero-exchange SMJs over
+        // joins AQE otherwise broadcasts.
         def cutL(df: org.apache.spark.sql.DataFrame, key: String) =
-          if (bigGraph)
-            graft.SessionCache.cutLayout(
-              df.repartition(col(key)).sortWithinPartitions(col(key)))
-          else graft.SessionCache.cut(df.repartition(col(key)))
+          graft.SessionCache.cut(df.repartition(col(key)))
         val edCut = cutL(edges.join(deg, "src"), "src")
         // Node state, HASH-PARTITIONED on vec_id (r14): every iteration's
         // damping update left-joins the full node set against the rank

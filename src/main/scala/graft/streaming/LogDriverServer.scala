@@ -38,7 +38,7 @@ import graft.functions.ProtoLogCodec
   *    u32-length-prefixed protobuf LogEntry frames (`src/logger.rs:126`),
   *    honoring Since/Until (zero-time sentinels), Tail (<1 = all,
   *    ignored under Follow) and Follow ([[graft.Graft.follow]]: one
-  *    catch-up read, then the lines of each of the container's commits,
+  *    read of the range, then the lines of each of the container's commits,
   *    read once by the commit for all its followers; the stream ends with the chunk terminator once the container stops, at
   *    once when it was not logging, or after an hour with no line).
   *
@@ -254,10 +254,10 @@ final class LogDriverServer(graft: Graft, socketPath: Path) {
     def writeFrame(message: Array[Byte]): Unit =
       writeChunk(conn, ProtoLogCodec.frame(message))
     try {
-      var last = Long.MinValue
-      graft.frames(df).foreach { case (seq, message) => writeFrame(message); last = seq }
-      if (follow)
-        graft.follow(containerId, since, until, last)((_, message) => writeFrame(message))
+      // under Follow, tail is ignored, so follow's own first read (made
+      // once it is attached, so no commit falls between) is the whole range
+      if (follow) graft.follow(containerId, since, until)((_, message) => writeFrame(message))
+      else graft.frames(df).foreach { case (_, message) => writeFrame(message) }
       writeFully(conn, "0\r\n\r\n".getBytes(UTF_8))
     } catch {
       case NonFatal(_) => // client hung up mid-stream: stop following

@@ -232,8 +232,8 @@ object Retention {
     ()
   }
 
-  /** The shared FileStatusCache still holds pre-swap leaf files; drop it. */
-  private def invalidate(spark: SparkSession, tableDir: String): Unit = {
+  /** The shared FileStatusCache may still hold files a swap or delete removed; drop it. */
+  private[graft] def invalidate(spark: SparkSession, tableDir: String): Unit = {
     org.apache.spark.sql.graft.ColumnBridge.invalidateFileListing(spark)
     if (FsUtil.isDirectory(spark, tableDir)) spark.catalog.refreshByPath(tableDir)
   }

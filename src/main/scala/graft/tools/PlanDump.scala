@@ -3,9 +3,13 @@ package graft.tools
 
 /** Dump `.explain("formatted")` for selected queries to files — the
   * committed before/after plan evidence for optimization rounds
-  * (plans/rNN/<query>_<tag>.txt). Uses the exact `graft.Bench` session
-  * settings so the dumped plan is the benched plan (initial plan;
-  * AQE-final shape is PlanProbe's job).
+  * (plans/rNN/<query>_<tag>.txt). Uses the `graft.Bench` session
+  * settings, and executes each query through the frame's own
+  * QueryExecution first, so the file shows AQE's final plan
+  * (`AdaptiveSparkPlan isFinalPlan=true`) above its initial one; a
+  * `df.write` would plan again under its own QueryExecution and leave the
+  * frame's plan initial. Per-query timings and Spark work are
+  * `graft.Bench`'s sidecar (`samples`, `layers`).
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <tag> <q1,q2,...> [sfDir]
   */
@@ -19,9 +23,9 @@ object PlanDump {
     val spark = graft.LocalSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val qe = graft.SparkEntry.queries(name)(spark, sfDir).queryExecution
+      qe.toRdd.count()
+      val txt = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"),
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))

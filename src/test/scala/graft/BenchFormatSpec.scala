@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -180,6 +182,31 @@ class BenchFormatSpec extends AnyFunSuite {
     val line = BenchFormat.compactLine(best, Map.empty, "/sf", 3, "null")
     assert(!om.readTree(line).has("samples") && !om.readTree(line).has("floor_passes"))
     assert(line.length <= BenchFormat.Budget)
+  }
+
+  test("per-pass layers ride the sidecar only, index-aligned with samples") {
+    val best = mkBest(148)
+    val samples = best.map { case (n, v) => n -> Seq(v, -1.0, v * 1.05) }
+    val layers = best.map { case (n, v) =>
+      n -> Seq(BenchFormat.Pass(v / 4, v * 3 / 4, Seq(3L, 4, 32, 120, 90, 4096, 4096, 0)),
+        BenchFormat.Pass(0.002, -1.0, Seq(1L, 1, 4, 5, 5, 0, 0, 0)),
+        BenchFormat.Pass(v / 4, v * 0.8, Seq(3L, 4, 32, 121, 91, 4096, 4096, 1L << 40)))
+    }
+    val full = om.readTree(BenchFormat.fullLine(best, Map.empty, "/sf", 3,
+      samples = samples, layers = layers))
+    val q = best.keys.toSeq.sorted.head
+    val l = full.get("layers").get(q)
+    val cols = Seq("build_s", "exec_s") ++ BenchFormat.WorkNames
+    assert(l.fieldNames.asScala.toSeq === cols)
+    cols.foreach(c => assert(l.get(c).size === full.get("samples").get(q).size, c))
+    assert(l.get("exec_s").get(1).asDouble === -1.0) // the errored pass keeps its slot
+    assert(l.get("tasks").get(0).asLong === 32L)
+    assert(l.get("spill_bytes").get(2).asLong === (1L << 40))
+    assert(math.abs(l.get("build_s").get(0).asDouble - best(q) / 4) < 1e-3)
+    // absent → no field; the compact line never carries it
+    assert(!om.readTree(BenchFormat.fullLine(best, Map.empty, "/sf", 3)).has("layers"))
+    val line = BenchFormat.compactLine(best, Map.empty, "/sf", 3, "null")
+    assert(!om.readTree(line).has("layers"))
   }
 
   test("totals and pack rollups are consistent with the per-query map") {

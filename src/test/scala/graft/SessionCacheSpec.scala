@@ -47,4 +47,28 @@ class SessionCacheSpec extends SparkSpec {
     assert(plan.contains("LogicalRDD") || plan.contains("ExistingRDD"),
       s"expected a checkpointed leaf:\n$plan")
   }
+
+  test("cutLayout: a leaf joined on its key plans no Exchange; the AQE flag is restored") {
+    import org.apache.spark.sql.functions._
+    val aqe = "spark.sql.adaptive.enabled"
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val (aqe0, threshold0) = (spark.conf.get(aqe), spark.conf.get(threshold))
+    spark.conf.set(threshold, "-1") // a sort-merge join, which needs the layout
+    try {
+      val df = spark.range(20000).select((col("id") % 2000).as("k"), col("id").as("v"))
+        .repartition(col("k")).sortWithinPartitions(col("k"))
+      def selfJoin(leaf: org.apache.spark.sql.DataFrame) = leaf.as("a").join(leaf.as("b"), "k")
+      for (prior <- Seq("true", "false")) {
+        spark.conf.set(aqe, prior)
+        val joined = selfJoin(SessionCache.cutLayout(df))
+        assert(spark.conf.get(aqe) === prior)
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"), s"AQE $prior:\n$plan")
+        assert(joined.count() === 2000L * 10 * 10)
+      }
+    } finally {
+      spark.conf.set(aqe, aqe0)
+      spark.conf.set(threshold, threshold0)
+    }
+  }
 }

@@ -5,8 +5,12 @@ import java.nio.ByteBuffer
 import java.nio.channels.SocketChannel
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.{Graft, SparkSpec}
 import graft.functions.ProtoLogCodec
@@ -261,6 +265,42 @@ class LogDriverServerSpec extends SparkSpec {
       stage(g, "late", burst(20 until 23))
       awaitCommitted(root, g, 8)
       stopEndsFollow(sock, fifo, reader, response, Seq("wire 20\n", "wire 21\n"))
+    } finally {
+      server.stop()
+      g.stopAll()
+    }
+  }
+
+  test("a Follow ReadLogs on a quiet container reads the table once") {
+    val root = Files.createTempDirectory("graft-wire3b").toString
+    val sock = Paths.get(root, "graft.sock")
+    val g = Graft(spark, root)
+    val server = new LogDriverServer(g, sock)
+    server.start()
+    try {
+      val fifo = Paths.get(root, "c1.fifo")
+      Files.write(fifo, burst(0 until 5))
+      startC1(sock, fifo, keep)
+      awaitCommitted(root, g, 5)
+      // SQL executions over the table, and those with follow's `seq >` predicate
+      val table = Paths.get(root, "logs").toString
+      val (reads, seqReads) = (new AtomicInteger, new AtomicInteger)
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case x: SparkListenerSQLExecutionStart if x.physicalPlanDescription.contains(table) =>
+            reads.incrementAndGet()
+            if (x.physicalPlanDescription.contains("GreaterThan(seq,")) seqReads.incrementAndGet()
+          case _ =>
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val (reader, response) = followInBackground(sock, readReq(true))
+        Thread.sleep(2000) // the range streamed; no commit follows
+        stopEndsFollow(sock, fifo, reader, response, (0 until 5).map(i => s"wire $i\n"))
+        Thread.sleep(1000) // the listener bus delivers the executions' starts
+        assert((reads.get, seqReads.get) === ((1, 1)))
+      } finally spark.sparkContext.removeSparkListener(listener)
     } finally {
       server.stop()
       g.stopAll()
