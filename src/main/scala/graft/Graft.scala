@@ -26,7 +26,7 @@ import graft.streaming.{FsUtil, LogIngest, Retention}
   * | StartLogging (FIFO → SQLite)      | `Graft(spark, dirs).startLogging(id, options)` |
   * | StopLogging (+ delete db)         | `stopLogging(id)`, deleting per the container's `delete_when_stopped` |
   * | ReadLogs since/until/tail         | `readLogs(id, since, until, tail)` |
-  * | ReadLogs follow=true              | `follow(id, since, until, after)(emit)` |
+  * | ReadLogs follow=true              | `follow(id, since, until)(emit)` |
   * | cleanup_age / cleanup_max_lines   | `cleanup(age, maxLines)` |
   * | crash recovery (active_fetches)   | `replayState()` |
   *
@@ -219,17 +219,14 @@ final class Graft(
 
   // ---- follow mode (O9) ---------------------------------------------------
 
-  /** `docker logs --follow` past the lines a caller already has: hands each
-    * new line of the request's own [[readLogs]] range (container, `since`,
-    * `until`; follow ignores tail) with a seq above the cursor, its seq and
-    * encoded LogEntry, to `emit` in seq order, and advances the cursor to
-    * the last seq emitted. `after` is the cursor's start: the seq of the
-    * last line the caller has already emitted, e.g. from its initial
-    * [[readLogs]].
+  /** `docker logs --follow`: hands each line of the request's own
+    * [[readLogs]] range (container, `since`, `until`; follow ignores tail),
+    * its seq and encoded LogEntry, to `emit` once and in seq order, and
+    * advances a cursor to the last seq emitted.
     *
-    * One catch-up read (`seq > after`) runs at once, since a commit may
-    * have landed after the caller's read; with the default `after` it
-    * reads the whole range. Later lines come from the
+    * One read of the whole range runs at once, after the follower is
+    * attached, so no commit can fall between the read and the feed. Later
+    * lines come from the
     * container's commits: while a container has a follower, each commit
     * reads its own batch once and hands it to every follower (the
     * committed batch is the increment, as in Structured Streaming), so a
@@ -246,14 +243,13 @@ final class Graft(
   def follow(
       containerId: String,
       since: Option[String] = None,
-      until: Option[String] = None,
-      after: Long = Long.MinValue)(
+      until: Option[String] = None)(
       emit: (Long, Array[Byte]) => Unit): Unit = {
     val commits = followed.getOrElse(containerId, new Graft.Commits(stopped = true))
     val req = LogOps.normalize(Some(containerId), since, until, 0, follow = true)
     val from = req.since.fold(Long.MinValue)(LogOps.nanos)
     val to = req.until.fold(Long.MaxValue)(LogOps.nanos)
-    var cursor = after
+    var cursor = Long.MinValue
     var lastLine = System.nanoTime()
     def emitAll(lines: Iterator[(Long, Array[Byte])]): Unit = lines.foreach { case (seq, message) =>
       emit(seq, message); cursor = seq; lastLine = System.nanoTime()

@@ -83,30 +83,28 @@ private[graft] object SessionCache {
   def cut(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     df.localCheckpoint(true)
 
-  /** [[cut]] for a frame whose physical LAYOUT is the point — a
-    * `repartition(key)[.sortWithinPartitions(key)]` leaf feeding
-    * key-equal self-joins or per-iteration joins. Under AQE the eager
-    * localCheckpoint's executed plan is an AdaptiveSparkPlanExec whose
-    * `outputPartitioning` reads `UnknownPartitioning(0)`, so the
-    * checkpointed LogicalRDD FORGETS it was hash-partitioned and every
-    * consumer re-shuffles — observed in the r15 q_vec_neardup_lsh plan:
-    * both self-join sides re-exchanged on `cell` directly above the
-    * leaf, i.e. the r14 "partitioned leaf" memos never physically
-    * carried their layout. Disabling AQE for just this one
-    * materialization lets LogicalRDD capture the HashPartitioning (and
-    * any sortWithinPartitions ordering), which consumers'
-    * EnsureRequirements then recognize — the join runs with ZERO
-    * Exchange (and zero Sort when the ordering is captured too). The
-    * frame is a built-once memo leaf, so AQE's runtime re-optimization
-    * buys nothing here; the conf flip is restored in a finally and the
-    * build path is already synchronous per memo contract.
+  /** [[cut]] for a `repartition(n, key)[.sortWithinPartitions(key)]` leaf
+    * feeding key-equal self-joins: the leaf keeps the partitioning and
+    * order its rows were computed in, so consumers join it with no
+    * Exchange. Under AQE a checkpoint's leaf reads the partitioning of the
+    * root AdaptiveSparkPlanExec, `UnknownPartitioning(0)`, and every
+    * consumer re-shuffles rows that already sit partitioned on the key;
+    * once the checkpoint has run, the final plan states the real layout.
+    * The partition count must be explicit, or AQE coalesces the exchange
+    * to fewer partitions than cores.
     */
-  def cutLayout(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.adaptive.enabled"
-    val prev = conf.get(key)
-    conf.set(key, "false")
-    try df.localCheckpoint(true) finally conf.set(key, prev)
+  def cutPartitioned(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val leaf = cut(df)
+    (df.queryExecution.executedPlan, leaf.queryExecution.logical) match {
+      case (a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec, r: LogicalRDD) =>
+        val done = a.executedPlan
+        org.apache.spark.sql.graft.ColumnBridge.ofPlan(df.sparkSession,
+          LogicalRDD(r.output, r.rdd, done.outputPartitioning, done.outputOrdering)(
+            df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+            Some(r.stats)))
+      case _ => leaf
+    }
   }
 
   /** Free a memoized frame's storage on eviction: the plan-cache entry

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -29,68 +31,62 @@ object Tables {
     cache.getOrElseUpdate(spark, s"$sfDir/$name.parquet")((s, p) => s.read.parquet(p))
   }
 
-  /** Width-pin a byte-small frame before a CPU-heavy per-row stage. The
-    * driver fixtures are single-row-group parquet files, so a scan is ONE
-    * split and AQE coalesces small exchanges to one partition — either
-    * way a regex/hash/signature kernel fused above it runs single-core on
-    * a 32-thread box. Size-gated: past the upper threshold the input is
-    * already wide (many files / row groups at corpus scale) and no
-    * exchange is forced, so nothing text-sized ever shuffles on account
-    * of this.
-    *
-    * `minBytes` (r14) is the LOWER gate: below it the serial kernel work
-    * is cheaper than the exchange roundtrip the pin inserts, so the pin
-    * must stand down — measured b2b at sf0.1 (tiny inputs) the
-    * unconditional pin cost 1.4–2× per query while the same pin won
-    * 1.5–2× at the ×10 fixture. Callers pick minBytes per kernel weight;
-    * 0 keeps the r13 unconditional behavior.
+  /** What a table's parquet footers state: how many row groups (the
+    * smallest scan splits) it has, and the uncompressed bytes of each
+    * top-level column. A metadata read (no Spark job), memoized per
+    * (session, path).
     */
-  /** Parquet-footer ROW COUNT of a fixture table — a pure metadata read
-    * (no Spark job), memoized per (session, path). Scale gates need a
-    * signal that separates fixtures whose BYTE sizes don't (VERDICT r14
-    * #4: the ×10 clique fixture compresses ~10× better, so `documents`
-    * reads 0.59 vs 0.91 MB for 50k vs 500k rows and a byte gate can't
-    * fire); the footer row count is exact at any compression ratio.
-    */
-  private val rowCountCache = new SessionCache[java.lang.Long]
+  private[graft] final case class Footer(rowGroups: Int, columnBytes: Map[String, Long])
 
-  private[graft] def tableRows(s: SparkSession, d: String, name: String): Long =
-    rowCountCache.getOrElseUpdate(s, s"$d/$name.parquet") { (ss, p) =>
+  private val footers = new SessionCache[Footer]
+
+  private[graft] def footer(s: SparkSession, d: String, name: String): Footer =
+    footers.getOrElseUpdate(s, s"$d/$name.parquet") { (ss, p) =>
       val conf = ss.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(p)
       val fs = root.getFileSystem(conf)
       val files =
         if (fs.getFileStatus(root).isDirectory)
-          fs.listStatus(root).map(_.getPath)
-            .filter(f => f.getName.endsWith(".parquet"))
-        else Array(root)
-      var total = 0L
-      files.foreach { f =>
+          fs.listStatus(root).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
+        else Seq(root)
+      val blocks = files.flatMap { f =>
         val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-        try total += rd.getRecordCount finally rd.close()
+        try rd.getFooter.getBlocks.asScala.toSeq finally rd.close()
       }
-      java.lang.Long.valueOf(total)
-    }.longValue()
+      Footer(blocks.size, blocks.flatMap(_.getColumns.asScala)
+        .groupMapReduce(_.getPath.toArray.head)(_.getTotalUncompressedSize)(_ + _))
+    }
 
-  /** Row-count-gated width pin (VERDICT r14 #4): [[widenSmall]] whose
-    * LOWER gate reads the source table's parquet-footer row count
-    * instead of plan bytes — the ×10 clique fixture compresses ~10×
-    * better than organic text, so a byte gate cannot separate 50k from
-    * 500k documents (0.59 vs 0.91 MB) while the footer row count is
-    * exact at any compression ratio. The pin fires only when the table
-    * holds ≥ `minRows` rows AND the frame is still byte-small
-    * ([[widenSmall]]'s upper gate keeps corpus-scale scans untouched —
-    * a many-row-group scan is already wide and must not be re-shuffled).
+  /** Uncompressed footer bytes per core from which a narrow scan is worth
+    * a round-robin exchange ahead of a per-row kernel; see [[widen]].
+    * Chosen from each pinned query timed with the pin forced on and off,
+    * on 4 cores at sf0.1 and at the ×10 replica (CHANGES.md): every pin
+    * that paid did so over `documents` (1.58 MB at sf0.1) or `embeddings`
+    * (0.81 MB at sf0.1), and those at sf0.1 need a constant at most
+    * 0.81 MB / 4 cores. The oracle tables (0.2 MB or less) stay narrow.
     */
-  private[graft] def widenSmallRows(s: SparkSession, d: String, name: String,
-      df: DataFrame, minRows: Long): DataFrame =
-    if (tableRows(s, d, name) >= minRows) widenSmall(df) else df
+  private[graft] val WidenBytesPerCore: Long = 128L << 10
 
-  private[graft] def widenSmall(df: DataFrame, minBytes: Long = 0L): DataFrame = {
-    val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (sz >= minBytes && sz < (512L << 20))
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+  /** Spread `df`, a frame over table `name`, across every core before a
+    * CPU-heavy per-row stage. A parquet row group is the smallest scan
+    * split, so a table with fewer row groups than cores scans on fewer
+    * tasks than cores, and a kernel fused above the scan runs that
+    * narrow. `df` is repartitioned to `defaultParallelism` only when
+    * both hold:
+    *  - the table's footers show fewer row groups than cores (a wider
+    *    scan is already spread, and must not be re-shuffled);
+    *  - `df`'s columns hold at least [[WidenBytesPerCore]] uncompressed
+    *    footer bytes per core (below that the serial kernel is cheaper
+    *    than the exchange). Uncompressed bytes do not shrink with the
+    *    codec's ratio, so the ×10 replica's better compression does not
+    *    hide its rows.
+    */
+  private[graft] def widen(s: SparkSession, d: String, name: String, df: DataFrame): DataFrame = {
+    val f = footer(s, d, name)
+    val cores = s.sparkContext.defaultParallelism
+    val bytes = df.columns.distinct.flatMap(f.columnBytes.get).sum
+    if (f.rowGroups < cores && bytes >= WidenBytesPerCore * cores) df.repartition(cores)
     else df
   }
 

@@ -52,8 +52,8 @@ object CurationOps {
     // row (the dominant cost of the signal stage — a single-task 2.8 s
     // stage at the ×10 fixture); one compiled pass is value-identical
     // (BestLang's scaladoc carries the equivalence argument) and cheap
-    // enough that no width-pin is needed at any scale (a widenSmall pin
-    // here measured 0.45 → 0.67 s b2b at sf0.1 — reverted).
+    // enough that no width-pin is needed at any scale (a round-robin
+    // repartition here measured 0.45 → 0.67 s b2b at sf0.1 — reverted).
     val profs = TextOps.langProfiles.toSeq.sortBy(_._1)
     val best = graft.functions.sketch.bestLang(
       TextOps.tokens(lower(col("text"))),
@@ -102,11 +102,10 @@ object CurationOps {
   def qualityCalibration(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // NOT width-pinned (r14, measured): `sig` feeds TWO consumers (the
-    // fp window and the quantile bounds), so a widenSmall pin makes both
-    // re-read a text-sized repartition exchange and recompute the signal
+    // fp window and the quantile bounds), so a round-robin repartition
+    // makes both re-read a text-sized exchange and recompute the signal
     // block above it — b2b min-of-6 at the ×10 fixture: 1.21 → 2.27 s,
-    // the r12 multi-subtree caveat in action. [[curate]]'s single-
-    // consumer chain is pinned; this one stays on the bare scan.
+    // the r12 multi-subtree caveat in action; it stays on the bare scan.
     val sig = Tables.documents(s, d).select(
       col("doc_id"), md5(col("text")).as("fp"),
       qualityCol.as("quality"), nTokensCol.as("n_tokens"))

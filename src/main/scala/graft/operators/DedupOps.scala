@@ -372,18 +372,15 @@ object DedupOps {
     * On corpora with no exact duplicates this degenerates to f(docs)
     * plus an output-sized identity join.
     */
-  /** Canonical documents (one row per distinct text), WIDTH-PINNED for
-    * CPU-heavy per-row kernels: the contraction makes the frame
-    * byte-small, so AQE coalesces the semi-join exchange to ONE
-    * partition locally and serializes regex/minhash/simhash work on a
-    * single core (every stage ran tasks=1, e.g. repeatSpans
-    * 2.5 s warm at sf0.1 → 32-way after the pin). Size-gated: at corpus
-    * scale the scan is already wide and the gate never fires — a forced
-    * exchange there would shuffle the full text payload.
+  /** Canonical documents (one row per distinct text), widened
+    * ([[Tables.widen]]) for CPU-heavy per-row kernels: the contraction
+    * makes the frame byte-small, so AQE coalesces the semi-join exchange
+    * to ONE partition and serializes regex/minhash/simhash work on a
+    * single core.
     */
   private def canonDocsWide(s: SparkSession, d: String): DataFrame = {
     val (_, weights) = contraction(s, d)
-    graft.Tables.widenSmall(Tables.documents(s, d)
+    Tables.widen(s, d, "documents", Tables.documents(s, d)
       .join(weights.select(col("canon").as("doc_id")), Seq("doc_id"),
         "left_semi"))
   }

@@ -117,7 +117,7 @@ object EventAnalyticsOps {
       .select(unix_millis(col("d")).as("day_ms"), col("dau"))
     // NOT width-pinned (r14, measured): AQE coalesces the distinct's
     // exchange to ~2 partitions at fixture scale and the ×windowDays
-    // explode runs narrow, but a widenSmall repartition of user-days
+    // explode runs narrow, but a round-robin repartition of user-days
     // measured a b2b REGRESSION (min 1.678 → 1.866 s at the ×10
     // fixture, every warm sample higher) — the extra exchange costs more
     // than the widened fanout saves on this bounded rollup.

@@ -162,14 +162,8 @@ object RetrievalOps {
     * both shuffles carry (term, id, count) — never text.
     */
   def invertedIndex(s: SparkSession, d: String): DataFrame =
-    // ROW-gated width pin (r15, VERDICT r14 #4): r14 measured the
-    // unconditional pin winning at sf1 (2.17 → 1.90 b2b) but losing at
-    // sf0.1 (0.58 → 0.98), and the documents file sizes (0.59 vs
-    // 0.91 MB) gave a byte gate nothing to separate; the parquet-footer
-    // row gate (≥20k docs) fires exactly where the win was measured
-    invertedIndexOf(
-      Tables.widenSmallRows(s, d, "documents", Tables.documents(s, d),
-        20000L))
+    // no width pin: forced on, it paid on 4 cores at neither sf0.1 nor ×10
+    invertedIndexOf(Tables.documents(s, d))
 
   /** [[invertedIndex]] over an arbitrary `(doc_id, text)` frame. */
   def invertedIndexOf(docs: DataFrame): DataFrame = {
@@ -298,7 +292,7 @@ object RetrievalOps {
     // scans, no corpus-sized shuffle anywhere — see per-stage notes.
     // NOT width-pinned (r14, measured): `docs` is consumed by THREE
     // sequential ACTIONS, and each action re-plans the frame — a
-    // widenSmall repartition re-executes its text-sized exchange under
+    // round-robin repartition re-executes its text-sized exchange under
     // every action instead of being reused (b2b min-of-8 at the ×10
     // fixture: 2.77 → 9.2 s, samples to 67 s). The single-core tokenize
     // passes over the fixture's one-row-group scan are the cheaper evil.
@@ -537,12 +531,8 @@ object RetrievalOps {
     * constant-size (2-char key) shuffle rows.
     */
   def bpePairCounts(s: SparkSession, d: String, k: Int = 30): DataFrame =
-    // row-gated width pin (r15, VERDICT r14 #4): the double explode +
-    // substr projection runs fused over the ONE-row-group fixture scan
-    // (sf1 = 4.8× the sf0.1 time at 10× data, 1-task stage)
-    bpePairCountsOf(
-      Tables.widenSmallRows(s, d, "documents", Tables.documents(s, d),
-        20000L), k)
+    // the double explode + substr projection fuses above the scan
+    bpePairCountsOf(Tables.widen(s, d, "documents", Tables.documents(s, d)), k)
 
   /** [[bpePairCounts]] over an arbitrary `(text)` frame. */
   def bpePairCountsOf(docs: DataFrame, k: Int = 30): DataFrame =
@@ -643,7 +633,7 @@ object RetrievalOps {
       s: SparkSession, d: String,
       minSim: Double = 0.5, dfDenom: Int = 10,
       maxDf: Long = 1000L): DataFrame = {
-    // NOT width-pinned (Tables.widenSmall): `docs` feeds THREE subtrees
+    // NOT width-pinned: `docs` feeds THREE subtrees
     // (postings, token counts, corpus size), so a repartition here is
     // re-read per subtree and measured 2.3× WORSE than the single-split
     // scan at sf0.1 — the postings rollup right above the scan is where

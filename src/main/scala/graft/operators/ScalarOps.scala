@@ -16,11 +16,8 @@ object ScalarOps {
     * regexp extraction, padding, replacement, concat.
     */
   def stringFuncs(s: SparkSession, d: String): DataFrame =
-    // row-gated width pin (r15, VERDICT r14 #4): ten string kernels per
-    // row fused over part's ONE-row-group fixture scan (sf1 read 4.6×
-    // the sf0.1 time at 10× data — a 1-task stage); part is 10× smaller
-    // than documents per SF, hence the lower gate
-    Tables.widenSmallRows(s, d, "part", Tables.part(s, d), 100000L)
+    // no width pin: forced on, it paid on 4 cores at neither sf0.1 nor ×10
+    Tables.part(s, d)
       .select(
         col("p_partkey"),
         upper(col("p_name")).as("name_upper"),
@@ -81,9 +78,8 @@ object ScalarOps {
     * avoid them. All codegen'd built-ins per row, zero shuffle.
     */
   def regexFuncs(s: SparkSession, d: String): DataFrame =
-    // width-pinned: three regex passes per row are the whole query, single
-    // consumer — the TextOps.languageId rationale (3.2 s linear at sf1)
-    Tables.widenSmall(Tables.documents(s, d))
+    // three regex passes per row are the whole query, single consumer
+    Tables.widen(s, d, "documents", Tables.documents(s, d))
       .select(
         col("doc_id"),
         size(regexp_extract_all(col("text"), lit("[0-9]+"), lit(0)))

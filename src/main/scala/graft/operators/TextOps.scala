@@ -24,11 +24,8 @@ object TextOps {
     * proxy that matches on both engines' regex dialects).
     */
   def tokenStats(s: SparkSession, d: String): DataFrame =
-    // row-gated width pin (r15, VERDICT r14 #4): the fused split/regex
-    // projection is the whole query and the fixture scan is ONE row
-    // group, so ≥20k docs ran it 1-task (sf1 read 6.2× the sf0.1 time
-    // at 10× data); measured b2b at both SFs in OPTIMIZATION_r15 §
-    Tables.widenSmallRows(s, d, "documents", Tables.documents(s, d), 20000L)
+    // the fused split/regex projection is the whole query
+    Tables.widen(s, d, "documents", Tables.documents(s, d))
       .select(
         col("doc_id"),
         size(tokens(col("text"))).as("n_tokens"),
@@ -529,9 +526,8 @@ object TextOps {
     val nTok = size(toks)
     val stop = size(filter(toks, t => t === "the" || t === "a" || t === "of"))
     val nonAlnum = length(regexp_replace(col("text"), "[a-z0-9 ]", ""))
-    // width-pinned: per-row tokenize+regex kernel, single consumer — the
-    // languageId rationale verbatim (3.5 s linear at sf1 before the pin)
-    Tables.widenSmall(Tables.documents(s, d))
+    // per-row tokenize+regex kernel, single consumer
+    Tables.widen(s, d, "documents", Tables.documents(s, d))
       .select(
         col("doc_id"),
         col("n_chars"),
@@ -770,13 +766,10 @@ object TextOps {
       struct(round(scoreOf(col("tk"), prof), 6).as("score"),
              lit(lang).as("lang"))
     }
-    // width-pinned (Tables.widenSmall, 512 MB-gated → no-op at corpus
-    // scale): the per-language score closures are the hot stage and the
-    // single-row-group fixture scan would run them ONE-core — measured
-    // linear (not sublinear) ×10 scaling at sf1 (3.4 s = 10 × sf0.1).
-    // Single consumer chain, so the r12 multi-subtree caveat
-    // (RetrievalOps.tfidfSimilarPairs) does not apply.
-    Tables.widenSmall(Tables.documents(s, d))
+    // the per-language score closures are the hot stage. Single consumer
+    // chain, so the r12 multi-subtree caveat (RetrievalOps.tfidfSimilarPairs)
+    // does not apply.
+    Tables.widen(s, d, "documents", Tables.documents(s, d))
       .select(col("doc_id"), col("lang").as("lang_actual"),
         tokens(lower(col("text"))).as("tk"))
       .select(col("doc_id"), col("lang_actual"),
@@ -1066,14 +1059,8 @@ object TextOps {
     * no engine-divergent float accumulation anywhere.
     */
   def termBurstiness(s: SparkSession, d: String, topN: Int = 20): DataFrame =
-    // ROW-gated width pin (r15, VERDICT r14 #4): r14's byte gate could
-    // not separate the fixtures (0.59 vs 0.91 MB files for 50k vs 500k
-    // docs) and the unconditional pin lost at sf0.1 (0.33 → 0.69 s b2b)
-    // while winning at sf1; the parquet-footer row gate fires at ≥20k
-    // docs only — sf0.1 stays un-pinned, the ×10 fixture parallelizes
-    termBurstinessOf(
-      Tables.widenSmallRows(s, d, "documents", Tables.documents(s, d),
-        20000L), topN)
+    // no width pin: forced on, it paid on 4 cores at neither sf0.1 nor ×10
+    termBurstinessOf(Tables.documents(s, d), topN)
 
   /** [[termBurstiness]] over an arbitrary `(doc_id, text)` frame. */
   def termBurstinessOf(docs: DataFrame, topN: Int = 20): DataFrame = {

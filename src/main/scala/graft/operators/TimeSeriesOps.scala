@@ -235,17 +235,8 @@ object TimeSeriesOps {
     * query also exercises group-by over a derived column.
     */
   def propsKeyStats(s: SparkSession, d: String): DataFrame =
-    // width-pinned above 3 MB of PLAN-STATS bytes (r14) — the gate reads
-    // optimizedPlan.stats.sizeInBytes of the (event_type, props)
-    // projection, not file sizes: JSON parsing is the per-row cost and
-    // the fixture's events scan is ONE row group — measured a 3-task
-    // stage (med 29 ms, max 2.2 s: one task held every row) at the ×10
-    // fixture (projection stats ~12 MB; pin → 2.33 → 1.57 s b2b), while
-    // at sf0.1 (~2 MB) the pin measured 0.36 → 0.50 s — the lower gate
-    // keeps it out there. No-op at corpus scale either way.
-    Tables.widenSmall(
-      Tables.events(s, d).select(col("event_type"), col("props")),
-      minBytes = 3L << 20)
+    // no width pin: forced on, it paid on 4 cores at neither sf0.1 nor ×10
+    Tables.events(s, d).select(col("event_type"), col("props"))
       .select(
         col("event_type"),
         get_json_object(col("props"), "$.k").cast("int").as("k"))

@@ -342,10 +342,8 @@ object TrainPrepOps {
     }
 
   private[graft] def taintTableOf(s: SparkSession, d: String): DataFrame = {
-    // width-pin (the r13 widenSmall stance): the shingle+md5 kernel chain
-    // fuses above the scan, and the fixture scan is one row group — the
-    // whole corpus would md5 on one core; no-op at corpus scale
-    val sh = Tables.widenSmall(Tables.documents(s, d))
+    // the shingle+md5 kernel chain fuses above the scan
+    val sh = Tables.widen(s, d, "documents", Tables.documents(s, d))
       .select(col("doc_id"), explode(wordShingles(toks, 3)).as("sh"))
       .select(col("doc_id"), shingleKey(col("sh")).as("shk"))
     val evalKeys = sh.where(col("doc_id") % 10 === 0)
@@ -443,17 +441,10 @@ object TrainPrepOps {
 
   def bloomDecontaminate(s: SparkSession, d: String,
       minFrac: Double = 0.05, fpp: Double = 0.01): DataFrame = {
-    // ROW-gated width pin on the shingle chain (r15): r14's UNCONDITIONAL
-    // pin was rejected on its sf0.1 loss (0.98 → 1.60 s — three consumers
-    // re-reading a text exchange that outprices tiny inputs), which the
-    // parquet-footer row gate (≥20k docs) now avoids: sf0.1 (5k docs)
-    // keeps the r13 path byte-identical, the ×10 fixture widens the
-    // shingle+md5 kernel evaluations that otherwise fuse into the serial
-    // ONE-row-group scan. The size()-totals rewrite (r14 dead end #6,
-    // 3.29 → 4.87 s at sf1) is NOT retried — the two-branch explode form
-    // stays. Corpus scans stand down via the byte upper gate.
-    val sh = Tables.widenSmallRows(s, d, "documents",
-        Tables.documents(s, d), 20000L)
+    // the shingle+md5 kernel chain fuses above the scan. The size()-totals
+    // rewrite (r14 dead end #6, 3.29 → 4.87 s at sf1) is NOT retried —
+    // the two-branch explode form stays.
+    val sh = Tables.widen(s, d, "documents", Tables.documents(s, d))
       .select(col("doc_id"), explode(wordShingles(toks, 3)).as("sh"))
       .select(col("doc_id"), shingleKey(col("sh")).as("shk"))
     val evalKeys = sh.where(col("doc_id") % 10 === 0)
@@ -502,10 +493,8 @@ object TrainPrepOps {
     * (VERDICT r4 "What's wrong #2").
     */
   def repetitionStats(s: SparkSession, d: String, maxDupFrac: Double = 0.2): DataFrame = {
-    // row-gated width pin (r15, VERDICT r14 #4): the bigramStats kernel
-    // is the whole query and runs fused over the ONE-row-group fixture
-    // scan (sf1 read 5.7× the sf0.1 time at 10× data — a 1-task stage)
-    Tables.widenSmallRows(s, d, "documents", Tables.documents(s, d), 20000L)
+    // the bigramStats kernel is the whole query, fused above the scan
+    Tables.widen(s, d, "documents", Tables.documents(s, d))
       .where(size(toks) >= 2)
       .select(col("doc_id"), bigramStats(toks).as("st"))
       .select(
@@ -583,10 +572,8 @@ object TrainPrepOps {
   def chunk(s: SparkSession, d: String, win: Int = 64, stride: Int = 48): DataFrame = {
     require(stride >= 1 && win >= stride, s"need win >= stride >= 1, got $win/$stride")
     val nChunks = ceil(size(toks).cast("double") / stride).cast("int")
-    // row-gated width pin (r15, VERDICT r14 #4): the tokenize + window
-    // explode + per-chunk md5 all fuse over the ONE-row-group fixture
-    // scan (sf1 read 5.0× the sf0.1 time at 10× data — a 1-task stage)
-    Tables.widenSmallRows(s, d, "documents", Tables.documents(s, d), 20000L)
+    // the tokenize + window explode + per-chunk md5 fuse above the scan
+    Tables.widen(s, d, "documents", Tables.documents(s, d))
       .select(col("doc_id"), toks.as("toks"),
         explode(sequence(lit(0), nChunks - 1)).as("chunk_idx"))
       .select(

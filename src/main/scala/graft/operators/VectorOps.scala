@@ -168,16 +168,16 @@ object VectorOps {
   private def cellEmb(s: SparkSession, d: String, targetCell: Long): DataFrame =
     cellEmbCache.getOrElseUpdate(s, s"$d#$targetCell") { (ss, _) =>
       val n = Tables.embeddings(ss, d).agg(count(lit(1)).as("n_vec"))
-      // cutLayout (not cut): the leaf must PHYSICALLY carry the
-      // hash-partitioning + within-partition order, or every consumer
-      // re-exchanges and re-sorts on cell (see SessionCache.cutLayout)
-      graft.SessionCache.cutLayout(
+      // the leaf carries the hash-partitioning and the within-partition
+      // order, so no consumer re-exchanges or re-sorts on cell (PlansSpec
+      // locks the self-join)
+      graft.SessionCache.cutPartitioned(
         Tables.embeddings(ss, d)
           .crossJoin(broadcast(n)) // 1 row — the corpus size
           .select(col("vec_id"), col("embedding"),
             cellDyn(col("embedding"),
               adaptiveBits(col("n_vec"), targetCell)).as("cell"))
-          .repartition(col("cell"))
+          .repartition(ss.conf.get("spark.sql.shuffle.partitions").toInt, col("cell"))
           .sortWithinPartitions(col("cell")))
     }
 
@@ -454,11 +454,8 @@ object VectorOps {
     // quantize lambda (per-ELEMENT re-eval) and the q tree five times
     // into one projection: O(dim²)+ per row, 2.3 s at sf0.1 for 2 k×64
     // floats. Staged: 0.1 s, each pass once per row.
-    // width-pinned above 2 MB (r14): the staged HOF passes fuse over a
-    // 1-row-group fixture scan and ran two-core at the ×10 fixture
-    // (0.6 s × 2 tasks; pin → 1.42 → 0.97 s b2b), but at sf0.1 (0.8 MB)
-    // the pin measured 0.27 → 0.52 s — the lower gate keeps it out there
-    Tables.widenSmall(Tables.embeddings(s, d), minBytes = 2L << 20)
+    // the staged HOF passes fuse above the scan
+    Tables.widen(s, d, "embeddings", Tables.embeddings(s, d))
       .select(col("vec_id"), col("label"), asD(col("embedding")).as("e"))
       .select(col("vec_id"), col("label"), col("e"),
         greatest(array_max(transform(col("e"), x => abs(x))), lit(1e-12))
@@ -883,7 +880,7 @@ object VectorOps {
     * BroadcastNestedLoopJoin into a (vec_id,label) partial max: same
     * arithmetic, but |train|·|eval| materialized rows and a full
     * |train|-row exchange — measured 7.9 s on 2 tasks at the ×10 fixture
-    * (the scan's 2 row groups bound the stage width; see widenSmall).
+    * (the scan's 2 row groups bound the stage width).
     * The per-pair cosine is [[graft.functions.Sketch.cosine]]'s loop
     * verbatim and quantization is monotone, so max-then-quantize ≡
     * quantize-then-max: bit-identical output. For 100 TB×large-eval,
@@ -936,10 +933,8 @@ object VectorOps {
           lit(0.0).as("max_maxsim"), lit(0.0).as("mean_maxsim"))
         .orderBy(col("label"))
     }
-    // width-pin (the r13 widenSmall stance): the fixture scan is 1–2 row
-    // groups, so this compute-bound kernel stage would otherwise run on
-    // 1–2 of 32 cores; no-op at corpus scale where the scan is wide
-    Tables.widenSmall(train)
+    // no width pin: forced on, it paid on 4 cores at neither sf0.1 nor ×10
+    train
       .select(col("label"),
         round(maxCosineSim(col("embedding"), evalVecs) * 1e6, 0)
           .cast("long").as("msimq"))
@@ -1088,7 +1083,7 @@ object VectorOps {
         // satisfies every iteration's contribution join directly — the
         // edge table (the big side at scale) crosses the wire once at
         // build, not once per iteration.
-        // Plain cut, not cutLayout: a carried layout leaf measured sf0.1
+        // Plain cut: a leaf checkpointed with AQE off measured sf0.1
         // 0.73 → 1.59 s (b2b min-of-6), forcing zero-exchange SMJs over
         // joins AQE otherwise broadcasts.
         def cutL(df: org.apache.spark.sql.DataFrame, key: String) =

@@ -329,12 +329,13 @@ object LogIngest {
     * already-committed. Derived from the checkpoint location, the thing
     * that IS the query's identity across restarts.
     */
-  def commitNamespace(checkpointDir: String): String =
+  def commitNamespace(checkpointDir: String): String = {
+    val bytes = checkpointDir.getBytes("UTF-8")
     java.lang.Long.toHexString(
       org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(
-        checkpointDir.getBytes("UTF-8"),
-        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-        checkpointDir.length, 42) & 0xFFFFFFFFL)
+        bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, bytes.length, 42)
+        & 0xFFFFFFFFL)
+  }
 
   /** Idempotent micro-batch commit — the engine's transaction (the
     * reference's BEGIN…END, logsqlite src/logger.rs:184-222), effectively

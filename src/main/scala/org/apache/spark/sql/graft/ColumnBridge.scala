@@ -16,6 +16,12 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A frame of `spark` over a resolved logical plan (`Dataset.ofRows`). */
+  def ofPlan(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** Drop the session-shared file-listing cache. `refreshByPath` only
     * re-caches CacheManager entries; path-based parquet reads keep their
     * leaf-file lists in the shared FileStatusCache, which must be

@@ -48,7 +48,7 @@ class SessionCacheSpec extends SparkSpec {
       s"expected a checkpointed leaf:\n$plan")
   }
 
-  test("cutLayout: a leaf joined on its key plans no Exchange; the AQE flag is restored") {
+  test("cutPartitioned: a leaf joined on its key plans no Exchange, AQE on or off") {
     import org.apache.spark.sql.functions._
     val aqe = "spark.sql.adaptive.enabled"
     val threshold = "spark.sql.autoBroadcastJoinThreshold"
@@ -56,14 +56,13 @@ class SessionCacheSpec extends SparkSpec {
     spark.conf.set(threshold, "-1") // a sort-merge join, which needs the layout
     try {
       val df = spark.range(20000).select((col("id") % 2000).as("k"), col("id").as("v"))
-        .repartition(col("k")).sortWithinPartitions(col("k"))
+        .repartition(4, col("k")).sortWithinPartitions(col("k"))
       def selfJoin(leaf: org.apache.spark.sql.DataFrame) = leaf.as("a").join(leaf.as("b"), "k")
-      for (prior <- Seq("true", "false")) {
-        spark.conf.set(aqe, prior)
-        val joined = selfJoin(SessionCache.cutLayout(df))
-        assert(spark.conf.get(aqe) === prior)
+      for (flag <- Seq("true", "false")) {
+        spark.conf.set(aqe, flag)
+        val joined = selfJoin(SessionCache.cutPartitioned(df))
         val plan = joined.queryExecution.executedPlan.toString
-        assert(!plan.contains("Exchange"), s"AQE $prior:\n$plan")
+        assert(!plan.contains("Exchange"), s"AQE $flag:\n$plan")
         assert(joined.count() === 2000L * 10 * 10)
       }
     } finally {

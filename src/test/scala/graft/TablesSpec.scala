@@ -8,20 +8,23 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.functions._
 
-/** Direct coverage of the parquet-footer row count and the width pin it
-  * gates, over generated tables of 20k rows.
+/** The footer facts [[Tables.widen]] reads, and the rule it applies, over
+  * generated tables of 20k rows: `one`, a single file of one row group,
+  * and `parts`, a directory of part files with more row groups than cores.
   */
 class TablesSpec extends SparkSpec {
 
   private val rows = 20000L
+  private val parts = 5
+  private def cores: Int = spark.sparkContext.defaultParallelism
+  /** A payload wide enough that the full frame holds twice the bytes the rule needs. */
+  private def width: Int = (2 * Tables.WidenBytesPerCore * cores / rows).toInt + 1
 
-  /** A dataset dir holding `one.parquet`, a single file, and
-    * `parts.parquet`, a directory of part files, each `rows` rows.
-    */
   private lazy val dir: String = {
     val d = Files.createTempDirectory("graft-tables").toString
-    val gen = spark.range(rows).select(col("id"), (col("id") % 37).as("k"))
-    gen.repartition(5).write.parquet(s"$d/parts.parquet")
+    val gen = spark.range(rows).select(col("id"), (col("id") % 37).as("k"),
+      lpad(col("id").cast("string"), width, "x").as("payload"))
+    gen.repartition(parts).write.parquet(s"$d/parts.parquet")
     gen.coalesce(1).write.parquet(s"$d/one")
     val part = Files.list(Paths.get(d, "one")).iterator().asScala
       .find(_.toString.endsWith(".parquet")).get
@@ -29,25 +32,61 @@ class TablesSpec extends SparkSpec {
     d
   }
 
-  private def parquetFiles(path: String): Int =
-    Files.list(Paths.get(path)).iterator().asScala.count(_.toString.endsWith(".parquet"))
-
-  test("tableRows is the exact footer count of a single file and of a part-file dir") {
-    assert(Files.isRegularFile(Paths.get(dir, "one.parquet")))
-    assert(parquetFiles(s"$dir/parts.parquet") > 1)
-    assert(Tables.tableRows(spark, dir, "one") === rows)
-    assert(Tables.tableRows(spark, dir, "parts") === rows)
+  /** Uncompressed bytes of `cols`, summed over every file's row groups. */
+  private def footerBytes(path: String, cols: Set[String]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = Paths.get(path)
+    val files =
+      if (Files.isDirectory(p)) Files.list(p).iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+      else Seq(p)
+    files.map { f =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString), conf))
+      try rd.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .filter(c => cols(c.getPath.toDotString)).map(_.getTotalUncompressedSize).sum
+      finally rd.close()
+    }.sum
   }
 
-  test("widenSmallRows pins a round-robin width from minRows = count, never above; rows unchanged") {
-    val df = spark.read.parquet(s"$dir/parts.parquet")
-    def widened(minRows: Long): DataFrame = Tables.widenSmallRows(spark, dir, "parts", df, minRows)
-    def roundRobins(d: DataFrame): Seq[Int] =
-      d.queryExecution.logical.collect { case r: Repartition if r.shuffle => r.numPartitions }
-    assert(roundRobins(widened(rows)) === Seq(spark.sparkContext.defaultParallelism))
-    assert(roundRobins(widened(rows + 1)).isEmpty)
-    def agg(d: DataFrame) =
-      d.groupBy("k").agg(count(lit(1)), sum("id")).orderBy("k").collect().toSeq
-    assert(agg(widened(rows)) === agg(df))
+  private def roundRobins(d: DataFrame): Seq[Int] =
+    d.queryExecution.logical.collect { case r: Repartition if r.shuffle => r.numPartitions }
+
+  test("footer: exact row groups and uncompressed bytes per column, file or part-file dir") {
+    val one = Tables.footer(spark, dir, "one")
+    val many = Tables.footer(spark, dir, "parts")
+    assert(one.rowGroups === 1)
+    assert(many.rowGroups === parts)
+    assert(parts >= cores, "the part-file table must scan at least as wide as the cores")
+    for ((name, f) <- Seq("one" -> one, "parts" -> many)) {
+      assert(f.columnBytes.keySet === Set("id", "k", "payload"))
+      for (c <- f.columnBytes.keys)
+        assert(f.columnBytes(c) === footerBytes(s"$dir/$name.parquet", Set(c)), s"$name.$c")
+      // every payload value is stored once, uncompressed, at full width
+      assert(f.columnBytes("payload") >= rows * width)
+    }
+  }
+
+  test("widen: round-robin to the cores exactly when the scan is narrow and over the bytes") {
+    val need = Tables.WidenBytesPerCore * cores
+    val one = spark.read.parquet(s"$dir/one.parquet")
+    val many = spark.read.parquet(s"$dir/parts.parquet")
+    assert(Tables.footer(spark, dir, "one").columnBytes("payload") >= need)
+    assert(Tables.footer(spark, dir, "one").columnBytes("k") < need)
+    // narrow and over the bytes: widened
+    assert(roundRobins(Tables.widen(spark, dir, "one", one)) === Seq(cores))
+    assert(roundRobins(Tables.widen(spark, dir, "one", one.select("payload"))) === Seq(cores))
+    // narrow but under the bytes: the selected columns are what counts
+    assert(roundRobins(Tables.widen(spark, dir, "one", one.select("k"))).isEmpty)
+    // over the bytes but as many row groups as cores: already wide
+    assert(Tables.footer(spark, dir, "parts").columnBytes("payload") >= need)
+    assert(roundRobins(Tables.widen(spark, dir, "parts", many)).isEmpty)
+  }
+
+  test("widen: rows are unchanged") {
+    val one = spark.read.parquet(s"$dir/one.parquet")
+    val widened = Tables.widen(spark, dir, "one", one)
+    assert(roundRobins(widened).nonEmpty)
+    assert(widened.orderBy("id").collect().toSeq === one.orderBy("id").collect().toSeq)
   }
 }

@@ -505,6 +505,21 @@ class PlansSpec extends SparkSpec {
     assert(plan.contains("cell"), s"cell key vanished from the plan:\n$plan")
   }
 
+  test("nearDupPairsLsh: the within-cell self-join reuses the cellEmb leaf's partitioning") {
+    // broadcast off: a sort-merge join is the one that needs the layout
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val threshold0 = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try {
+      val plan = executedPlan(graft.operators.VectorOps.nearDupPairsLsh(spark, sf0001))
+      assert("SortMergeJoin \\[cell".r.findFirstIn(plan).isDefined,
+        s"expected the within-cell sort-merge join:\n$plan")
+      assert(plan.contains("Scan ExistingRDD"), s"expected the checkpointed cellEmb leaf:\n$plan")
+      assert(!plan.contains("Exchange hashpartitioning(cell"),
+        s"the leaf's cell partitioning must satisfy the join:\n$plan")
+    } finally spark.conf.set(threshold, threshold0)
+  }
+
   test("weightedSample: two-phase top-k agg — no window, no full-slice sort") {
     val plan = executedPlan(graft.operators.TrainPrepOps.weightedSample(spark, sf0001))
     assert(!plan.contains("Join"), s"sampling reads one table:\n$plan")

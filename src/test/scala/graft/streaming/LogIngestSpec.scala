@@ -435,6 +435,14 @@ class LogIngestSpec extends SparkSpec {
       .head.getLong(0) > 0)
   }
 
+  test("commitNamespace hashes every UTF-8 byte of the checkpoint path") {
+    // the ASCII value existing checkpoints resume under
+    assert(LogIngest.commitNamespace("/data/logs/checkpoints/c1") === "5fdf2ad9")
+    // a multi-byte character must not push the trailing bytes out of the hash
+    assert(LogIngest.commitNamespace("/data/josé/checkpoints/c1") !==
+      LogIngest.commitNamespace("/data/josé/checkpoints/c2"))
+  }
+
   test("a corrupt frame is skipped, not fatal — and the skip is counted") {
     val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
     val good = (0 until 3).map(entry(_, "c1"))
@@ -465,10 +473,11 @@ class LogIngestSpec extends SparkSpec {
       // follower's last read delivers it
       writeBurst(staging, "c1", "b1", (5 until 8).map(entry(_, "c1")))
       stopAndCheck(g, t, seen, 0 until 8)
-      // a container that is not logging: the follow ends after one read
+      // a container that is not logging: the follow reads the whole range
+      // once, in order, and ends
       val once = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      g.follow("c1", after = seqOf(2))((seq, _) => once.add(seq))
-      assert(once.asScala.toSeq === (3 until 8).map(seqOf))
+      g.follow("c1")((seq, _) => once.add(seq))
+      assert(once.asScala.toSeq === (0 until 8).map(seqOf))
     } finally g.stopAll()
   }
 
