@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -31,17 +29,14 @@ object Tables {
     cache.getOrElseUpdate(spark, s"$sfDir/$name.parquet")((s, p) => s.read.parquet(p))
   }
 
-  /** What a table's parquet footers state: how many row groups (the
-    * smallest scan splits) it has, and the uncompressed bytes of each
-    * top-level column. A metadata read (no Spark job), memoized per
+  /** How many row groups, the smallest scan splits, a table's parquet
+    * footers show: a metadata read (no Spark job), memoized per
     * (session, path).
     */
-  private[graft] final case class Footer(rowGroups: Int, columnBytes: Map[String, Long])
+  private val rowGroupCounts = new SessionCache[java.lang.Integer]
 
-  private val footers = new SessionCache[Footer]
-
-  private[graft] def footer(s: SparkSession, d: String, name: String): Footer =
-    footers.getOrElseUpdate(s, s"$d/$name.parquet") { (ss, p) =>
+  private[graft] def rowGroups(s: SparkSession, d: String, name: String): Int =
+    rowGroupCounts.getOrElseUpdate(s, s"$d/$name.parquet") { (ss, p) =>
       val conf = ss.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(p)
       val fs = root.getFileSystem(conf)
@@ -49,45 +44,22 @@ object Tables {
         if (fs.getFileStatus(root).isDirectory)
           fs.listStatus(root).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
         else Seq(root)
-      val blocks = files.flatMap { f =>
+      Integer.valueOf(files.map { f =>
         val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-        try rd.getFooter.getBlocks.asScala.toSeq finally rd.close()
-      }
-      Footer(blocks.size, blocks.flatMap(_.getColumns.asScala)
-        .groupMapReduce(_.getPath.toArray.head)(_.getTotalUncompressedSize)(_ + _))
-    }
-
-  /** Uncompressed footer bytes per core from which a narrow scan is worth
-    * a round-robin exchange ahead of a per-row kernel; see [[widen]].
-    * Chosen from each pinned query timed with the pin forced on and off,
-    * on 4 cores at sf0.1 and at the ×10 replica (CHANGES.md): every pin
-    * that paid did so over `documents` (1.58 MB at sf0.1) or `embeddings`
-    * (0.81 MB at sf0.1), and those at sf0.1 need a constant at most
-    * 0.81 MB / 4 cores. The oracle tables (0.2 MB or less) stay narrow.
-    */
-  private[graft] val WidenBytesPerCore: Long = 128L << 10
+        try rd.getRowGroups.size finally rd.close()
+      }.sum)
+    }.intValue()
 
   /** Spread `df`, a frame over table `name`, across every core before a
-    * CPU-heavy per-row stage. A parquet row group is the smallest scan
-    * split, so a table with fewer row groups than cores scans on fewer
-    * tasks than cores, and a kernel fused above the scan runs that
-    * narrow. `df` is repartitioned to `defaultParallelism` only when
-    * both hold:
-    *  - the table's footers show fewer row groups than cores (a wider
-    *    scan is already spread, and must not be re-shuffled);
-    *  - `df`'s columns hold at least [[WidenBytesPerCore]] uncompressed
-    *    footer bytes per core (below that the serial kernel is cheaper
-    *    than the exchange). Uncompressed bytes do not shrink with the
-    *    codec's ratio, so the ×10 replica's better compression does not
-    *    hide its rows.
+    * CPU-heavy per-row stage. A table with fewer row groups than cores
+    * scans on fewer tasks than cores, and a kernel fused above the scan
+    * runs that narrow, so `df` is repartitioned to `defaultParallelism`
+    * exactly then. A wider scan is already spread and is left alone.
     */
   private[graft] def widen(s: SparkSession, d: String, name: String, df: DataFrame): DataFrame = {
-    val f = footer(s, d, name)
     val cores = s.sparkContext.defaultParallelism
-    val bytes = df.columns.distinct.flatMap(f.columnBytes.get).sum
-    if (f.rowGroups < cores && bytes >= WidenBytesPerCore * cores) df.repartition(cores)
-    else df
+    if (rowGroups(s, d, name) < cores) df.repartition(cores) else df
   }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")

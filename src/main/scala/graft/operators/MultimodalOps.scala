@@ -38,10 +38,8 @@ object MultimodalOps {
     * (modality round-robined by doc_id) — the binary-column plumbing is
     * identical whatever the bytes encode.
     */
-  def mediaTable(s: SparkSession, d: String): DataFrame = mediaOf(Tables.documents(s, d))
-
-  private def mediaOf(docs: DataFrame): DataFrame =
-    docs.select(
+  def mediaTable(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(
       col("doc_id").as("media_id"),
       element_at(array(lit("image"), lit("audio"), lit("video")),
         (col("doc_id") % 3 + 1).cast("int")).as("modality"),
@@ -193,7 +191,7 @@ object MultimodalOps {
     // the per-row md5 + decode stub runs inside mapPartitions, one
     // decoder per partition; widening hands every core a partition,
     // which is the operator's own scale guidance
-    mediaOf(Tables.widen(s, d, "documents", Tables.documents(s, d)))
+    Tables.widen(s, d, "documents", mediaTable(s, d))
       .as[MediaRecord].mapPartitions { it =>
       // per-partition init, amortized over the batch (a real decoder's
       // codec context would be created here the same way)

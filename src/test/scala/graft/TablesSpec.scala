@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.functions._
 
-/** The footer facts [[Tables.widen]] reads, and the rule it applies, over
+/** The footer fact [[Tables.widen]] reads, and the rule it applies, over
   * generated tables of 20k rows: `one`, a single file of one row group,
   * and `parts`, a directory of part files with more row groups than cores.
   */
@@ -17,13 +17,11 @@ class TablesSpec extends SparkSpec {
   private val rows = 20000L
   private val parts = 5
   private def cores: Int = spark.sparkContext.defaultParallelism
-  /** A payload wide enough that the full frame holds twice the bytes the rule needs. */
-  private def width: Int = (2 * Tables.WidenBytesPerCore * cores / rows).toInt + 1
 
   private lazy val dir: String = {
     val d = Files.createTempDirectory("graft-tables").toString
     val gen = spark.range(rows).select(col("id"), (col("id") % 37).as("k"),
-      lpad(col("id").cast("string"), width, "x").as("payload"))
+      lpad(col("id").cast("string"), 64, "x").as("payload"))
     gen.repartition(parts).write.parquet(s"$d/parts.parquet")
     gen.coalesce(1).write.parquet(s"$d/one")
     val part = Files.list(Paths.get(d, "one")).iterator().asScala
@@ -32,8 +30,8 @@ class TablesSpec extends SparkSpec {
     d
   }
 
-  /** Uncompressed bytes of `cols`, summed over every file's row groups. */
-  private def footerBytes(path: String, cols: Set[String]): Long = {
+  /** Row groups of every file under `path`, read one footer at a time. */
+  private def footerRowGroups(path: String): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = Paths.get(path)
     val files =
@@ -43,43 +41,28 @@ class TablesSpec extends SparkSpec {
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f.toString), conf))
-      try rd.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
-        .filter(c => cols(c.getPath.toDotString)).map(_.getTotalUncompressedSize).sum
-      finally rd.close()
+      try rd.getFooter.getBlocks.size finally rd.close()
     }.sum
   }
 
   private def roundRobins(d: DataFrame): Seq[Int] =
     d.queryExecution.logical.collect { case r: Repartition if r.shuffle => r.numPartitions }
 
-  test("footer: exact row groups and uncompressed bytes per column, file or part-file dir") {
-    val one = Tables.footer(spark, dir, "one")
-    val many = Tables.footer(spark, dir, "parts")
-    assert(one.rowGroups === 1)
-    assert(many.rowGroups === parts)
-    assert(parts >= cores, "the part-file table must scan at least as wide as the cores")
-    for ((name, f) <- Seq("one" -> one, "parts" -> many)) {
-      assert(f.columnBytes.keySet === Set("id", "k", "payload"))
-      for (c <- f.columnBytes.keys)
-        assert(f.columnBytes(c) === footerBytes(s"$dir/$name.parquet", Set(c)), s"$name.$c")
-      // every payload value is stored once, uncompressed, at full width
-      assert(f.columnBytes("payload") >= rows * width)
-    }
+  test("rowGroups: the exact footer count of a single file and of a part-file dir") {
+    assert(Tables.rowGroups(spark, dir, "one") === 1)
+    assert(Tables.rowGroups(spark, dir, "parts") === parts)
+    assert(Tables.rowGroups(spark, dir, "parts") === footerRowGroups(s"$dir/parts.parquet"))
+    assert(spark.read.parquet(s"$dir/parts.parquet").count() === rows)
   }
 
-  test("widen: round-robin to the cores exactly when the scan is narrow and over the bytes") {
-    val need = Tables.WidenBytesPerCore * cores
+  test("widen: round-robin exactly when the table has fewer row groups than cores") {
+    assert(parts >= cores, "the part-file table must scan at least as wide as the cores")
     val one = spark.read.parquet(s"$dir/one.parquet")
     val many = spark.read.parquet(s"$dir/parts.parquet")
-    assert(Tables.footer(spark, dir, "one").columnBytes("payload") >= need)
-    assert(Tables.footer(spark, dir, "one").columnBytes("k") < need)
-    // narrow and over the bytes: widened
+    // one row group: widened, whatever columns the frame keeps
     assert(roundRobins(Tables.widen(spark, dir, "one", one)) === Seq(cores))
-    assert(roundRobins(Tables.widen(spark, dir, "one", one.select("payload"))) === Seq(cores))
-    // narrow but under the bytes: the selected columns are what counts
-    assert(roundRobins(Tables.widen(spark, dir, "one", one.select("k"))).isEmpty)
-    // over the bytes but as many row groups as cores: already wide
-    assert(Tables.footer(spark, dir, "parts").columnBytes("payload") >= need)
+    assert(roundRobins(Tables.widen(spark, dir, "one", one.select("k"))) === Seq(cores))
+    // as many row groups as cores: already wide, left alone
     assert(roundRobins(Tables.widen(spark, dir, "parts", many)).isEmpty)
   }
 
