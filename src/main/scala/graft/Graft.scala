@@ -52,10 +52,15 @@ final class Graft(
   private val active = TrieMap.empty[String, Logging]
 
   /** Each logging container's commits, which its followers wait on and
-    * are fed from, from StartLogging to its stop; retention's restart keeps
-    * them.
+    * are fed from, from StartLogging to its stop.
     */
   private val followed = TrieMap.empty[String, Graft.Commits]
+
+  /** Held by [[cleanup]], [[compact]] and [[stopLogging]]'s delete of a
+    * container: a pass must not move rows back under a container dir the
+    * delete removed, and two passes must not rewrite the same files.
+    */
+  private val maintenance = new Object
 
   // ---- lifecycle (SURVEY §2.1 O1-O3, O14-O16) -----------------------------
 
@@ -64,7 +69,7 @@ final class Graft(
     * segment or a bad option → Left(error string), the plugin protocol's
     * `{"Err": msg}` contract. Creates the container's staging dir (the
     * query lists it at analysis time) and keeps the options for
-    * [[stopLogging]], retention restarts and [[replayState]]. A container
+    * [[stopLogging]] and [[replayState]]. A container
     * already running keeps its query and options.
     */
   def startLogging(
@@ -118,7 +123,7 @@ final class Graft(
         try q.processAllAvailable() catch { case _: StreamingQueryException => }
       q.stop()
     }
-    if (delete) {
+    if (delete) maintenance.synchronized {
       // keeping the checkpoint would let replayState() resurrect a deleted
       // container, and keeping the staging bursts would re-ingest the
       // "deleted" data on a fresh start. Hadoop FileSystem, not java.nio:
@@ -175,20 +180,6 @@ final class Graft(
     else Graft.json.readTree(FsUtil.readLines(spark, optionsFile(containerId)).mkString("\n"))
       .properties.asScala.map(e => e.getKey -> e.getValue.asText).toMap
 
-  /** Stop every running ingest query, run `f`, restart each with the
-    * options it was started with; followers keep following. Retention's
-    * rewrite-and-swap must not race a concurrent appender: a file landing
-    * between the survivor snapshot and the directory swap would be deleted
-    * (its offsets are already checkpointed, so it would never be
-    * re-ingested).
-    */
-  private[graft] def quiesced[T](f: => T): T = {
-    val snapshot = active.toMap
-    snapshot.foreach { case (id, l) => l.q.stop(); active.remove(id) }
-    try f
-    finally snapshot.foreach { case (id, l) => startLogging(id, l.options) }
-  }
-
   // ---- reads (O4-O8) ------------------------------------------------------
 
   /** The log table as a DataFrame (full analytics surface applies), with
@@ -238,7 +229,8 @@ final class Graft(
     * Blocks until the container stops (after the batches committed before
     * the stop), at once if it was not logging, after 3600 s with no line
     * emitted (the reference's 3600 empty 1 s polls), or when `emit`
-    * throws. Retention's restart ([[quiesced]]) does not end it.
+    * throws. A retention sweep or compaction does not end it: neither
+    * stops an ingest query.
     */
   def follow(
       containerId: String,
@@ -347,13 +339,14 @@ final class Graft(
 
   // ---- retention / maintenance (O10-O13) ----------------------------------
 
+  /** One [[Retention.sweep]] of the table; every container keeps ingesting. */
   def cleanup(age: Option[java.time.Duration], maxLines: Option[Long]): Retention.SweepStats =
-    quiesced {
+    maintenance.synchronized {
       Retention.sweep(spark, tableRoot, age.map(a => Instant.now().minus(a)), maxLines)
     }
 
-  def compact(targetBytes: Long = 128L << 20): Int =
-    quiesced(Retention.compact(spark, tableRoot, targetBytes))
+  /** One [[Retention.compact]] of the table; every container keeps ingesting. */
+  def compact(): Int = maintenance.synchronized(Retention.compact(spark, tableRoot))
 }
 
 object Graft {

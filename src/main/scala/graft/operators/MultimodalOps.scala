@@ -86,9 +86,12 @@ object MultimodalOps {
       .orderBy(col("modality"))
   }
 
+  /** Bytes per partition of a decode stage ([[decodePlan]]). */
+  private val DecodeBytes = 4L << 20
+
   /** Decode-stage partition plan: per (modality, log₂-size bucket), item
     * and byte mass plus the partition count a byte-balanced decode stage
-    * needs at `targetBytes` per partition — the operator form of this
+    * needs at [[DecodeBytes]] per partition — the operator form of this
     * pack's "repartition by size-bucket if payload skew is observed"
     * guidance. Decode cost tracks BYTES, not rows: hash-partitioning a
     * mixed corpus by id strands one 4 GB video with 10 000 thumbnails on
@@ -99,8 +102,7 @@ object MultimodalOps {
     * Exact integer arithmetic end to end: bucket = `length(bin(bytes))−1`
     * (floor(log₂)), partitions = ceil-div in longs.
     */
-  def decodePlan(s: SparkSession, d: String,
-      targetBytes: Long = 4L << 20): DataFrame =
+  def decodePlan(s: SparkSession, d: String): DataFrame =
     mediaTable(s, d)
       .select(col("modality"),
         length(col("payload")).cast("long").as("n_bytes"))
@@ -111,7 +113,7 @@ object MultimodalOps {
       .select(col("modality"), col("size_bucket"), col("n_items"),
         col("bytes_total"),
         call_function("div",
-          col("bytes_total") + (targetBytes - 1), lit(targetBytes))
+          col("bytes_total") + (DecodeBytes - 1), lit(DecodeBytes))
           .as("n_partitions"))
       .orderBy(col("modality"), col("size_bucket"))
 

@@ -752,8 +752,8 @@ object TrainPrepOps {
     *
     * Commit protocol: the whole layout is written to a `.staging`
     * directory and swapped in with directory renames via the shared
-    * Hadoop-FS plumbing ([[graft.streaming.FsUtil]], same
-    * local/HDFS/object-store stance as retention) — a reader of `outDir`
+    * Hadoop-FS plumbing ([[graft.streaming.FsUtil]]: atomic renames on
+    * local/HDFS, copy+delete on object stores) — a reader of `outDir`
     * sees the previous export or the new one, never a torn one. Returns
     * the manifest.
     */

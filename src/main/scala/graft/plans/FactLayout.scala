@@ -68,13 +68,6 @@ object FactLayout {
   def lineitemByPartOpt(s: SparkSession, d: String): Option[DataFrame] =
     bucketedOpt(s, d, "lineitem", "l_partkey")
 
-  /** The bucketed table, or the plain parquet scan when the layout is
-    * unavailable — ONLY for call sites whose plan is identical either way
-    * (no forced join-strategy hints riding on the bucket guarantee).
-    */
-  def bucketed(s: SparkSession, d: String, table: String, key: String): DataFrame =
-    bucketedOpt(s, d, table, key).getOrElse(Tables(s, d, table))
-
   /** `table` bucketed+sorted on `key`, built at most once per (session,
     * dir, table): later calls resolve from the session catalog. None when
     * the managed write failed in this environment (recorded once; the

@@ -9,17 +9,15 @@ import org.apache.spark.sql.SparkSession
   * stores. The 100 TB deployment target is object storage; `java.nio`
   * only ever sees the driver's local disk.
   *
-  * Commit protocol per store (for the rewrite-and-swap in [[Retention]]):
-  *  - HDFS / local FS: directory rename is atomic — readers see the old or
-  *    the new partition, never a torn one.
-  *  - Object stores (S3A and friends): rename is copy+delete and NOT
-  *    atomic. The swap stays correct (the shadow is fully written and
-  *    fsync'd before the first rename) but a concurrent reader can observe
-  *    a missing partition for the duration of the rename window. Runs
-  *    there should either quiesce readers (Graft.quiesced already
-  *    quiesces writers) or put an ACID table format under the log table;
-  *    the swap is confined to [[Retention.swapDir]] so that substitution
-  *    is one function.
+  * Commit protocol per store (for [[LogIngest.manifestCommit]], the one
+  * commit of every ingest batch, retention sweep and compaction):
+  *  - HDFS / local FS: each file rename is an atomic metadata op; a
+  *    reader lists a change's files before or after each one.
+  *  - Object stores (S3A and friends): rename is copy+delete, so each
+  *    move costs a copy. The commit stays correct (the staged files are
+  *    fully written before the manifest names them) but slower. Runs
+  *    there should put an ACID table format under the log table; the
+  *    manifest commit is the one place that substitution replaces.
   */
 private[graft] object FsUtil {
 
@@ -68,6 +66,11 @@ private[graft] object FsUtil {
     fs(spark, path).delete(p, true)
     ()
   }
+
+  /** Delete `dir` if it is empty (not recursive: a file landing in it keeps it). */
+  def deleteIfEmpty(spark: SparkSession, dir: Path): Boolean =
+    try fs(spark, dir.toString).delete(dir, false)
+    catch { case _: java.io.IOException => false }
 
   def rename(spark: SparkSession, from: Path, to: Path): Unit = {
     val f = fs(spark, from.toString)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -310,8 +311,8 @@ object LogIngest {
       // foreachBatch + the manifest commit below, NOT the streaming file
       // sink: the file sink tracks its output in a _spark_metadata log,
       // which (a) batch readers then treat as the source of truth,
-      // breaking the retention sweep's rewrite-and-swap, and (b)
-      // plain-parquet readers outside Spark wouldn't see.
+      // hiding the files a retention or compaction commit moves in, and
+      // (b) plain-parquet readers outside Spark wouldn't see.
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           onCommit(commitBatch(batch, batchId, tableDir, namespace = commitNamespace(checkpointDir)))
@@ -370,44 +371,25 @@ object LogIngest {
       batchId: Long,
       tableDir: String,
       namespace: String = "q"): Seq[String] =
-    manifestCommit(batch.sparkSession, tableDir, batchId, namespace) { staging =>
+    batchCommit(batch.sparkSession, tableDir, batchId, namespace) { staging =>
       stagePartitioned(batch, batchId, tableDir, staging, namespace)
     }
 
-  /** Steps 1–2 and 4–6 of the commit protocol above, shared by
-    * [[commitBatch]] (partitioned log appends) and [[commitBatchFlat]]
-    * (unpartitioned verdict/result appends): marker short-circuit, torn-
-    * attempt cleanup, manifest write, file moves, commit marker, staging
-    * drop, marker pruning. `stage` performs step 3 — write the batch under
-    * the given staging dir and return the (stagedFile → destination)
-    * moves, every destination carrying the `b<namespace>-<batchId>-`
-    * prefix so attempts can never collide. Returns the destinations moved,
-    * none when the marker short-circuits.
+  /** Steps 1–2 and 6's marker pruning around [[manifestCommit]], shared
+    * by [[commitBatch]] (partitioned log appends) and [[commitBatchFlat]]
+    * (unpartitioned verdict/result appends). `stage` performs step 3 —
+    * write the batch under the given staging dir and return the
+    * (stagedFile → destination) moves, every destination carrying the
+    * `b<namespace>-<batchId>-` prefix so attempts can never collide.
+    * Returns the destinations moved, none when the marker short-circuits.
     */
-  private def manifestCommit(
-      spark: SparkSession,
-      tableDir: String,
-      batchId: Long,
-      namespace: String)(
-      stage: String => Seq[(org.apache.hadoop.fs.Path, String)]): Seq[String] = {
-    val marker = s"$tableDir/_commits/$namespace-$batchId"
-    if (FsUtil.exists(spark, marker)) return Nil
-    val manifest = s"$tableDir/_commits/$namespace-$batchId.manifest"
-    if (FsUtil.exists(spark, manifest))
-      FsUtil.readLines(spark, manifest).foreach { dst =>
-        FsUtil.fs(spark, dst).delete(new org.apache.hadoop.fs.Path(dst), false)
-      }
-    val staging = s"$tableDir/_staging/$namespace-$batchId"
-    val moves = stage(staging)
-    FsUtil.writeString(spark, manifest, moves.map(_._2).mkString("\n"))
-    moves.foreach { case (src, dst) =>
-      val dstPath = new org.apache.hadoop.fs.Path(dst)
-      FsUtil.mkdirs(spark, dstPath.getParent.toString)
-      FsUtil.rename(spark, src, dstPath)
-    }
-    FsUtil.writeString(spark, marker, "")
-    FsUtil.deleteRecursively(spark, staging)
-    FsUtil.fs(spark, manifest).delete(new org.apache.hadoop.fs.Path(manifest), false)
+  private def batchCommit(spark: SparkSession, tableDir: String, batchId: Long,
+      namespace: String)(stage: String => Seq[(Path, String)]): Seq[String] = {
+    val name = s"$namespace-$batchId"
+    if (FsUtil.exists(spark, s"$tableDir/_commits/$name")) return Nil
+    recover(spark, tableDir, name, committed = false)
+    val moves = stage(s"$tableDir/_staging/$name")
+    manifestCommit(spark, tableDir, name, moves)
     FsUtil.listFiles(spark, s"$tableDir/_commits", "").foreach { case (p, _) =>
       // prune only THIS query's old markers (other namespaces own theirs)
       if (p.getName.startsWith(s"$namespace-")) {
@@ -417,6 +399,58 @@ object LogIngest {
       }
     }
     moves.map(_._2)
+  }
+
+  /** The one commit of every change to a table: ingest batches and
+    * [[Retention]]'s passes. It writes the manifest `_commits/<name>
+    * .manifest` (the destinations of `moves`, one per line, then, if there
+    * are `deletes`, an empty line and the deletes), moves each staged file
+    * into place, writes the marker `_commits/<name>`, deletes `deletes`
+    * and the leaf and container dirs they empty, and drops the staging dir
+    * `_staging/<name>` and the manifest. With no deletes these are exactly
+    * an ingest commit's calls.
+    */
+  private[streaming] def manifestCommit(spark: SparkSession, tableDir: String, name: String,
+      moves: Seq[(Path, String)], deletes: Seq[Path] = Nil): Unit = {
+    val manifest = s"$tableDir/_commits/$name.manifest"
+    val listed = moves.map(_._2) ++ (if (deletes.isEmpty) Nil else "" +: deletes.map(_.toString))
+    FsUtil.writeString(spark, manifest, listed.mkString("\n"))
+    moves.foreach { case (src, dst) =>
+      val dstPath = new Path(dst)
+      FsUtil.mkdirs(spark, dstPath.getParent.toString)
+      FsUtil.rename(spark, src, dstPath)
+    }
+    FsUtil.writeString(spark, s"$tableDir/_commits/$name", "")
+    deleteLeafFiles(spark, deletes)
+    FsUtil.deleteRecursively(spark, s"$tableDir/_staging/$name")
+    FsUtil.fs(spark, manifest).delete(new Path(manifest), false)
+  }
+
+  /** Settles the manifest a [[manifestCommit]] named `name` left when cut
+    * short: before its marker (`committed` false) the destinations it
+    * lists are deleted, undoing it; after, the files it deletes are
+    * deleted, finishing it. True when there was a manifest.
+    */
+  private[streaming] def recover(
+      spark: SparkSession, tableDir: String, name: String, committed: Boolean): Boolean = {
+    val manifest = s"$tableDir/_commits/$name.manifest"
+    val torn = FsUtil.exists(spark, manifest)
+    if (torn) {
+      val (moved, deletes) = FsUtil.readLines(spark, manifest).span(_.nonEmpty)
+      if (committed) deleteLeafFiles(spark, deletes.drop(1).map(new Path(_)))
+      else moved.foreach(dst => FsUtil.fs(spark, dst).delete(new Path(dst), false))
+    }
+    torn
+  }
+
+  /** Deletes `files` of `container_id=/date=` leaves, then each leaf and
+    * container dir left empty (one a concurrent commit just filled stays).
+    */
+  private def deleteLeafFiles(spark: SparkSession, files: Seq[Path]): Unit = {
+    files.foreach(f => FsUtil.fs(spark, f.toString).delete(f, false))
+    files.map(_.getParent).distinct.foreach { leaf =>
+      if (FsUtil.deleteIfEmpty(spark, leaf)) FsUtil.deleteIfEmpty(spark, leaf.getParent)
+    }
   }
 
   /** Exactly-once append of an UNPARTITIONED micro-batch result — the
@@ -433,7 +467,7 @@ object LogIngest {
       tableDir: String,
       namespace: String = "q"): Unit = {
     val spark = batch.sparkSession
-    manifestCommit(spark, tableDir, batchId, namespace) { staging =>
+    batchCommit(spark, tableDir, batchId, namespace) { staging =>
       batch.write.mode("overwrite").parquet(staging)
       for ((file, _) <- FsUtil.listFiles(spark, staging, ".parquet"))
         yield (file, s"$tableDir/b$namespace-$batchId-${file.getName}")
@@ -450,7 +484,7 @@ object LogIngest {
       batchId: Long,
       tableDir: String,
       staging: String,
-      namespace: String): Seq[(org.apache.hadoop.fs.Path, String)] = {
+      namespace: String): Seq[(Path, String)] = {
     val spark = batch.sparkSession
     // co-locate each container's rows before the partitioned write:
     // without this every decode task writes a file into every partition
@@ -471,7 +505,7 @@ object LogIngest {
   }
 
   /** The log table as stored: `message` is null wherever [[frameOf]]
-    * rebuilds it. Retention reads and rewrites this form unchanged. A table
+    * rebuilds it. A table
     * root that does not exist yet (nothing committed) throws a short
     * FileNotFoundException: Spark's own check would log a WARN with a full
     * stack trace on every such call.
@@ -482,11 +516,15 @@ object LogIngest {
     spark.read.schema(logSchema).parquet(tableDir)
   }
 
+  /** Exactly the rows of `files` (paths under `tableDir`), as stored. */
+  def storedFiles(spark: SparkSession, tableDir: String, files: Seq[String]): DataFrame =
+    spark.read.schema(logSchema).option("basePath", tableDir).parquet(files: _*)
+
   /** Exactly the rows of `files` (paths under `tableDir`, e.g. one
     * [[commitBatch]]'s manifest), every `message` served.
     */
   def filesTable(spark: SparkSession, tableDir: String, files: Seq[String]): DataFrame =
-    withMessages(spark.read.schema(logSchema).option("basePath", tableDir).parquet(files: _*))
+    withMessages(storedFiles(spark, tableDir, files))
 
   /** Batch view of the ingested log table, every row's `message` served
     * ([[withMessages]]).

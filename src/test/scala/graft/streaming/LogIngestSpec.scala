@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
 import graft.{Graft, SparkSpec}
 import graft.functions.ProtoLogCodec
@@ -258,9 +258,9 @@ class LogIngestSpec extends SparkSpec {
     try {
       val (t, seen) = following(g)
       eventually(10000)(assert(seen.size() === 10))
-      // stops and restarts c1's ingest query around the sweep
+      // c1's ingest query keeps running through the sweep
       assert(g.cleanup(None, Some(100L)).total === 0)
-      assert(t.isAlive, "a quiesced restart must not end the follow")
+      assert(t.isAlive, "a sweep must not end the follow")
       writeBurst(staging, "c1", "b1", (10 until 15).map(entry(_, "c1")))
       eventually(15000)(assert(seen.size() === 15))
       stopAndCheck(g, t, seen, 0 until 15)
@@ -435,6 +435,87 @@ class LogIngestSpec extends SparkSpec {
       .head.getLong(0) > 0)
   }
 
+  test("a sweep never loses a batch committed into the leaf it rewrites") {
+    // as above, but every live burst lands on the boundary day itself, the
+    // leaf each sweep rewrites, while the ingest query keeps committing
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    val day = 86400000000000L
+    val sec = 1000000000L
+    def at(ns: Long, i: Int): LogEntry =
+      LogEntry("stdout", ns, s"r$i".getBytes("UTF-8"), partial = false, partialMeta = None)
+    writeBurst(staging, "c1", "seed",
+      (0 until 40).map(i => at(t0 + i * sec, i)) ++
+        (0 until 40).map(i => at(t0 + day + i * sec, 100 + i)))
+    val q = LogIngest.start(spark, staging, table, ckpt,
+      Trigger.ProcessingTime("50 milliseconds"))
+    try {
+      q.processAllAvailable()
+      def cutoffAt(k: Int) = java.time.Instant.ofEpochSecond(0, t0 + day + (20L + k) * sec)
+      val sweepError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val sweeper = new Thread(() =>
+        try (0 until 10).foreach(k => Retention.sweep(spark, table, Some(cutoffAt(k)), None))
+        catch { case e: Throwable => sweepError.set(e) })
+      sweeper.start()
+      // one burst of 25 boundary-day lines, newer than every cutoff, every
+      // 100 ms for as long as the sweeps run
+      var bursts = 0
+      while (sweeper.isAlive && bursts < 60) {
+        bursts += 1
+        writeBurst(staging, "c1", s"live$bursts", (0 until 25).map(i =>
+          at(t0 + day + (1000L * bursts + i) * sec, 1000 * bursts + i)))
+        Thread.sleep(100)
+      }
+      sweeper.join(120000)
+      assert(!sweeper.isAlive, "sweeper did not finish")
+      assert(sweepError.get() == null, s"sweep threw under live ingest: ${sweepError.get()}")
+      q.processAllAvailable()
+      assert(Retention.sweep(spark, table, Some(cutoffAt(9)), None).total === 0)
+      // the survivor rule keeps seed rows 29..39 of the boundary day and
+      // every live line: each exactly once
+      val want = (29 until 40).map(i => s"r${100 + i}\n") ++
+        (1 to bursts).flatMap(b => (0 until 25).map(i => s"r${1000 * b + i}\n"))
+      val got = LogIngest.table(spark, table).select("line").collect().map(_.getString(0)).toSeq
+      val (lost, extra) = (want.diff(got), got.diff(want))
+      assert((lost.size, extra.size) === ((0, 0)),
+        s"(lines lost, extra) over $bursts live bursts; first lost: ${lost.take(3).map(_.trim)}")
+    } finally q.stop()
+  }
+
+  test("a retention commit cut between its moves and its deletes is finished by the next sweep") {
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    writeBurst(staging, "c1", "b0", (0 until 40).map(entry(_, "c1")))
+    LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow())
+      .awaitTermination(60000)
+    val leaf = Files.list(Paths.get(table, "container_id=c1")).iterator().asScala
+      .find(_.getFileName.toString.startsWith("date=")).get
+    def parquetIn(dir: java.nio.file.Path) = Files.list(dir).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toList
+    val listed = parquetIn(leaf)
+
+    // the dead pass kept the newest 10 of 40 lines: its rewritten file is
+    // moved into the leaf and its marker written, and the listed files its
+    // manifest deletes are all still there
+    val kept = tmp() + "/kept"
+    LogIngest.storedTable(spark, table).orderBy(desc("seq")).limit(10)
+      .drop("container_id", "date").coalesce(1).write.parquet(kept)
+    val moved = leaf.resolve("r-rewritten.parquet")
+    Files.copy(parquetIn(Paths.get(kept)).head, moved)
+    Files.write(Paths.get(table, "_commits", "retention"), Array.emptyByteArray)
+    Files.write(Paths.get(table, "_commits", "retention.manifest"),
+      (moved.toString +: "" +: listed.map(_.toString)).mkString("\n").getBytes("UTF-8"))
+    assert(LogIngest.table(spark, table).count() === 50, "the kept lines are there twice")
+
+    // the next sweep finishes the deletes before it lists: the quota then
+    // holds, so it has nothing left to do
+    assert(Retention.sweep(spark, table, None, Some(10L)).total === 0)
+    val seqs = LogIngest.table(spark, table).select("seq").collect().map(_.getLong(0))
+    assert(seqs.sorted.toSeq === (30 until 40).map(seqOf))
+    assert(listed.forall(f => !Files.exists(f)))
+    assert(parquetIn(leaf) === List(moved))
+    assert(!Files.exists(Paths.get(table, "_commits", "retention.manifest")))
+    assert(!Files.exists(Paths.get(table, "_commits", "retention")))
+  }
+
   test("commitNamespace hashes every UTF-8 byte of the checkpoint path") {
     // the ASCII value existing checkpoints resume under
     assert(LogIngest.commitNamespace("/data/logs/checkpoints/c1") === "5fdf2ad9")
@@ -571,27 +652,88 @@ class LogIngestSpec extends SparkSpec {
     assert(reg.activeContainers === Set.empty)
   }
 
-  test("retention restarts a container with its byte budget (max_size_per_tx)") {
+  test("cleanup stops no ingest query") {
     val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
-    Files.createDirectories(Paths.get(staging, "cq"))
+    writeBurst(staging, "c1", "b0", (0 until 40).map(entry(_, "c1")))
+    writeBurst(staging, "cq", "b0", (0 until 40).map(entry(_, "cq")))
     val reg = new Graft(spark, staging, table, ckpt)
-    assert(reg.startLogging("cq", Map(
-      "max_size_per_tx" -> "1k", "message_read_timeout" -> "50")).isRight)
+    val fast = Map("message_read_timeout" -> "50")
+    val queries = Seq("c1" -> fast, "cq" -> (fast + ("max_size_per_tx" -> "1k")))
+      .map { case (id, options) => id -> reg.startLogging(id, options).toOption.get }
+    val terminated = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.add(e.runId)
+    }
+    spark.streams.addListener(listener)
     try {
-      // six bursts of ~1.6 KiB staged while retention holds the query
-      // stopped: under the 1 KiB budget the restarted query takes one per
-      // batch; without it, all six in one
-      reg.quiesced {
-        (0 until 6).foreach { b =>
-          writeBurst(staging, "cq", s"b$b", (b * 40 until (b + 1) * 40).map(entry(_, "cq")))
-        }
+      eventually(30000)(assert(reg.countLogs("c1") === 40 && reg.countLogs("cq") === 40))
+      assert(reg.cleanup(None, Some(10L)) === Retention.SweepStats(dropped = 0, rewritten = 2))
+      val swept = queries.toMap.apply("cq").lastProgress.batchId
+      // six bursts of ~1.6 KiB staged after the sweep: under the 1 KiB
+      // budget the running query takes one per batch; without it, all six
+      // in one
+      (1 to 6).foreach { b =>
+        writeBurst(staging, "cq", s"b$b", (b * 40 until (b + 1) * 40).map(entry(_, "cq")))
       }
-      val q = reg.startLogging("cq").toOption.get // the restarted, running query
+      writeBurst(staging, "c1", "b1", (40 until 50).map(entry(_, "c1")))
       eventually(30000) {
-        assert(LogIngest.table(spark, table).count() === 240)
-        assert(q.recentProgress.count(_.numInputRows > 0) >= 6)
+        assert(reg.countLogs("c1") === 20)
+        assert(reg.countLogs("cq") === 250)
+        assert(queries.toMap.apply("cq").recentProgress
+          .count(p => p.batchId > swept && p.numInputRows > 0) >= 6)
       }
-    } finally reg.stopAll()
+      for ((id, q) <- queries) {
+        assert(q.isActive, s"$id's ingest query was stopped")
+        assert(reg.startLogging(id).map(_.runId) === Right(q.runId), s"$id's query was replaced")
+        val batches = q.recentProgress.map(_.batchId).distinct.sorted.toSeq
+        assert(batches === (batches.head to batches.last), s"$id's batch ids skip")
+      }
+      Thread.sleep(500) // listener events are delivered asynchronously
+      assert(terminated.isEmpty, "an ingest query terminated")
+    } finally {
+      spark.streams.removeListener(listener)
+      reg.stopAll()
+    }
+  }
+
+  test("StopLogging's delete during a cleanup leaves the container deleted") {
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    writeBurst(staging, "c1", "b0", (0 until 40).map(entry(_, "c1")))
+    val reg = new Graft(spark, staging, table, ckpt)
+    reg.startLogging("c1").foreach(_.processAllAvailable()) // delete_when_stopped
+    // StopLogging comes once the sweep's first job has started
+    val sweepJob = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec") == "sweep"))
+          sweepJob.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val replayed = new Graft(spark, staging, table, ckpt)
+    try {
+      val sweepError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val sweeper = new Thread(() =>
+        try {
+          spark.sparkContext.setLocalProperty("graft.spec", "sweep")
+          reg.cleanup(None, Some(10L))
+        } catch { case e: Throwable => sweepError.set(e) })
+      sweeper.start()
+      assert(sweepJob.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      reg.stopLogging("c1")
+      sweeper.join(60000)
+      assert(!sweeper.isAlive, "sweeper did not finish")
+      assert(!reg.activeContainers.contains("c1"))
+      assert(!Files.exists(Paths.get(table, "container_id=c1")))
+      assert(replayed.replayState() === Nil)
+      assert(sweepError.get() == null, s"cleanup threw: ${sweepError.get()}")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      reg.stopAll()
+      replayed.stopAll()
+    }
   }
 
   test("registry: start/stop/replay lifecycle with delete-when-stopped") {
