@@ -123,9 +123,10 @@ object Retention {
 
   /** Small-file compaction: the 100 ms micro-batch cadence produces one
     * file per container per burst; compaction packs each leaf that holds
-    * more files than its bytes need back into ~[[TargetBytes]] files, with
-    * rows re-sorted on ts_nano (restoring tight row-group stats), through
-    * the same rewrite and commit as the sweep. Returns leaves compacted.
+    * more files than its bytes need back into files of ~[[TargetBytes]],
+    * with rows re-sorted on ts_nano (restoring tight row-group stats),
+    * through the same rewrite and commit as the sweep. Returns leaves
+    * compacted.
     */
   def compact(spark: SparkSession, tableDir: String): Int = {
     val todo = settle(spark, tableDir).filter(l => l.files.size > l.want)
@@ -180,14 +181,14 @@ object Retention {
   }
 
   /** The rewrite step sweep and compaction share: `rows` of `leaf`,
-    * sorted on ts_nano, written as [[Leaf.want]] files under `staging`.
-    * Returns the moves of those files into the leaf.
+    * written under `staging` as at most [[Leaf.want]] files, each sorted on
+    * ts_nano. Returns the moves of those files into the leaf.
     */
   private def rewrite(spark: SparkSession, tableDir: String, staging: String, leaf: Leaf,
       rows: DataFrame): Seq[(Path, String)] = {
     val dir = s"$staging/${leaf.dir}"
     rows.drop("container_id", "date")
-      .repartitionByRange(leaf.want, col("ts_nano"))
+      .coalesce(leaf.want)
       .sortWithinPartitions(col("ts_nano"))
       .write.mode("overwrite").parquet(dir)
     FsUtil.listFiles(spark, dir, ".parquet")
