@@ -485,7 +485,6 @@ object LogIngest {
       tableDir: String,
       staging: String,
       namespace: String): Seq[(Path, String)] = {
-    val spark = batch.sparkSession
     // co-locate each container's rows before the partitioned write:
     // without this every decode task writes a file into every partition
     // dir (tasks × containers small files per batch); with it each
@@ -496,13 +495,20 @@ object LogIngest {
     batch.repartition(col("container_id"))
       .sortWithinPartitions("container_id", "date", "ts_nano")
       .write.mode("overwrite").partitionBy("container_id", "date").parquet(staging)
+    leafMoves(batch.sparkSession, staging, tableDir, s"b$namespace-$batchId-")
+  }
+
+  /** The parquet files a partitioned write left in `staging`'s
+    * `container_id=/date=` dirs, each with its destination in the same
+    * leaf of `tableDir`, named `prefix` + its staged name.
+    */
+  private[streaming] def leafMoves(spark: SparkSession, staging: String, tableDir: String,
+      prefix: String): Seq[(Path, String)] =
     for {
       cDir <- FsUtil.listDirs(spark, staging, "container_id=")
       dDir <- FsUtil.listDirs(spark, cDir.toString, "date=")
       (file, _) <- FsUtil.listFiles(spark, dDir.toString, ".parquet")
-    } yield (file,
-      s"$tableDir/${cDir.getName}/${dDir.getName}/b$namespace-$batchId-${file.getName}")
-  }
+    } yield (file, s"$tableDir/${cDir.getName}/${dDir.getName}/$prefix${file.getName}")
 
   /** The log table as stored: `message` is null wherever [[frameOf]]
     * rebuilds it. A table

@@ -60,8 +60,7 @@ object Retention {
 
   /** A `container_id=/date=` leaf with the parquet files a pass listed. */
   private final case class Leaf(container: String, date: String, files: Seq[(Path, Long)]) {
-    def dir: String = s"container_id=$container/date=$date"
-    /** The files a rewrite of this leaf writes. */
+    /** The most files a rewrite of this leaf writes. */
     def want: Int = math.max(1, math.ceil(files.map(_._2).sum.toDouble / TargetBytes).toInt)
   }
 
@@ -163,9 +162,11 @@ object Retention {
   private def storedRows(spark: SparkSession, tableDir: String, leaves: Seq[Leaf]): DataFrame =
     LogIngest.storedFiles(spark, tableDir, leaves.flatMap(_.files.map(_._1.toString)))
 
-  /** Writes each rewritten leaf's rows under the pass's staging dir, then
-    * commits the moves into those leaves and the deletion of every listed
-    * file of the dropped and rewritten leaves as one manifest commit.
+  /** The step sweep and compaction share: one Spark job writes every
+    * rewritten leaf's rows under the pass's staging dir, as at most
+    * [[Leaf.want]] files per leaf, each sorted on ts_nano. The moves of
+    * those files into their leaves and the deletion of every listed file
+    * of the dropped and rewritten leaves then go in one manifest commit.
     */
   private def commit(
       spark: SparkSession,
@@ -173,26 +174,15 @@ object Retention {
       dropped: Seq[Leaf],
       rewritten: Seq[(Leaf, DataFrame)]): Unit = {
     val staging = s"$tableDir/_staging/$CommitName"
-    val moves = rewritten.flatMap { case (leaf, rows) => rewrite(spark, tableDir, staging, leaf, rows) }
-    LogIngest.manifestCommit(spark, tableDir, CommitName, moves,
+    if (rewritten.nonEmpty)
+      rewritten.map { case (leaf, rows) => rows.coalesce(leaf.want) }.reduce(_ union _)
+        .sortWithinPartitions("container_id", "date", "ts_nano")
+        .write.mode("overwrite").partitionBy("container_id", "date").parquet(staging)
+    LogIngest.manifestCommit(spark, tableDir, CommitName,
+      LogIngest.leafMoves(spark, staging, tableDir, "r-"),
       (dropped ++ rewritten.map(_._1)).flatMap(_.files.map(_._1)))
     FsUtil.deleteRecursively(spark, s"$tableDir/_commits/$CommitName")
     invalidate(spark, tableDir)
-  }
-
-  /** The rewrite step sweep and compaction share: `rows` of `leaf`,
-    * written under `staging` as at most [[Leaf.want]] files, each sorted on
-    * ts_nano. Returns the moves of those files into the leaf.
-    */
-  private def rewrite(spark: SparkSession, tableDir: String, staging: String, leaf: Leaf,
-      rows: DataFrame): Seq[(Path, String)] = {
-    val dir = s"$staging/${leaf.dir}"
-    rows.drop("container_id", "date")
-      .coalesce(leaf.want)
-      .sortWithinPartitions(col("ts_nano"))
-      .write.mode("overwrite").parquet(dir)
-    FsUtil.listFiles(spark, dir, ".parquet")
-      .map { case (file, _) => (file, s"$tableDir/${leaf.dir}/r-${file.getName}") }
   }
 
   /** The shared FileStatusCache may still hold files a commit or delete removed; drop it. */
