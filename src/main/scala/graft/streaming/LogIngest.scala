@@ -511,10 +511,9 @@ object LogIngest {
     } yield (file, s"$tableDir/${cDir.getName}/${dDir.getName}/$prefix${file.getName}")
 
   /** The log table as stored: `message` is null wherever [[frameOf]]
-    * rebuilds it. A table
-    * root that does not exist yet (nothing committed) throws a short
-    * FileNotFoundException: Spark's own check would log a WARN with a full
-    * stack trace on every such call.
+    * rebuilds it. A table root that does not exist yet (nothing committed)
+    * throws a short FileNotFoundException: Spark's own check would log a
+    * WARN with a full stack trace on every such call.
     */
   def storedTable(spark: SparkSession, tableDir: String): DataFrame = {
     if (!FsUtil.isDirectory(spark, tableDir))
@@ -523,7 +522,7 @@ object LogIngest {
   }
 
   /** Exactly the rows of `files` (paths under `tableDir`), as stored. */
-  def storedFiles(spark: SparkSession, tableDir: String, files: Seq[String]): DataFrame =
+  private[streaming] def storedFiles(spark: SparkSession, tableDir: String, files: Seq[String]): DataFrame =
     spark.read.schema(logSchema).option("basePath", tableDir).parquet(files: _*)
 
   /** Exactly the rows of `files` (paths under `tableDir`, e.g. one
