@@ -522,7 +522,8 @@ object LogIngest {
   }
 
   /** Exactly the rows of `files` (paths under `tableDir`), as stored. */
-  private[streaming] def storedFiles(spark: SparkSession, tableDir: String, files: Seq[String]): DataFrame =
+  private[streaming] def storedFiles(
+      spark: SparkSession, tableDir: String, files: Seq[String]): DataFrame =
     spark.read.schema(logSchema).option("basePath", tableDir).parquet(files: _*)
 
   /** Exactly the rows of `files` (paths under `tableDir`, e.g. one

@@ -108,7 +108,8 @@ object Retention {
                 .where(col("__rank_from_newest") <= q)
                 .drop("__rank_from_newest")
             }
-            cutoffNano.filter(minTs < _).foreach(c => survivors = survivors.where(col("ts_nano") >= c))
+            cutoffNano.filter(minTs < _)
+              .foreach(c => survivors = survivors.where(col("ts_nano") >= c))
             Some(leaf -> Some(survivors))
           } else None
         }
