@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -21,11 +22,18 @@ import org.apache.spark.sql.SparkSession
   */
 private[graft] object FsUtil {
 
+  /** Each session's Hadoop conf, built on its first [[fs]] call. */
+  private val confs =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, Configuration]())
+
   /** The FileSystem owning `path`, resolved from the session's Hadoop conf
     * (picks up s3a/abfs/hdfs credentials and endpoints the deployment set).
+    * The conf is built once per session, a full copy of the Hadoop conf
+    * plus every SQL conf; `FileSystem.get` caches each instance by scheme
+    * and authority, so only a store's first use reads it anyway.
     */
   def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    new Path(path).getFileSystem(confs.computeIfAbsent(spark, _.sessionState.newHadoopConf()))
 
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)

@@ -30,8 +30,9 @@ import graft.functions.ProtoLogCodec.{LogEntry, PartialMeta}
   *   staging/<container_id>/<burst>.pblog   (concatenated frames)
   *     → readStream binaryFile → deframe/decode (ProtoLogCodec, one pass
   *       per partition) → typed columns
-  *     → writeStream parquet, partitionBy(container_id), micro-batch
-  *       trigger 100 ms (the reference's burst timeout, `src/config.rs:177`)
+  *     → foreachBatch commit into parquet partitioned by container_id and
+  *       date, micro-batch trigger 100 ms (the reference's burst timeout,
+  *       `src/config.rs:177`)
   *
   * The same query ingests the four text formats of `graft.sources` from
   * their own staging dirs ([[start]]'s `glob` and `decode`).
@@ -48,12 +49,16 @@ import graft.functions.ProtoLogCodec.{LogEntry, PartialMeta}
   * — restart with the same checkpointLocation and ingest resumes exactly
   * where it stopped, no replay table needed.
   *
-  * Scale: ingest is embarrassingly parallel per staged file; the sink's
-  * partitionBy(container_id) gives the per-container physical layout the
-  * reference gets from one-SQLite-per-container (`src/logger.rs:250-251`),
-  * and sortWithinPartitions(ts_nano) inside each batch keeps parquet
-  * row-group min/max stats tight so time-range reads skip row groups (the
-  * analog of the reference's `idx_ts` index, `src/logger.rs:147`).
+  * Layout: every batch lands as one file per `container_id=/date=` leaf,
+  * the per-container physical layout the reference gets from one SQLite
+  * database per container (`src/logger.rs:250-251`). A per-container query
+  * (`containerId` given, as every `Graft.startLogging` query is) writes its
+  * batch in one task, like the reference's single writer per container; a
+  * query over every container's staging dir shuffles its batch by
+  * container first ([[commitBatch]]). Rows are sorted on ts_nano within
+  * each file, so parquet row-group min/max stats stay tight and time-range
+  * reads skip row groups (the analog of the reference's `idx_ts` index,
+  * `src/logger.rs:147`). [[writeLeaves]] is the one writer of the table.
   */
 object LogIngest {
 
@@ -249,9 +254,12 @@ object LogIngest {
     * One path serves every wire format: the FIFO's framed protobuf is the
     * default (`*.pblog`, [[decodeBurst]]); the `graft.sources` text
     * formats pass `*.log` and their own `decodeBurst`. Decode is pure
-    * per-file work inside `flatMap`, no shuffle. `onCommit` runs on the
-    * driver after each batch's [[commitBatch]] returns, with the files that
-    * commit moved into the table (empty for a batch committed before).
+    * per-file work inside `flatMap`. With `containerId` given every batch
+    * holds one container, and [[commitBatch]] writes it in one task with no
+    * shuffle; without it, the batch is shuffled by container. `onCommit`
+    * runs on the driver after each batch's [[commitBatch]] returns, with
+    * the files that commit moved into the table (empty for a batch
+    * committed before).
     *
     * The 100 ms processing-time trigger mirrors the reference's
     * burst-commit cadence; tests pass `Trigger.AvailableNow()` for
@@ -315,7 +323,8 @@ object LogIngest {
       // (b) plain-parquet readers outside Spark wouldn't see.
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          onCommit(commitBatch(batch, batchId, tableDir, namespace = commitNamespace(checkpointDir)))
+          onCommit(commitBatch(batch, batchId, tableDir, commitNamespace(checkpointDir),
+            oneContainer = containerId.isDefined))
       }
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
@@ -348,7 +357,11 @@ object LogIngest {
     *  2. A manifest from a torn attempt exists → delete exactly the files
     *     it lists (the partial moves of the dead attempt).
     *  3. Write the batch under `_staging/<id>/` (underscore dirs are
-    *     invisible to parquet readers), partitioned and sorted.
+    *     invisible to parquet readers) through [[writeLeaves]]: one file per
+    *     `container_id=/date=` leaf. A `oneContainer` batch (every row of
+    *     one container, as in a per-container query's batch) is written by
+    *     one task through `coalesce(1)`, with no shuffle; any other batch
+    *     is shuffled by `container_id` first, one task per container.
     *  4. Write the manifest (tmp + rename): the destination paths, every
     *     one carrying the `b<namespace>-<id>-` prefix so no attempt can
     *     collide with another batch, attempt, or co-writing query.
@@ -370,9 +383,10 @@ object LogIngest {
       batch: DataFrame,
       batchId: Long,
       tableDir: String,
-      namespace: String = "q"): Seq[String] =
+      namespace: String = "q",
+      oneContainer: Boolean = false): Seq[String] =
     batchCommit(batch.sparkSession, tableDir, batchId, namespace) { staging =>
-      stagePartitioned(batch, batchId, tableDir, staging, namespace)
+      stagePartitioned(batch, batchId, tableDir, staging, namespace, oneContainer)
     }
 
   /** Steps 1–2 and 6's marker pruning around [[manifestCommit]], shared
@@ -474,29 +488,44 @@ object LogIngest {
     }
   }
 
-  /** Step 3 of the protocol for the LOG table: partitioned+sorted staging
-    * write, destinations under `container_id=/date=` dirs. Rows are
-    * written as given: [[BurstRows]] already left `message` null wherever
-    * [[frameOf]] rebuilds it.
+  /** Step 3 of the protocol for the LOG table: the staged leaves of
+    * [[writeLeaves]], destinations under `container_id=/date=` dirs. Rows
+    * are written as given: [[BurstRows]] already left `message` null
+    * wherever [[frameOf]] rebuilds it.
     */
   private def stagePartitioned(
       batch: DataFrame,
       batchId: Long,
       tableDir: String,
       staging: String,
-      namespace: String): Seq[(Path, String)] = {
-    // co-locate each container's rows before the partitioned write:
-    // without this every decode task writes a file into every partition
-    // dir (tasks × containers small files per batch); with it each
-    // container gets one file per batch, the reference's single-writer
-    // semantics (src/logger.rs:250-251). The in-task sort restores ts
-    // order so parquet row-group min/max stats on ts_nano stay tight (the
-    // reference's idx_ts analog, src/logger.rs:147).
-    batch.repartition(col("container_id"))
-      .sortWithinPartitions("container_id", "date", "ts_nano")
-      .write.mode("overwrite").partitionBy("container_id", "date").parquet(staging)
+      namespace: String,
+      oneContainer: Boolean): Seq[(Path, String)] = {
+    // one task per container, so each container's leaves get one file per
+    // batch (without it every decode task writes a file into every leaf):
+    // the reference's single writer per container (src/logger.rs:250-251).
+    // A one-container batch needs no shuffle for that.
+    writeLeaves(if (oneContainer) batch.coalesce(1) else batch.repartition(col("container_id")),
+      staging)
     leafMoves(batch.sparkSession, staging, tableDir, s"b$namespace-$batchId-")
   }
+
+  /** Columns unique by construction, written without a dictionary: each
+    * value would be a new dictionary entry, so parquet would build the
+    * dictionary only to drop it.
+    */
+  private val PlainColumns = Seq("seq", "ts_nano", "ts")
+
+  /** The one writer of the log table, for ingest batches and
+    * [[Retention]]'s rewrites: each partition of `rows`, sorted on
+    * (container_id, date, ts_nano), is written as one file per
+    * `container_id=/date=` leaf it holds under `staging`, with tight
+    * row-group stats on ts_nano. [[PlainColumns]] get no dictionary pages;
+    * `line`, `source` and the rest keep them.
+    */
+  private[streaming] def writeLeaves(rows: DataFrame, staging: String): Unit =
+    PlainColumns.foldLeft(rows.sortWithinPartitions("container_id", "date", "ts_nano").write) {
+      (w, c) => w.option(s"parquet.enable.dictionary#$c", "false")
+    }.mode("overwrite").partitionBy("container_id", "date").parquet(staging)
 
   /** The parquet files a partitioned write left in `staging`'s
     * `container_id=/date=` dirs, each with its destination in the same

@@ -165,9 +165,11 @@ object Retention {
 
   /** The step sweep and compaction share: one Spark job writes every
     * rewritten leaf's rows under the pass's staging dir, as at most
-    * [[Leaf.want]] files per leaf, each sorted on ts_nano. The moves of
-    * those files into their leaves and the deletion of every listed file
-    * of the dropped and rewritten leaves then go in one manifest commit.
+    * [[Leaf.want]] files per leaf, through the writer ingest batches use
+    * ([[LogIngest.writeLeaves]]: each file sorted on ts_nano, the same
+    * encodings). The moves of those files into their leaves and the
+    * deletion of every listed file of the dropped and rewritten leaves
+    * then go in one manifest commit.
     */
   private def commit(
       spark: SparkSession,
@@ -176,9 +178,8 @@ object Retention {
       rewritten: Seq[(Leaf, DataFrame)]): Unit = {
     val staging = s"$tableDir/_staging/$CommitName"
     if (rewritten.nonEmpty)
-      rewritten.map { case (leaf, rows) => rows.coalesce(leaf.want) }.reduce(_ union _)
-        .sortWithinPartitions("container_id", "date", "ts_nano")
-        .write.mode("overwrite").partitionBy("container_id", "date").parquet(staging)
+      LogIngest.writeLeaves(
+        rewritten.map { case (leaf, rows) => rows.coalesce(leaf.want) }.reduce(_ union _), staging)
     LogIngest.manifestCommit(spark, tableDir, CommitName,
       LogIngest.leafMoves(spark, staging, tableDir, "r-"),
       (dropped ++ rewritten.map(_._1)).flatMap(_.files.map(_._1)))

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
@@ -634,6 +635,142 @@ class LogIngestSpec extends SparkSpec {
     val after = LogIngest.table(spark, table).orderBy("seq").collect()
     assert(after.map(_.getAs[Long]("seq")).toSeq === before.map(_.getAs[Long]("seq")).toSeq)
     assert(Retention.compact(spark, table) === 0) // idempotent
+  }
+
+  /** The parquet files of `table` (none under `_` dirs) by leaf dir, each
+    * as the columns whose chunks carry a dictionary page.
+    */
+  private def dictionaryColumns(table: String): Map[java.nio.file.Path, Seq[Set[String]]] = {
+    val root = Paths.get(table)
+    Files.walk(root).iterator().asScala.toSeq
+      .filter(p => p.getFileName.toString.endsWith(".parquet") &&
+        !root.relativize(p).toString.startsWith("_"))
+      .groupBy(_.getParent)
+      .map { case (leaf, files) => leaf -> files.map { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toString), new org.apache.hadoop.conf.Configuration()))
+        try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+          .filter(_.hasDictionaryPage).map(_.getPath.toDotString).toSet
+        finally reader.close()
+      } }
+  }
+
+  /** Every file of `leaves` has a dictionary page on `source` and none on
+    * the columns unique by construction.
+    */
+  private def assertLogEncodings(leaves: Map[java.nio.file.Path, Seq[Set[String]]]): Unit =
+    leaves.values.flatten.foreach { dictionary =>
+      assert(dictionary.intersect(Set("seq", "ts_nano", "ts")).isEmpty, dictionary)
+      assert(dictionary.contains("source"), dictionary)
+    }
+
+  /** `f`'s result, and per streaming query id the stages of the jobs that
+    * query ran while `f` ran, each true when it wrote shuffle data.
+    */
+  private def queryStages[T](f: => T): (T, String => Seq[Boolean]) = {
+    val queryOf = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .foreach(id => e.stageIds.foreach(queryOf.put(_, id)))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(queryOf.get(e.stageInfo.stageId)).foreach(id => stages.add(id ->
+          (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out =
+      try f
+      finally {
+        Thread.sleep(500) // listener events are delivered asynchronously
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    (out, id => stages.asScala.toSeq.filter(_._1 == id).map(_._2))
+  }
+
+  // ten lines per timestamp, as a coarse clock stamps them: ts_nano and ts
+  // repeat, so only the writer's setting keeps their dictionary off
+  private def coarse(i: Int, container: String, step: Long): LogEntry =
+    entry(i, container).copy(timeNano = t0 + (i / 10) * step)
+
+  test("a per-container batch is written by one task: one file per leaf, no shuffle") {
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    val quarterDay = 21600000000000L
+    // two bursts over three UTC days; c2's burst is not this query's
+    writeBurst(staging, "c1", "b0", (0 until 30).map(coarse(_, "c1", quarterDay)))
+    writeBurst(staging, "c1", "b1", (30 until 60).map(coarse(_, "c1", quarterDay)))
+    writeBurst(staging, "c2", "b0", (0 until 10).map(entry(_, "c2")))
+    val (q, stages) = queryStages {
+      val q = LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow(),
+        containerId = Some("c1"))
+      q.awaitTermination(60000)
+      q
+    }
+    assert(q.recentProgress.count(_.numInputRows > 0) === 1, "both bursts in one batch")
+    assert(stages(q.id.toString).nonEmpty, "the batch ran a job")
+    assert(!stages(q.id.toString).contains(true), "a per-container batch runs no shuffle stage")
+    val leaves = dictionaryColumns(table)
+    assert(leaves.keySet.map(_.getParent.getFileName.toString) === Set("container_id=c1"))
+    assert(leaves.size === 3)
+    assert(leaves.values.forall(_.size == 1), leaves)
+    assertLogEncodings(leaves)
+    assert(LogIngest.table(spark, table).count() === 60)
+  }
+
+  test("a backfill batch over two containers writes one file per container leaf") {
+    val root = tmp()
+    val g = new Graft(spark, s"$root/staging", s"$root/logs", s"$root/ckpt")
+    // two files per container, each over two UTC days, ten lines a second
+    for (c <- Seq("old1", "old2"); (f, day) <- Seq("a" -> 14, "b" -> 15)) {
+      val dir = Paths.get(root, "jsonfile", c)
+      Files.createDirectories(dir)
+      Files.write(dir.resolve(s"$f.log"), (0 until 40).map(i =>
+        s"""{"log":"$c $f $i\\n","stream":"stdout","time":"2023-11-${day + i / 20}T22:13:0${i / 10 % 2}.5Z"}""")
+        .mkString("\n").getBytes("UTF-8"))
+    }
+    val (q, stages) = queryStages {
+      val q = g.backfillJsonFile(s"$root/jsonfile")
+      q.awaitTermination(60000)
+      q
+    }
+    try {
+      assert(q.recentProgress.count(_.numInputRows > 0) === 1, "every file in one batch")
+      assert(stages(q.id.toString).contains(true), "the batch is shuffled by container")
+      val leaves = dictionaryColumns(s"$root/logs")
+      assert(leaves.keySet.map(_.getParent.getFileName.toString) ===
+        Set("container_id=old1", "container_id=old2"))
+      assert(leaves.size === 6)
+      assert(leaves.values.forall(_.size == 1), leaves)
+      assertLogEncodings(leaves)
+      assert(g.countLogs("old1") === 80 && g.countLogs("old2") === 80)
+    } finally g.stopAll()
+  }
+
+  test("a max-lines sweep and a compaction rewrite with the ingest writer's encodings") {
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    def ingest(bursts: Range): Unit = bursts.foreach { b =>
+      writeBurst(staging, "c1", s"b$b", (b * 20 until (b + 1) * 20).map(coarse(_, "c1", 1000L)))
+      LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow(), containerId = Some("c1"))
+        .awaitTermination(60000)
+    }
+    def rewritten(): Map[java.nio.file.Path, Seq[Set[String]]] = {
+      val leaves = dictionaryColumns(table)
+      val files = Files.walk(Paths.get(table, "container_id=c1")).iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
+      assert(leaves.size === 1 && files.size === 1 && files.head.startsWith("r-"), files)
+      leaves
+    }
+    ingest(0 until 4)
+    assert(Retention.compact(spark, table) === 1)
+    assertLogEncodings(rewritten())
+    ingest(4 until 6)
+    assert(Retention.sweep(spark, table, None, Some(30L)) ===
+      Retention.SweepStats(dropped = 0, rewritten = 1))
+    assertLogEncodings(rewritten())
+    val seqs = LogIngest.table(spark, table).select("seq").collect().map(_.getLong(0)).sorted
+    assert(seqs.length === 30)
+    assert(seqs.last === LogIngest.storedTable(spark, table).agg(max("seq")).head.getLong(0))
   }
 
   test("per-container options drive the ingest query (config -> engine)") {
