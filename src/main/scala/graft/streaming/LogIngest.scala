@@ -509,9 +509,10 @@ object LogIngest {
     leafMoves(batch.sparkSession, staging, tableDir, s"b$namespace-$batchId-")
   }
 
-  /** Columns unique by construction, written without a dictionary: each
-    * value would be a new dictionary entry, so parquet would build the
-    * dictionary only to drop it.
+  /** Columns written without a dictionary, because nearly every value is
+    * new: `seq` is unique by construction, `ts_nano` and `ts` repeat only
+    * where a coarse clock stamps lines alike. Parquet would build their
+    * dictionary only to drop it at the first page.
     */
   private val PlainColumns = Seq("seq", "ts_nano", "ts")
 
