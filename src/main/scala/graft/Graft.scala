@@ -84,8 +84,13 @@ final class Graft(
       case Some(l) => l.q
       case None =>
         FsUtil.mkdirs(spark, stagingDir(containerId))
-        FsUtil.writeString(spark, optionsFile(containerId),
-          Graft.json.writeValueAsString(options.asJava))
+        // only a new map is written: a rewrite deletes the kept file before
+        // its rename, so a crash there would restart the container with
+        // the defaults on the next replay
+        if (!FsUtil.exists(spark, optionsFile(containerId)) ||
+            storedOptions(containerId) != options)
+          FsUtil.writeString(spark, optionsFile(containerId),
+            Graft.json.writeValueAsString(options.asJava))
         val commits = followed.getOrElseUpdate(containerId, new Graft.Commits)
         val q = LogIngest.start(spark, stagingRoot, tableRoot,
           s"$checkpointRoot/$containerId", s.trigger, Some(containerId), s.maxBytesPerTrigger,

@@ -167,7 +167,8 @@ object Retention {
     * rewritten leaf's rows under the pass's staging dir, as at most
     * [[Leaf.want]] files per leaf, through the writer ingest batches use
     * ([[LogIngest.writeLeaves]]: each file sorted on ts_nano, the same
-    * encodings). The moves of those files into their leaves and the
+    * codec, page version and encodings, so a rewrite also converts a file
+    * an older writer left). The moves of those files into their leaves and the
     * deletion of every listed file of the dropped and rewritten leaves
     * then go in one manifest commit.
     */

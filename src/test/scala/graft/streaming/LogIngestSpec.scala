@@ -27,14 +27,17 @@ class LogIngestSpec extends SparkSpec {
       partial = i % 10 == 0,
       partialMeta = if (i % 10 == 0) Some(PartialMeta(last = true, s"p$i", i)) else None)
 
+  /** `entries` as one burst of the FIFO's framed protobuf. */
+  private def framed(entries: Seq[LogEntry]): Array[Byte] =
+    entries.map(e => ProtoLogCodec.frame(ProtoLogCodec.encode(e)))
+      .foldLeft(Array.emptyByteArray)(_ ++ _)
+
   private def writeBurst(staging: String, container: String, burst: String,
       entries: Seq[LogEntry]): Unit = {
     val dir = Paths.get(staging, container)
     Files.createDirectories(dir)
-    val bytes = entries.map(e => ProtoLogCodec.frame(ProtoLogCodec.encode(e)))
-      .foldLeft(Array.emptyByteArray)(_ ++ _)
     // renamed into place, so a running ingest query never sees half a burst
-    val tmp = Files.write(dir.resolve(s"$burst.tmp"), bytes)
+    val tmp = Files.write(dir.resolve(s"$burst.tmp"), framed(entries))
     Files.move(tmp, dir.resolve(s"$burst.pblog"), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
@@ -637,10 +640,14 @@ class LogIngestSpec extends SparkSpec {
     assert(Retention.compact(spark, table) === 0) // idempotent
   }
 
+  /** How one column chunk of a parquet file is stored. */
+  private final case class Chunk(
+      column: String, codec: String, encodings: Set[String], dictionary: Boolean)
+
   /** The parquet files of `table` (none under `_` dirs) by leaf dir, each
-    * as the columns whose chunks carry a dictionary page.
+    * as its column chunks, one per column and row group.
     */
-  private def dictionaryColumns(table: String): Map[java.nio.file.Path, Seq[Set[String]]] = {
+  private def columnChunks(table: String): Map[java.nio.file.Path, Seq[Seq[Chunk]]] = {
     val root = Paths.get(table)
     Files.walk(root).iterator().asScala.toSeq
       .filter(p => p.getFileName.toString.endsWith(".parquet") &&
@@ -650,19 +657,26 @@ class LogIngestSpec extends SparkSpec {
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
             new org.apache.hadoop.fs.Path(f.toString), new org.apache.hadoop.conf.Configuration()))
-        try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
-          .filter(_.hasDictionaryPage).map(_.getPath.toDotString).toSet
+        try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala).map(c =>
+          Chunk(c.getPath.toDotString, c.getCodec.name, c.getEncodings.asScala.map(_.name).toSet,
+            c.hasDictionaryPage))
         finally reader.close()
       } }
   }
 
-  /** Every file of `leaves` has a dictionary page on `source` and none on
-    * the columns unique by construction.
+  /** Every chunk of every file of `leaves` is zstd-compressed; `seq` and
+    * `ts_nano` are delta-encoded, and they and `ts` have no dictionary
+    * page, while `source` keeps one.
     */
-  private def assertLogEncodings(leaves: Map[java.nio.file.Path, Seq[Set[String]]]): Unit =
-    leaves.values.flatten.foreach { dictionary =>
-      assert(dictionary.intersect(Set("seq", "ts_nano", "ts")).isEmpty, dictionary)
-      assert(dictionary.contains("source"), dictionary)
+  private def assertLogEncodings(leaves: Map[java.nio.file.Path, Seq[Seq[Chunk]]]): Unit =
+    leaves.values.flatten.foreach { chunks =>
+      assert(chunks.map(_.codec).toSet === Set("ZSTD"), chunks)
+      val byColumn = chunks.groupBy(_.column)
+      for (c <- Seq("seq", "ts_nano"))
+        assert(byColumn(c).forall(_.encodings.contains("DELTA_BINARY_PACKED")), byColumn(c))
+      for (c <- Seq("seq", "ts_nano", "ts"))
+        assert(!byColumn(c).exists(_.dictionary), byColumn(c))
+      assert(byColumn("source").forall(_.dictionary), byColumn("source"))
     }
 
   /** `f`'s result, and per streaming query id the stages of the jobs that
@@ -710,7 +724,7 @@ class LogIngestSpec extends SparkSpec {
     assert(q.recentProgress.count(_.numInputRows > 0) === 1, "both bursts in one batch")
     assert(stages(q.id.toString).nonEmpty, "the batch ran a job")
     assert(!stages(q.id.toString).contains(true), "a per-container batch runs no shuffle stage")
-    val leaves = dictionaryColumns(table)
+    val leaves = columnChunks(table)
     assert(leaves.keySet.map(_.getParent.getFileName.toString) === Set("container_id=c1"))
     assert(leaves.size === 3)
     assert(leaves.values.forall(_.size == 1), leaves)
@@ -737,7 +751,7 @@ class LogIngestSpec extends SparkSpec {
     try {
       assert(q.recentProgress.count(_.numInputRows > 0) === 1, "every file in one batch")
       assert(stages(q.id.toString).contains(true), "the batch is shuffled by container")
-      val leaves = dictionaryColumns(s"$root/logs")
+      val leaves = columnChunks(s"$root/logs")
       assert(leaves.keySet.map(_.getParent.getFileName.toString) ===
         Set("container_id=old1", "container_id=old2"))
       assert(leaves.size === 6)
@@ -754,8 +768,8 @@ class LogIngestSpec extends SparkSpec {
       LogIngest.start(spark, staging, table, ckpt, Trigger.AvailableNow(), containerId = Some("c1"))
         .awaitTermination(60000)
     }
-    def rewritten(): Map[java.nio.file.Path, Seq[Set[String]]] = {
-      val leaves = dictionaryColumns(table)
+    def rewritten(): Map[java.nio.file.Path, Seq[Seq[Chunk]]] = {
+      val leaves = columnChunks(table)
       val files = Files.walk(Paths.get(table, "container_id=c1")).iterator().asScala
         .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
       assert(leaves.size === 1 && files.size === 1 && files.head.startsWith("r-"), files)
@@ -771,6 +785,81 @@ class LogIngestSpec extends SparkSpec {
     // the newest 30 of 120 lines; seq bumps by one within a timestamp
     val seqs = LogIngest.table(spark, table).select("seq").collect().map(_.getLong(0)).sorted
     assert(seqs.toSeq === (90 until 120).map(i => t0 + (i / 10) * 1000L + i % 10))
+  }
+
+  test("a table written by the parent's writer keeps serving") {
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    val entries = (0 until 40).map(entry(_, "c1"))
+    // every line's seq as decode numbers it, with the frame decode stores
+    // it for: its entry with '\n' appended
+    val decoded = LogIngest.decodeBurst("c1", framed(entries)).map(_.seq).toSeq
+      .zip(entries.map(e => ProtoLogCodec.encode(e.copy(line = e.line :+ '\n'.toByte)).toSeq))
+    // lines 0..19 in one leaf written with Spark's defaults: snappy, v1 pages
+    val session = spark
+    import session.implicits._
+    LogIngest.decodeBurst("c1", framed(entries.take(20))).toSeq.toDS()
+      .withColumn("ts", timestamp_micros(expr("ts_nano div 1000")))
+      .withColumn("date", expr("date_from_unix_date(cast((ts_nano div 86400000000000) as int))"))
+      .select(LogIngest.logSchema.fieldNames.map(col).toSeq: _*)
+      .coalesce(1).write.partitionBy("container_id", "date").parquet(table)
+    assert(columnChunks(table).values.flatten.flatten.map(_.codec).toSet === Set("SNAPPY"))
+    writeBurst(staging, "c1", "b0", entries.slice(20, 30))
+    val g = new Graft(spark, staging, table, ckpt)
+    try {
+      assert(g.startLogging("c1", keep).isRight)
+      eventually(30000)(assert(g.countLogs("c1") === 30))
+      val (t, seen) = following(g)
+      eventually(10000)(assert(seen.size() === 30))
+      writeBurst(staging, "c1", "b1", entries.slice(30, 40))
+      eventually(15000)(assert(seen.size() === 40))
+      stopAndCheck(g, t, seen, 0 until 40)
+      assert(seen.asScala.toSeq === decoded)
+      val at = (i: Int) => java.time.Instant.ofEpochSecond(0, seqOf(i)).toString
+      def assertServed(): Unit = {
+        def served(since: Option[String], until: Option[String], tail: Long) =
+          g.frames(g.readLogs(Some("c1"), since, until, tail)).map(l => (l._1, l._2.toSeq)).toSeq
+        assert(served(None, None, 0) === decoded)
+        assert(served(None, None, 25) === decoded.drop(15))
+        assert(served(Some(at(5)), Some(at(34)), 0) === decoded.slice(5, 35))
+      }
+      assertServed()
+      // a compaction rewrites the old file with the new ones, in the new form
+      assert(g.compact() === 1)
+      val leaves = columnChunks(table)
+      assert(leaves.values.map(_.size).sum === 1, leaves)
+      assertLogEncodings(leaves)
+      assertServed()
+      val once = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Byte])]()
+      g.follow("c1")((seq, frame) => once.add((seq, frame.toSeq)))
+      assert(once.asScala.toSeq === decoded)
+    } finally g.stopAll()
+  }
+
+  test("a batch cut between its parquet write and its manifest commit is redone once on replay") {
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    writeBurst(staging, "c1", "b0", (0 until 30).map(entry(_, "c1")))
+    // a directory where batch 0's manifest is written: the write of the
+    // batch's files succeeds, and the commit fails before its manifest
+    val name = s"${LogIngest.commitNamespace(s"$ckpt/c1")}-0"
+    val blocker = Paths.get(table, "_commits", s"$name.manifest.tmp")
+    Files.createDirectories(blocker)
+    val g = new Graft(spark, staging, table, ckpt)
+    try {
+      val q = g.startLogging("c1", keep).toOption.get
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination(60000))
+      assert(Files.list(Paths.get(table, "_staging", name)).iterator().asScala
+        .exists(_.getFileName.toString.startsWith("container_id=")), "the batch was staged")
+      assert(!Files.exists(Paths.get(table, "_commits", name)), "and never committed")
+    } finally g.stopAll()
+    Files.delete(blocker)
+    val replayed = new Graft(spark, staging, table, ckpt)
+    try {
+      assert(replayed.replayState() === Seq("c1"))
+      eventually(30000)(assert(replayed.countLogs("c1") === 30))
+      val seqs = replayed.logs.select("seq").collect().map(_.getLong(0)).sorted
+      assert(seqs.toSeq === (0 until 30).map(seqOf), "every line exactly once")
+      assert(Files.list(Paths.get(table, "_staging")).count() === 0, "staging left empty")
+    } finally replayed.stopAll()
   }
 
   test("per-container options drive the ingest query (config -> engine)") {
@@ -899,6 +988,29 @@ class LogIngestSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(table, "container_id=c9")))
     val reg3 = new Graft(spark, staging, table, ckpt)
     assert(reg3.replayState() === Nil)
+  }
+
+  test("a replay leaves a container's kept options file untouched") {
+    val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
+    writeBurst(staging, "c1", "b0", (0 until 5).map(entry(_, "c1")))
+    val g = new Graft(spark, staging, table, ckpt)
+    g.startLogging("c1", keep).foreach(_.processAllAvailable())
+    g.stopAll()
+    val file = Paths.get(ckpt, "c1", "options.json")
+    def state() = {
+      val attrs = Files.readAttributes(file, classOf[java.nio.file.attribute.BasicFileAttributes])
+      (attrs.fileKey, attrs.lastModifiedTime, Files.readAllBytes(file).toSeq)
+    }
+    val before = state()
+    Thread.sleep(50)
+    // a rewrite deletes the file before it renames the new one in: a
+    // crash between the two would restart c1 under the defaults, and its
+    // next StopLogging would delete what it keeps
+    val replayed = new Graft(spark, staging, table, ckpt)
+    try {
+      assert(replayed.replayState() === Seq("c1"))
+      assert(state() === before)
+    } finally replayed.stopAll()
   }
 
   private def eventually(timeoutMs: Long)(check: => Unit): Unit = {
