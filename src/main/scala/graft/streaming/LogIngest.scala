@@ -58,12 +58,11 @@ import graft.functions.ProtoLogCodec.{LogEntry, PartialMeta}
   * container first ([[commitBatch]]). Rows are sorted on ts_nano within
   * each file, so parquet row-group min/max stats stay tight and time-range
   * reads skip row groups (the analog of the reference's `idx_ts` index,
-  * `src/logger.rs:147`). [[writeLeaves]] is the one writer of the table:
-  * zstd-compressed v2 pages, where the sorted `seq` and `ts_nano` are
-  * delta-encoded, for about 0.24 stored bytes per framed input byte
-  * against 0.43 under Spark's defaults (snappy, v1 pages). Files written
-  * under those defaults keep serving; a sweep or compaction rewrites them
-  * in the new form.
+  * `src/logger.rs:147`). [[writeLeaves]] is the one writer of the table.
+  * Its zstd-compressed v2 pages store a framed input byte of perfbench's
+  * `driver_bulk` in about 0.24 bytes, against 0.43 under Spark's defaults
+  * of snappy and v1 pages. Files written under those defaults keep
+  * serving, and a sweep or compaction rewrites them in the new form.
   */
 object LogIngest {
 
@@ -530,9 +529,7 @@ object LogIngest {
     * row-group stats on ts_nano. Every page is zstd-compressed and written
     * as a parquet v2 page: [[PlainColumns]] get no dictionary pages,
     * `source` and the rest keep them, and `line`, whose dictionary
-    * overflows, falls back to DELTA_BYTE_ARRAY. Readers need no setting:
-    * a file written with Spark's defaults (snappy, v1 pages) reads the
-    * same, and any rewrite converts it.
+    * overflows, falls back to DELTA_BYTE_ARRAY.
     */
   private[streaming] def writeLeaves(rows: DataFrame, staging: String): Unit =
     PlainColumns.foldLeft(rows.sortWithinPartitions("container_id", "date", "ts_nano").write

@@ -787,7 +787,7 @@ class LogIngestSpec extends SparkSpec {
     assert(seqs.toSeq === (90 until 120).map(i => t0 + (i / 10) * 1000L + i % 10))
   }
 
-  test("a table written by the parent's writer keeps serving") {
+  test("a table written under Spark's default codec and page version keeps serving") {
     val (staging, table, ckpt) = (tmp(), tmp() + "/logs", tmp() + "/ckpt")
     val entries = (0 until 40).map(entry(_, "c1"))
     // every line's seq as decode numbers it, with the frame decode stores
