@@ -23,14 +23,13 @@ import graft.Tables
   */
 object CurationOps {
 
-  /** Whitespace token count over a `text` column — shared by the batch
-    * pipeline and the streaming transform ([[graft.streaming.DocStreamOps
-    * .curateStream]]), so both paths score documents identically.
+  /** Whitespace token count over a `text` column, shared by the curation
+    * pipeline and [[TrainPrepOps]]' budget operators so all count alike.
     */
   def nTokensCol: org.apache.spark.sql.Column = size(TextOps.tokens(col("text")))
 
   /** Composite quality in [0,1]: length saturation × lexical diversity
-    * (same definition as the q_text_quality signal). Shared batch/stream.
+    * (same definition as the q_text_quality signal).
     */
   def qualityCol: org.apache.spark.sql.Column = {
     val toks = TextOps.tokens(col("text"))

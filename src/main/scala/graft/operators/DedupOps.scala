@@ -842,8 +842,8 @@ object DedupOps {
     * arithmetic both engines compute bit-identically, so the DuckDB twin
     * replays the ENTIRE pipeline (signatures, banding, candidate join,
     * estimate) and the result is hash-checked, not rows-only. The
-    * engine-hash [[graft.functions.sketch.minhashSig]] expression stays for streaming,
-    * where no oracle exists and xxhash64 is cheaper.
+    * engine-hash [[graft.functions.sketch.minhashSig]] expression stays as
+    * the SQL function `minhash_sig`.
     */
   /** Portable k-component MinHash signature of a shingle array: base
     * hash = 60-bit md5 prefix mod 2³¹−1 (DuckDB:
@@ -863,15 +863,6 @@ object DedupOps {
   def bandBuckets(sig: org.apache.spark.sql.Column, bands: Int, rows: Int): org.apache.spark.sql.Column =
     transform(sequence(lit(0), lit(bands - 1)),
       bnd => md5(concat_ws(",",
-        transform(slice(sig, bnd * rows + 1, lit(rows)), x => x.cast("string")))))
-
-  /** Engine-hash twin of [[bandBuckets]] (xxhash64 of the slice): 8-byte
-    * bucket keys for the streaming near-dup tagger, where no oracle
-    * exists and shuffle/state bytes matter more than portability.
-    */
-  def bandBucketsXx(sig: org.apache.spark.sql.Column, bands: Int, rows: Int): org.apache.spark.sql.Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      bnd => xxhash64(concat_ws(",",
         transform(slice(sig, bnd * rows + 1, lit(rows)), x => x.cast("string")))))
 
   // Contracted-corpus portable signatures: ONE signature per exact-dup

@@ -445,14 +445,9 @@ object TimeSeriesOps {
     * size, never raw events (same stance as [[hourlyDenseOf]]).
     */
   def sloBurnRate(s: SparkSession, d: String, budgetPpm: Long = 10000L,
-      longWin: Int = 6, alertMult: Long = 2L): DataFrame =
-    sloBurnRateOf(Tables.events(s, d), budgetPpm, longWin, alertMult)
-
-  /** [[sloBurnRate]] over an arbitrary `(ts, event_type)` frame. */
-  def sloBurnRateOf(events: DataFrame, budgetPpm: Long = 10000L,
       longWin: Int = 6, alertMult: Long = 2L): DataFrame = {
     require(budgetPpm >= 1, s"need budgetPpm >= 1, got $budgetPpm")
-    val hourly = events
+    val hourly = Tables.events(s, d)
       .groupBy(date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("tot"),
         sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("err"))

@@ -960,7 +960,7 @@ object TrainPrepOps {
   /** Token-budget corpus selection: per source shard, keep the highest-
     * quality documents until the shard's token budget is exhausted — the
     * "best N tokens" curation step between scoring and tokenization.
-    * Quality is the shared batch/stream signal ([[CurationOps.qualityCol]],
+    * Quality is the shared curation signal ([[CurationOps.qualityCol]],
     * rounded to 4 dp so the ordering is engine-portable); ties break on
     * doc_id for determinism. One running-sum window per source shard —
     * the same per-shard scan shape as [[packSequences]], parallel across

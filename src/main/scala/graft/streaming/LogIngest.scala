@@ -357,23 +357,29 @@ object LogIngest {
     * a crash in between replays the batch with the same `batchId`, and the
     * protocol makes the replay a no-op or a clean redo:
     *
-    *  1. `_commits/<id>` marker exists → fully committed earlier → skip.
+    *  1. `_commits/<namespace>-<id>` marker exists → fully committed
+    *     earlier → skip.
     *  2. A manifest from a torn attempt exists → delete exactly the files
-    *     it lists (the partial moves of the dead attempt).
-    *  3. Write the batch under `_staging/<id>/` (underscore dirs are
-    *     invisible to parquet readers) through [[writeLeaves]]: one file per
-    *     `container_id=/date=` leaf. A `oneContainer` batch (every row of
-    *     one container, as in a per-container query's batch) is written by
-    *     one task through `coalesce(1)`, with no shuffle; any other batch
-    *     is shuffled by `container_id` first, one task per container.
+    *     it lists (the partial moves of the dead attempt, [[recover]]).
+    *  3. Write the batch under `_staging/<namespace>-<id>/` (underscore
+    *     dirs are invisible to parquet readers) through [[writeLeaves]]:
+    *     one file per `container_id=/date=` leaf, rows as given
+    *     ([[BurstRows]] already left `message` null wherever [[frameOf]]
+    *     rebuilds it). A `oneContainer` batch (every row of one container,
+    *     as in a per-container query's batch) is written by one task
+    *     through `coalesce(1)`, with no shuffle; any other batch is
+    *     shuffled by `container_id` first, one task per container.
     *  4. Write the manifest (tmp + rename): the destination paths, every
     *     one carrying the `b<namespace>-<id>-` prefix so no attempt can
     *     collide with another batch, attempt, or co-writing query.
     *  5. Move staged files into the partition dirs (rename per file).
-    *  6. Write the commit marker, drop staging + manifest, prune markers
-    *     older than the replay horizon (only the tail batch can ever
-    *     replay; 64 is paranoid margin, and pruning keeps `_commits/`
-    *     from growing one file per 100 ms forever).
+    *  6. Write the commit marker, drop staging + manifest, prune this
+    *     namespace's markers older than the replay horizon (only the tail
+    *     batch can ever replay; 64 is paranoid margin, and pruning keeps
+    *     `_commits/` from growing one file per 100 ms forever).
+    *
+    * Steps 4–6, bar the pruning, are [[manifestCommit]], which retention
+    * passes share.
     *
     * On HDFS/local the renames are atomic metadata ops; on object stores
     * rename is copy+delete, so step 5 costs a copy — the documented
@@ -388,25 +394,19 @@ object LogIngest {
       batchId: Long,
       tableDir: String,
       namespace: String = "q",
-      oneContainer: Boolean = false): Seq[String] =
-    batchCommit(batch.sparkSession, tableDir, batchId, namespace) { staging =>
-      stagePartitioned(batch, batchId, tableDir, staging, namespace, oneContainer)
-    }
-
-  /** Steps 1–2 and 6's marker pruning around [[manifestCommit]], shared
-    * by [[commitBatch]] (partitioned log appends) and [[commitBatchFlat]]
-    * (unpartitioned verdict/result appends). `stage` performs step 3 —
-    * write the batch under the given staging dir and return the
-    * (stagedFile → destination) moves, every destination carrying the
-    * `b<namespace>-<batchId>-` prefix so attempts can never collide.
-    * Returns the destinations moved, none when the marker short-circuits.
-    */
-  private def batchCommit(spark: SparkSession, tableDir: String, batchId: Long,
-      namespace: String)(stage: String => Seq[(Path, String)]): Seq[String] = {
+      oneContainer: Boolean = false): Seq[String] = {
+    val spark = batch.sparkSession
     val name = s"$namespace-$batchId"
     if (FsUtil.exists(spark, s"$tableDir/_commits/$name")) return Nil
     recover(spark, tableDir, name, committed = false)
-    val moves = stage(s"$tableDir/_staging/$name")
+    val staging = s"$tableDir/_staging/$name"
+    // one task per container, so each container's leaves get one file per
+    // batch (without it every decode task writes a file into every leaf):
+    // the reference's single writer per container (src/logger.rs:250-251).
+    // A one-container batch needs no shuffle for that.
+    writeLeaves(if (oneContainer) batch.coalesce(1) else batch.repartition(col("container_id")),
+      staging)
+    val moves = leafMoves(spark, staging, tableDir, s"b$namespace-$batchId-")
     manifestCommit(spark, tableDir, name, moves)
     FsUtil.listFiles(spark, s"$tableDir/_commits", "").foreach { case (p, _) =>
       // prune only THIS query's old markers (other namespaces own theirs)
@@ -469,48 +469,6 @@ object LogIngest {
     files.map(_.getParent).distinct.foreach { leaf =>
       if (FsUtil.deleteIfEmpty(spark, leaf)) FsUtil.deleteIfEmpty(spark, leaf.getParent)
     }
-  }
-
-  /** Exactly-once append of an UNPARTITIONED micro-batch result — the
-    * same marker+manifest protocol as [[commitBatch]] for outputs with no
-    * partition layout (streaming verdict tables, attach results:
-    * [[DocStreamOps.attachStream]] routes here, VERDICT r13 #5). Files
-    * land flat in `tableDir` under the collision-proof
-    * `b<namespace>-<batchId>-` prefix; a replayed batch is a no-op, a torn
-    * attempt is cleaned and redone.
-    */
-  def commitBatchFlat(
-      batch: DataFrame,
-      batchId: Long,
-      tableDir: String,
-      namespace: String = "q"): Unit = {
-    val spark = batch.sparkSession
-    batchCommit(spark, tableDir, batchId, namespace) { staging =>
-      batch.write.mode("overwrite").parquet(staging)
-      for ((file, _) <- FsUtil.listFiles(spark, staging, ".parquet"))
-        yield (file, s"$tableDir/b$namespace-$batchId-${file.getName}")
-    }
-  }
-
-  /** Step 3 of the protocol for the LOG table: the staged leaves of
-    * [[writeLeaves]], destinations under `container_id=/date=` dirs. Rows
-    * are written as given: [[BurstRows]] already left `message` null
-    * wherever [[frameOf]] rebuilds it.
-    */
-  private def stagePartitioned(
-      batch: DataFrame,
-      batchId: Long,
-      tableDir: String,
-      staging: String,
-      namespace: String,
-      oneContainer: Boolean): Seq[(Path, String)] = {
-    // one task per container, so each container's leaves get one file per
-    // batch (without it every decode task writes a file into every leaf):
-    // the reference's single writer per container (src/logger.rs:250-251).
-    // A one-container batch needs no shuffle for that.
-    writeLeaves(if (oneContainer) batch.coalesce(1) else batch.repartition(col("container_id")),
-      staging)
-    leafMoves(batch.sparkSession, staging, tableDir, s"b$namespace-$batchId-")
   }
 
   /** Columns written without a dictionary, because nearly every value is

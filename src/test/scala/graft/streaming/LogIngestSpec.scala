@@ -437,6 +437,17 @@ class LogIngestSpec extends SparkSpec {
     // the table stays fully readable (the garbage never poisons a scan)
     assert(LogIngest.table(spark, table).agg(max(col("ts_nano"))).collect()
       .head.getLong(0) > 0)
+
+    // 3. a commit prunes this namespace's markers older than the replay
+    // horizon (64 batches) and no other marker
+    val commits = Paths.get(table, "_commits")
+    ((0 until 100).map(i => s"$ns-$i") :+ "other-3" :+ "retention")
+      .foreach(m => Files.write(commits.resolve(m), Array.emptyByteArray))
+    LogIngest.commitBatch(batch7, 100L, table, namespace = ns)
+    val left = Files.list(commits).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(left.filter(_.startsWith(s"$ns-")).map(_.drop(ns.length + 1).toInt) ===
+      (36 to 100).toSet)
+    assert(left("other-3") && left("retention"), "other namespaces' markers untouched")
   }
 
   test("a sweep never loses a batch committed into the leaf it rewrites") {
