@@ -439,15 +439,17 @@ class LogIngestSpec extends SparkSpec {
       .head.getLong(0) > 0)
 
     // 3. a commit prunes this namespace's markers older than the replay
-    // horizon (64 batches) and no other marker
+    // horizon (64 batches) and no other marker; the other namespace is as
+    // long as this one, so only the namespace check keeps its marker
     val commits = Paths.get(table, "_commits")
-    ((0 until 100).map(i => s"$ns-$i") :+ "other-3" :+ "retention")
+    val other = "x" * ns.length + "-3"
+    ((0 until 100).map(i => s"$ns-$i") :+ other :+ "retention")
       .foreach(m => Files.write(commits.resolve(m), Array.emptyByteArray))
     LogIngest.commitBatch(batch7, 100L, table, namespace = ns)
     val left = Files.list(commits).iterator().asScala.map(_.getFileName.toString).toSet
     assert(left.filter(_.startsWith(s"$ns-")).map(_.drop(ns.length + 1).toInt) ===
       (36 to 100).toSet)
-    assert(left("other-3") && left("retention"), "other namespaces' markers untouched")
+    assert(left(other) && left("retention"), "other namespaces' markers untouched")
   }
 
   test("a sweep never loses a batch committed into the leaf it rewrites") {
